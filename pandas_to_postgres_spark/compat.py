@@ -226,9 +226,9 @@ def hdf_to_postgres(
 # utilities.py:76-167`, `hdf_to_postgres.py:49-103`): same names, same
 # contracts, so reference call sites keep working. In the Spark engine these
 # are the slow path — the DataFrame-native equivalents are
-# `functions.normalize.cast_to_target_schema`, `sinks.postgres_copy.
-# csv_chunks`, and the Spark scheduler — but user code importing the old
-# names gets faithful behavior.
+# `functions.normalize.cast_to_target_schema`, the Arrow CSV stream of
+# `sinks.postgres_copy` (`_ArrowCsvStream`), and the Spark scheduler — but
+# user code importing the old names gets faithful behavior.
 
 
 def create_file_object(df: pd.DataFrame):

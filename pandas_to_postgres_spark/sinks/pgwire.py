@@ -184,6 +184,8 @@ class Connection:
     def _copy_in(self, sql: str, file, chunk_bytes: int = 1 << 20) -> None:
         self._send(b"Q", sql.encode() + b"\0")
         t, payload = self._recv()
+        while t in (b"N", b"S"):  # a Notice may precede CopyInResponse
+            t, payload = self._recv()
         if t == b"E":
             # drain to ReadyForQuery, then raise
             while self._recv()[0] != b"Z":

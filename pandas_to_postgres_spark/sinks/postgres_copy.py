@@ -11,39 +11,46 @@ Reference behavior being reproduced (all `/root/reference/pandas_to_postgres/`):
   (comment `copy_hdf.py:70`)
 
 Spark-first design:
-- the *data plane* is ``df.foreachPartition``: each executor task opens its
-  own psycopg2 connection and streams its partition as CSV chunks — N
-  partitions load in parallel (the reference's table-level
-  ``multiprocessing.Pool`` becomes partition-level parallelism).
+- the *data plane* is one COPY task per Spark partition (``mapInArrow``):
+  each task opens its own connection and streams its partition's Arrow
+  record batches through pyarrow's C++ CSV writer (:class:`_ArrowCsvStream`)
+  — N partitions load in parallel (the reference's table-level
+  ``multiprocessing.Pool`` becomes partition-level parallelism), with
+  executor memory bounded by one Arrow batch. Cap write parallelism with
+  ``num_partitions``: the database is the bottleneck.
 - the *control plane* (DDL: constraints, truncate, analyze) runs on the
   driver, before/after the Spark job — Spark has no constraint hooks, same
   as the reference's copy() bracket.
 - FREEZE vs parallelism (SURVEY.md §4 hard part #1): FREEZE demands one
   transaction containing both TRUNCATE and every COPY — impossible across
-  parallel writers. ``freeze=True`` therefore coalesces to a single
-  partition and does TRUNCATE+COPY FREEZE in one transaction (the
-  reference's exact behavior); ``freeze=False`` (default) truncates on the
-  driver and COPYies partitions concurrently — at scale the parallel
-  non-FREEZE path wins by a wide margin.
+  parallel writers. ``freeze=True`` therefore runs ONE task that does
+  TRUNCATE + COPY FREEZE in its own transaction (the reference's exact
+  behavior); ``freeze=False`` (default) truncates on the driver and COPYies
+  partitions concurrently — at scale the parallel path wins by a wide margin.
 
-The pure helpers (DDL builders, CSV serialization) have no psycopg2
-dependency and are unit-tested; the network paths import psycopg2 lazily and
-raise a clear error when it is absent (as in this container).
+Staged writes (retry-safe and atomic for readers) all go through one
+stage→publish core: every task COPYs into its own stage table, then one
+driver transaction publishes the stages named in the tasks' messages (see
+:func:`publish_stages`). ``staged_full_refresh``, ``load_batch_exactly_once``
+and both writers of the ``pgwire`` Python DataSource are thin wrappers.
 
-100 TB notes: cap write parallelism with ``num_partitions`` (the database is
-the bottleneck); each partition streams CSV in bounded ``csv_chunk_rows``
-batches so executor memory is flat; constraint rebuild cost is server-side
-and amortized once per table, not per partition.
+The pure helpers (DDL builders, stage naming) have no client dependency and
+are unit-tested; the network paths use psycopg2 when installed, else the
+bundled pure-Python wire client.
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
-from dataclasses import dataclass, field
-from typing import Iterable, Iterator, Optional, Sequence
+import itertools
+import re
+import uuid
+from dataclasses import dataclass, field, replace
+from typing import Callable, Iterator, Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.datasource import WriterCommitMessage
 
 
 # --------------------------------------------------------------- descriptors
@@ -130,40 +137,14 @@ def copy_freeze_sql(t: TargetTable) -> str:
 
 # ------------------------------------------------- pure CSV serialization
 
-def csv_chunks(
-    rows: Iterable, columns: Sequence[str], chunk_rows: int = 10**6
-) -> Iterator[io.StringIO]:
-    """Serialize an iterator of Spark Rows into bounded in-memory CSV
-    buffers — the per-partition analog of the reference's ``df_generator`` +
-    ``create_file_object`` (`utilities.py:76-116`): no intermediate files,
-    NULL → empty field, no header.
-    """
-    buf: list = []
-    for row in rows:
-        buf.append(row)
-        if len(buf) >= chunk_rows:
-            yield _to_csv(buf, columns)
-            buf = []
-    if buf:
-        yield _to_csv(buf, columns)
-
-
-def _to_csv(rows: list, columns: Sequence[str]) -> io.StringIO:
-    pdf = pd.DataFrame.from_records([tuple(r) for r in rows], columns=list(columns))
-    out = io.StringIO()
-    # na_rep="" → empty CSV field → SQL NULL (`utilities.py:90`)
-    pdf.to_csv(out, index=False, header=False, na_rep="")
-    out.seek(0)
-    return out
-
-
 class _ArrowCsvStream:
     """File-like view over an iterator of Arrow record batches, serialized
     to CSV on demand with pyarrow's C++ CSV writer — one streaming COPY per
     partition with bounded memory (one batch in flight). ``read`` is the
     only method COPY clients call (psycopg2 ``copy_expert`` and pgwire both
     pull with ``read(size)``). Nulls become empty fields (SQL NULL,
-    `utilities.py:90`); timestamps print as ISO, which COPY parses.
+    `utilities.py:90`) while empty strings are quoted (``""``); no header;
+    timestamps print as ISO, which COPY parses.
 
     Measured at sf0.1 lineitem (600k rows × 11 cols): pandas ``to_csv``
     serializes at ~197k rows/s — slower than the Postgres server ingests
@@ -255,70 +236,81 @@ def reflect_target_table(conn_params: dict, schema: str, name: str) -> TargetTab
     )
 
 
-def parallel_copy(
-    df: DataFrame,
-    conn_params: dict,
-    sql: Optional[str] = None,
-    task_plan=None,
-) -> int:
-    """The parallel COPY data plane: one streaming ``COPY ... FROM STDIN``
-    per Spark partition, rows travelling JVM→Python as Arrow record
-    batches. Returns the total row count copied.
+@dataclass
+class StageMessage(WriterCommitMessage):
+    """What one COPY task reports: the stage table it filled (None for a
+    direct COPY or an empty partition) and the rows it copied."""
 
-    ``sql`` is the COPY statement every task runs; alternatively
-    ``task_plan(partition_id) -> (setup_sqls, copy_sql)`` lets each task
-    run per-partition DDL and COPY into its own table IN ONE TRANSACTION
-    (the exactly-once stager uses this — see
-    :func:`load_batch_exactly_once`). Exactly one of the two must be
-    given.
+    stage: Optional[str]
+    n_rows: int
 
-    Executor-side each task opens its own connection (the reference's
-    "engine contains process specific stuff" rebuild, `hdf_to_postgres.py:
-    58-61`, becomes per-task connections) and serializes via pyarrow's C++
-    CSV writer (see :class:`_ArrowCsvStream`) — measured ~3x the
-    row-iterator foreachPartition formulation end-to-end. Memory is
-    bounded by the Arrow batch size
-    (spark.sql.execution.arrow.maxRecordsPerBatch)."""
-    if (sql is None) == (task_plan is None):
-        raise ValueError("pass exactly one of sql / task_plan")
+
+#: ``plan(partition_id) -> (stage or None, setup statements, COPY statement)``
+TaskPlan = Callable[[int], tuple]
+
+
+def _copy_task(
+    conn_params: dict, plan: TaskPlan, batches: Iterator
+) -> StageMessage:
+    """One task of the data plane: its Arrow batches stream through
+    :class:`_ArrowCsvStream` into ``plan``'s COPY, in ONE transaction with
+    ``plan``'s setup statements (the reference's "engine contains process
+    specific stuff" rebuild, `hdf_to_postgres.py:58-61`, becomes a
+    connection per task). An empty partition never opens a connection."""
+    from pyspark import TaskContext  # noqa: PLC0415
+
+    first = next(batches, None)
+    if first is None:
+        return StageMessage(None, 0)
+    stage, setup, copy_stmt = plan(TaskContext.get().partitionId())
+    stream = _ArrowCsvStream(itertools.chain([first], batches))
+    conn = _psycopg2().connect(**conn_params)
+    try:
+        with conn, conn.cursor() as cur:
+            for s in setup:
+                cur.execute(s)
+            cur.copy_expert(copy_stmt, stream)
+    finally:
+        conn.close()
+    return StageMessage(stage, stream.rows)
+
+
+def _run_copy_tasks(df: DataFrame, conn_params: dict, plan: TaskPlan) -> list:
+    """Run :func:`_copy_task` over every partition of ``df``; returns the
+    tasks' messages."""
     params = dict(conn_params)
 
-    def _copy_batches(batches: Iterator) -> Iterator:
-        import itertools  # noqa: PLC0415
-
+    def _task(batches: Iterator) -> Iterator:
         import pyarrow as pa  # noqa: PLC0415
-        from pyspark import TaskContext  # noqa: PLC0415
 
-        try:
-            import psycopg2 as pg  # noqa: PLC0415
-        except ImportError:
-            from pandas_to_postgres_spark.sinks import pgwire as pg  # noqa: PLC0415
+        m = _copy_task(params, plan, batches)
+        yield pa.RecordBatch.from_pydict(
+            {"stage": pa.array([m.stage], pa.string()), "n_rows": [m.n_rows]}
+        )
 
-        first = next(batches, None)
-        n = 0
-        if first is not None:  # empty partition: never open a connection
-            if task_plan is not None:
-                pid = TaskContext.get().partitionId()
-                setup_sqls, copy_stmt = task_plan(pid)
-            else:
-                setup_sqls, copy_stmt = [], sql
-            stream = _ArrowCsvStream(itertools.chain([first], batches))
-            conn = pg.connect(**params)
-            try:
-                # setup + COPY share one transaction: a retried or
-                # speculative task attempt serializes on its DDL locks
-                # and REPLACES its previous attempt's work
-                with conn, conn.cursor() as cur:
-                    for s in setup_sqls:
-                        cur.execute(s)
-                    cur.copy_expert(copy_stmt, stream)
-            finally:
-                conn.close()
-            n = stream.rows
-        yield pa.RecordBatch.from_pydict({"rows": pa.array([n], pa.int64())})
+    rows = df.mapInArrow(_task, "stage string, n_rows long").collect()
+    return [StageMessage(r.stage, r.n_rows) for r in rows]
 
-    out = df.mapInArrow(_copy_batches, "rows long").agg({"rows": "sum"}).collect()
-    return int(out[0][0] or 0)
+
+def parallel_copy(df: DataFrame, conn_params: dict, sql: str) -> int:
+    """The parallel COPY data plane: ``sql`` (a ``COPY ... FROM STDIN``)
+    once per Spark partition, rows travelling JVM→Python as Arrow record
+    batches — measured ~3x the row-iterator foreachPartition formulation
+    end-to-end. Returns the total row count copied."""
+    messages = _run_copy_tasks(df, conn_params, lambda _: (None, [], sql))
+    return sum(m.n_rows for m in messages)
+
+
+def _project(
+    df: DataFrame, target: TargetTable, num_partitions: Optional[int] = None
+):
+    """``df`` narrowed to the target columns it carries, in target order
+    (optionally repartitioned), and ``target`` narrowed to match."""
+    cols = [c for c in target.columns if c in df.columns]
+    df = df.select(*cols)
+    if num_partitions is not None:
+        df = df.repartition(num_partitions)
+    return df, replace(target, columns=cols)
 
 
 def append_to_postgres(
@@ -330,12 +322,211 @@ def append_to_postgres(
     """Append-only parallel COPY: no TRUNCATE, no constraint bracket —
     the data plane for incremental/micro-batch loads where the table keeps
     serving reads while batches land. Returns rows copied."""
-    cols = [c for c in target.columns if c in df.columns]
-    df = df.select(*cols)
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
-    load_target = TargetTable(schema=target.schema, name=target.name, columns=cols)
-    return parallel_copy(df, conn_params, copy_sql(load_target))
+    df, target = _project(df, target, num_partitions)
+    return parallel_copy(df, conn_params, copy_sql(target))
+
+
+# ------------------------------------------------- staged stage→publish core
+#
+# Every staged write has the same shape:
+#
+# - task side (:func:`_stage_plan`): each task, in ONE transaction, drops
+#   its stage if it exists, creates it LIKE the target and COPYs its
+#   partition into it. Stage names are a function of (table, scope,
+#   partition), so a retried or speculative attempt of a partition
+#   serializes on the DROP's lock and REPLACES its earlier stage instead of
+#   adding a second copy. The task's message names its stage.
+# - publish side (:func:`publish_stages`): ONE transaction under
+#   ``pg_advisory_xact_lock(hashtext(schema.table))`` — concurrent
+#   publishes to one target serialize instead of deadlocking on TRUNCATE +
+#   INSERT ordering — records the ledger row (if any; a recorded epoch is a
+#   replay and publishes nothing), TRUNCATEs (if asked), INSERTs the stages
+#   named in the messages and only those, and drops the scope's stages.
+#   Readers see the old table until the commit.
+# - abort / orphan sweep (:func:`_sweep_stages`): drops the messages'
+#   stages plus every catalog table matching the scope's regex.
+#
+# The scope keeps concurrent writers apart: a per-call uuid for a full
+# refresh, ``(run_id, batch_id)`` for an exactly-once batch (so its replay
+# sweeps a crashed attempt's leftovers), the job id for the DataSource
+# batch writer. The streaming writer's commit runs in a separate process
+# with no task-side state, so it addresses stages only through its
+# messages. Residual caveat: a stage created by a driver that died before
+# commit or abort (or by a zombie task after its job's sweep) is an orphan
+# outside any live scope; bounded cleanup is DROP of ``<table>__stg_%`` at
+# a quiet moment.
+
+def _stage_prefix(table: str, scope: str) -> str:
+    # ≤ 32-byte readable head + a tag over the FULL (table, scope): two
+    # long names sharing a head still get distinct stages
+    head = table.encode()[:32].decode("utf-8", "ignore")
+    tag = hashlib.sha1(f"{table}\0{scope}".encode()).hexdigest()[:12]
+    return f"{head}__stg_{tag}_"
+
+
+def stage_name(table: str, scope: str, part: int) -> str:
+    """Stage table of partition ``part`` of one scope's write to ``table``:
+    ``<head>__stg_<tag>_<part>``, at most 61 bytes for any 32-bit part —
+    within Postgres's 63-byte identifier limit, which would otherwise
+    silently truncate two partitions' stages to one name."""
+    return _stage_prefix(table, scope) + str(int(part))
+
+
+def stage_pattern(table: str, scope: str) -> str:
+    """The regex (valid in Python and Postgres) matching exactly the stage
+    names of one scope's write to ``table``."""
+    return "^" + re.escape(_stage_prefix(table, scope)) + "[0-9]+$"
+
+
+def _stage_ddl(target: TargetTable, stage_q: str) -> str:
+    return f"CREATE TABLE {stage_q} (LIKE {target.qualified} INCLUDING DEFAULTS)"
+
+
+def _stage_plan(target: TargetTable, scope: str) -> TaskPlan:
+    """Task side of the core: partition ``part`` replaces its stage."""
+
+    def plan(part: int) -> tuple:
+        stage = replace(target, name=stage_name(target.name, scope, part))
+        return (
+            stage.name,
+            [
+                f"DROP TABLE IF EXISTS {stage.qualified}",
+                _stage_ddl(target, stage.qualified),
+            ],
+            copy_sql(stage),
+        )
+
+    return plan
+
+
+def _sweep_stages(
+    cur, target: TargetTable, messages, scope: Optional[str]
+) -> None:
+    """Drop the stages named in ``messages`` and, given a ``scope``, every
+    stage of that scope still in the catalog (a retried or crashed
+    attempt's leftovers) — in one statement."""
+    names = {m.stage for m in messages if m is not None and m.stage}
+    if scope is not None:
+        cur.execute(
+            "SELECT tablename FROM pg_tables"
+            " WHERE schemaname = %s AND tablename ~ %s",
+            (target.schema, stage_pattern(target.name, scope)),
+        )
+        names.update(r[0] for r in cur.fetchall())
+    if names:
+        cur.execute(
+            "DROP TABLE IF EXISTS "
+            + ", ".join(f'"{target.schema}"."{n}"' for n in sorted(names))
+        )
+
+
+def abort_stages(
+    conn_params: dict,
+    target: TargetTable,
+    messages,
+    scope: Optional[str] = None,
+) -> None:
+    """Abort side of the core: :func:`_sweep_stages` on its own connection."""
+    conn = _psycopg2().connect(**conn_params)
+    conn.autocommit = True
+    try:
+        with conn.cursor() as cur:
+            _sweep_stages(cur, target, messages, scope)
+    finally:
+        conn.close()
+
+
+def publish_stages(
+    conn_params: dict,
+    target: TargetTable,
+    messages,
+    scope: Optional[str] = None,
+    truncate: bool = False,
+    ledger: Optional[tuple] = None,
+) -> int:
+    """Publish side of the core: ONE transaction moves the stages named in
+    ``messages`` into ``target`` (after a TRUNCATE when ``truncate``) and
+    drops them with the rest of ``scope``'s stages.
+
+    ``ledger = (epoch_table, run_id, batch_id)`` makes the publish
+    exactly-once: the epoch row is inserted in the same transaction, and
+    an epoch already recorded is a replay — nothing is published, the
+    stages are dropped, and 0 is returned. A unique violation on the epoch
+    row means a publisher outside the advisory lock won the race: the
+    transaction rolled back whole, so this attempt's stages are dropped
+    and 0 is returned. Otherwise returns the rows published."""
+    n = sum(m.n_rows for m in messages if m is not None)
+    stages = sorted({m.stage for m in messages if m is not None and m.stage})
+    cols = ", ".join(f'"{c}"' for c in target.columns)
+    conn = _psycopg2().connect(**conn_params)
+    replay = recording = False
+    try:
+        if ledger is not None:
+            epoch_table, run_id, batch_id = ledger
+            ledger_q = f'"{target.schema}"."{epoch_table}"'
+            key = (target.name, run_id, int(batch_id))
+            conn.autocommit = True
+            with conn.cursor() as cur:
+                _ensure_ledger(cur, ledger_q)
+            conn.autocommit = False
+        with conn, conn.cursor() as cur:
+            cur.execute(
+                "SELECT pg_advisory_xact_lock(hashtext(%s))",
+                (f"{target.schema}.{target.name}",),
+            )
+            if ledger is not None:
+                cur.execute(
+                    f"SELECT 1 FROM {ledger_q}"
+                    " WHERE table_name = %s AND run_id = %s AND batch_id = %s",
+                    key,
+                )
+                replay = bool(cur.fetchall())
+                if not replay:
+                    recording = True
+                    cur.execute(
+                        f"INSERT INTO {ledger_q}"
+                        " (table_name, run_id, batch_id, n_rows)"
+                        " VALUES (%s, %s, %s, %s)",
+                        (*key, n),
+                    )
+                    recording = False
+            if not replay:
+                if truncate:
+                    cur.execute(truncate_sql(target))
+                for st in stages:
+                    cur.execute(
+                        f"INSERT INTO {target.qualified} ({cols})"
+                        f' SELECT {cols} FROM "{target.schema}"."{st}"'
+                    )
+            _sweep_stages(cur, target, messages, scope)
+    except Exception as e:
+        if not (recording and _is_unique_violation(e)):
+            raise
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            _sweep_stages(cur, target, messages, scope)
+        return 0
+    finally:
+        conn.close()
+    return 0 if replay else n
+
+
+def _staged_write(
+    df: DataFrame,
+    conn_params: dict,
+    target: TargetTable,
+    scope: str,
+    truncate: bool = False,
+    ledger: Optional[tuple] = None,
+) -> int:
+    """Driver side of the core: stage ``df`` (one stage per partition),
+    then publish; a failed staging job sweeps the scope."""
+    try:
+        messages = _run_copy_tasks(df, conn_params, _stage_plan(target, scope))
+    except Exception:
+        abort_stages(conn_params, target, (), scope)
+        raise
+    return publish_stages(conn_params, target, messages, scope, truncate, ledger)
 
 
 def load_batch_exactly_once(
@@ -349,25 +540,12 @@ def load_batch_exactly_once(
 ) -> int:
     """Idempotent micro-batch load: stage → atomically publish + record the
     epoch. Structured Streaming re-delivers a failed micro-batch with the
-    SAME ``batch_id``; this loader turns that at-least-once contract into
-    exactly-once tables:
-
-    1. replay check: if ``(table, batch_id)`` is already in the epoch
-       ledger, the batch was fully published — skip (returns 0).
-    2. stage: each Spark task COPYs its partition into its OWN stage
-       table ``<target>__stage_<batch>_p<partition>``, and the task's
-       DROP-IF-EXISTS + CREATE + COPY run in ONE transaction. This is
-       what makes staging idempotent under Spark TASK retries and
-       speculative execution: a re-run (or concurrent speculative)
-       attempt of the same partition serializes on the DROP's table lock
-       and replaces the previous attempt's table instead of appending to
-       a shared stage — with a single shared stage table, a task that
-       died after its COPY committed would double its partition.
-    3. publish: ONE transaction moves every per-partition stage's rows
-       into the target, inserts the ledger row, and drops the stages. A
-       crash before commit leaves only orphan stage tables (replaced on
-       replay); a crash after commit is caught by the replay check. The
-       target never exposes a partial batch.
+    SAME ``batch_id``; the epoch ledger row ``(table, run_id, batch_id)``,
+    written in the publish transaction, turns that at-least-once contract
+    into exactly-once tables — a replay publishes nothing and returns 0.
+    The stage scope is derived from ``(run_id, batch_id)``, so a replay
+    also sweeps a crashed attempt's leftover stages; other batches' stages
+    are never touched.
 
     ``run_id`` namespaces the ledger per STREAMING QUERY: a new query
     with a fresh checkpoint restarts batch_ids at 0, so without it the
@@ -378,90 +556,18 @@ def load_batch_exactly_once(
     replays are still recognized.
 
     Returns the number of rows published (0 on replay)."""
-    psycopg2 = _psycopg2()
-    ledger = f'"{target.schema}"."{epoch_table}"'
-    stage_prefix = f"{target.name}__stage_{int(batch_id)}_p"
+    df, target = _project(batch_df, target, num_partitions)
+    return _staged_write(
+        df,
+        conn_params,
+        target,
+        scope=_batch_scope(run_id, batch_id),
+        ledger=(epoch_table, run_id, batch_id),
+    )
 
-    ctl = psycopg2.connect(**conn_params)
-    ctl.autocommit = True
-    try:
-        with ctl.cursor() as cur:
-            _ensure_ledger(cur, ledger)
-            cur.execute(
-                f"SELECT 1 FROM {ledger} WHERE table_name = %s"
-                f" AND run_id = %s AND batch_id = %s",
-                (target.name, run_id, int(batch_id)),
-            )
-            if cur.fetchall():
-                return 0  # replayed epoch: already published atomically
-            # drop stage tables from prior crashed attempts OF THIS BATCH
-            # ONLY: a retry may run with fewer partitions, and publish
-            # discovers stages by prefix — a stale higher-numbered
-            # partition table would otherwise be published alongside.
-            # Other batches' stages are untouched: concurrent loaders for
-            # other batch_ids of the same target must not lose in-flight
-            # work. The regex (not just LIKE) keeps user tables that merely
-            # share the naming shape (e.g. '<t>__stage_7_preview') safe.
-            for st in _this_batch_stages(cur, target, stage_prefix):
-                cur.execute(f'DROP TABLE "{target.schema}"."{st}"')
-    finally:
-        ctl.close()
 
-    cols = [c for c in target.columns if c in batch_df.columns]
-    df = batch_df.select(*cols)
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
-    schema, tgt_qualified = target.schema, target.qualified
-    col_list = ", ".join(f'"{c}"' for c in cols)
-
-    def _task_plan(pid: int):
-        stage_q = f'"{schema}"."{stage_prefix}{pid}"'
-        return (
-            [
-                f"DROP TABLE IF EXISTS {stage_q}",
-                f"CREATE TABLE {stage_q} (LIKE {tgt_qualified} INCLUDING DEFAULTS)",
-            ],
-            f"COPY {stage_q} ({col_list}) FROM STDIN WITH CSV",
-        )
-
-    n = parallel_copy(df, conn_params, task_plan=_task_plan)
-
-    pub = psycopg2.connect(**conn_params)
-    try:
-        with pub, pub.cursor() as cur:  # ONE transaction: all-or-nothing
-            stages = _this_batch_stages(cur, target, stage_prefix)
-            for st in stages:
-                cur.execute(
-                    f'INSERT INTO {tgt_qualified} ({col_list}) '
-                    f'SELECT {col_list} FROM "{target.schema}"."{st}"'
-                )
-            cur.execute(
-                f"INSERT INTO {ledger} (table_name, run_id, batch_id, n_rows)"
-                f" VALUES (%s, %s, %s, %s)",
-                (target.name, run_id, int(batch_id), n),
-            )
-            for st in stages:
-                cur.execute(f'DROP TABLE "{target.schema}"."{st}"')
-    except Exception as e:
-        if not _is_unique_violation(e):
-            raise
-        # A concurrent publisher won the ledger race for this
-        # (table, run, batch): our transaction rolled back whole — the
-        # target saw nothing — so this is a replay, not a failure
-        # (crash-looping here was the ADVICE r6 ledger bug's symptom).
-        # Clean this attempt's now-orphaned stages and report 0.
-        cln = psycopg2.connect(**conn_params)
-        cln.autocommit = True
-        try:
-            with cln.cursor() as cur:
-                for st in _this_batch_stages(cur, target, stage_prefix):
-                    cur.execute(f'DROP TABLE "{target.schema}"."{st}"')
-        finally:
-            cln.close()
-        return 0
-    finally:
-        pub.close()
-    return n
+def _batch_scope(run_id: str, batch_id: int) -> str:
+    return f"batch:{run_id}:{int(batch_id)}"
 
 
 def _ensure_ledger(cur, ledger: str) -> None:
@@ -512,28 +618,12 @@ def _is_unique_violation(exc: Exception) -> bool:
     return getattr(exc, "pgcode", None) == "23505" or "23505" in str(exc)
 
 
-def _this_batch_stages(cur, target: TargetTable, stage_prefix: str) -> list:
-    """Stage tables of THIS batch only: prefix LIKE narrowed by an exact
-    ``<prefix><digits>`` regex, so neither other batches' in-flight stages
-    nor user tables that happen to share the prefix shape are touched."""
-    import re  # noqa: PLC0415
-
-    cur.execute(
-        "SELECT tablename FROM pg_tables "
-        "WHERE schemaname = %s AND tablename LIKE %s",
-        (target.schema, stage_prefix.replace("_", r"\_") + "%"),
-    )
-    pat = re.compile(re.escape(stage_prefix) + r"\d+$")
-    return sorted(r[0] for r in cur.fetchall() if pat.fullmatch(r[0]))
-
-
 def staged_full_refresh(
     df: DataFrame, conn_params: dict, target: TargetTable
 ) -> int:
-    """Task-retry-safe, ATOMIC full refresh: per-partition stage tables
-    (the same idempotent DROP+CREATE+COPY-in-one-transaction trick as
-    ``load_batch_exactly_once``), then ONE publish transaction that
-    TRUNCATEs the target, inserts every stage, and drops the stages.
+    """Task-retry-safe, ATOMIC full refresh through the staged core: one
+    stage per partition, then ONE publish transaction that TRUNCATEs the
+    target and inserts every stage.
 
     Two upgrades over the direct TRUNCATE → parallel-COPY path:
 
@@ -546,60 +636,18 @@ def staged_full_refresh(
       rows vanish and new rows appear in the same commit (TRUNCATE is
       transactional in Postgres).
 
-    The trade: rows are written twice server-side (stage + publish) —
-    the cost profile the exactly-once streaming sink already accepts.
-    Returns the number of rows published.
+    Each call stages under its own uuid scope, so concurrent refreshes of
+    one table never see each other's stages; their publishes serialize and
+    the last one wins. The trade: rows are written twice server-side
+    (stage + publish). Returns the number of rows published.
     """
-    psycopg2 = _psycopg2()
-    stage_prefix = f"{target.name}__fullstage_p"
-    cols = list(target.columns)
-    schema, tgt_q = target.schema, target.qualified
-    col_list = ", ".join(f'"{c}"' for c in cols)
-    ctl = psycopg2.connect(**conn_params)
-    ctl.autocommit = True
-    try:
-        with ctl.cursor() as cur:
-            # stale stages from a crashed prior refresh: replaced anyway
-            # per-partition, but a retry with FEWER partitions must not
-            # publish a dead higher-numbered stage
-            for st in _this_batch_stages(cur, target, stage_prefix):
-                cur.execute(f'DROP TABLE "{schema}"."{st}"')
-    finally:
-        ctl.close()
-
-    def _task_plan(pid: int):
-        stage_q = f'"{schema}"."{stage_prefix}{pid}"'
-        return (
-            [
-                f"DROP TABLE IF EXISTS {stage_q}",
-                f"CREATE TABLE {stage_q} (LIKE {tgt_q} INCLUDING DEFAULTS)",
-            ],
-            f"COPY {stage_q} ({col_list}) FROM STDIN WITH CSV",
-        )
-
-    n = parallel_copy(df, conn_params, task_plan=_task_plan)
-    pub = psycopg2.connect(**conn_params)
-    try:
-        with pub, pub.cursor() as cur:  # ONE txn: all-or-nothing swap
-            stages = _this_batch_stages(cur, target, stage_prefix)
-            cur.execute(truncate_sql(target))
-            for st in stages:
-                cur.execute(
-                    f"INSERT INTO {tgt_q} ({col_list}) "
-                    f'SELECT {col_list} FROM "{schema}"."{st}"'
-                )
-            for st in stages:
-                cur.execute(f'DROP TABLE "{schema}"."{st}"')
-    finally:
-        pub.close()
-    return n
+    return _staged_write(df, conn_params, target, uuid.uuid4().hex, truncate=True)
 
 
 def copy_to_postgres(
     df: DataFrame,
     conn_params: dict,
     target: TargetTable,
-    csv_chunk_rows: int = 10**6,
     num_partitions: Optional[int] = None,
     freeze: bool = False,
     maintenance_work_mem: Optional[str] = None,
@@ -618,18 +666,7 @@ def copy_to_postgres(
     keeps the reference's TRUNCATE-then-COPY semantics and single write.
     """
     psycopg2 = _psycopg2()
-    cols = [c for c in target.columns if c in df.columns]
-    df = df.select(*cols)
-    load_target = TargetTable(
-        schema=target.schema,
-        name=target.name,
-        columns=cols,
-        primary_key=target.primary_key,
-        pk_name=target.pk_name,
-        foreign_keys=target.foreign_keys,
-    )
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
+    df, load_target = _project(df, target, None if freeze else num_partitions)
 
     ddl = psycopg2.connect(**conn_params)
     ddl.autocommit = True
@@ -642,14 +679,16 @@ def copy_to_postgres(
             cur.execute(drop_pk_sql(load_target))
 
     if freeze:
-        # single transaction: TRUNCATE + COPY FREEZE (reference semantics,
-        # `copy_hdf.py:70-71`) — single writer by construction
-        sql = copy_freeze_sql(load_target)
-        rows = df.coalesce(1).toLocalIterator()
-        with psycopg2.connect(**conn_params) as conn, conn.cursor() as cur:
-            cur.execute(truncate_sql(load_target))
-            for chunk in csv_chunks(rows, cols, csv_chunk_rows):
-                cur.copy_expert(sql, chunk)
+        # one task, one transaction: TRUNCATE + COPY FREEZE (reference
+        # semantics, `copy_hdf.py:70-71`); an empty input runs no task
+        # transaction, so the driver truncates instead
+        plan = lambda _: (  # noqa: E731
+            None, [truncate_sql(load_target)], copy_freeze_sql(load_target)
+        )
+        messages = _run_copy_tasks(df.coalesce(1), conn_params, plan)
+        if not any(m.n_rows for m in messages):
+            with ddl.cursor() as cur:
+                cur.execute(truncate_sql(load_target))
     elif staged:
         staged_full_refresh(df, conn_params, load_target)
     else:
@@ -665,6 +704,38 @@ def copy_to_postgres(
         if analyze:
             cur.execute(analyze_sql(load_target))
     ddl.close()
+
+
+def _keyed_apply(
+    df: DataFrame, conn_params: dict, target: TargetTable, stage_ddl, apply
+) -> int:
+    """Shared body of the keyed writers: COPY ``df`` into one stage under a
+    per-call scope (so concurrent calls on one target never touch each
+    other's stage), created by ``stage_ddl(stage)``; then ONE transaction
+    runs ``apply(stage)`` and drops the stage. Any failure drops the
+    stage. Returns the staged row count."""
+    name = stage_name(target.name, uuid.uuid4().hex, 0)
+    stage = TargetTable(target.schema, name, df.columns)
+    msg = [StageMessage(stage.name, 0)]
+    conn = _psycopg2().connect(**conn_params)
+    conn.autocommit = True
+    try:
+        with conn.cursor() as cur:
+            cur.execute(stage_ddl(stage.qualified))
+        n = parallel_copy(df, conn_params, copy_sql(stage))
+        conn.autocommit = False
+        with conn, conn.cursor() as cur:  # ONE transaction: atomic apply
+            for sql in apply(stage.qualified):
+                cur.execute(sql)
+            _sweep_stages(cur, target, msg, None)
+    except Exception:
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            _sweep_stages(cur, target, msg, None)
+        raise
+    finally:
+        conn.close()
+    return n
 
 
 def upsert_to_postgres(
@@ -692,52 +763,28 @@ def upsert_to_postgres(
     Scale: the data plane is the same N-writer COPY as every other load;
     the merge itself is one set-based SQL statement on the server.
     Returns the number of batch rows applied."""
-    cols = [c for c in target.columns if c in df.columns]
-    df = df.select(*cols)
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
-    psycopg2 = _psycopg2()
-    stage = TargetTable(
-        schema=target.schema, name=f"{target.name}__upsert_stage", columns=cols
-    )
-    ctl = psycopg2.connect(**conn_params)
-    ctl.autocommit = True
-    try:
-        with ctl.cursor() as cur:
-            cur.execute(f"DROP TABLE IF EXISTS {stage.qualified}")
-            cur.execute(
-                f"CREATE TABLE {stage.qualified} "
-                f"(LIKE {target.qualified} INCLUDING DEFAULTS)"
-            )
-    finally:
-        ctl.close()
-
-    n = parallel_copy(df, conn_params, copy_sql(stage))
-
-    col_list = ", ".join(f'"{c}"' for c in cols)
+    df, target = _project(df, target, num_partitions)
+    col_list = ", ".join(f'"{c}"' for c in target.columns)
     keys = ", ".join(f'"{c}"' for c in key_cols)
     sets = ", ".join(
-        f'"{c}" = EXCLUDED."{c}"' for c in cols if c not in key_cols
+        f'"{c}" = EXCLUDED."{c}"' for c in target.columns if c not in key_cols
     )
     key_eq = " AND ".join(f's."{c}" = d."{c}"' for c in key_cols)
-    pub = psycopg2.connect(**conn_params)
-    try:
-        with pub, pub.cursor() as cur:  # ONE transaction
-            cur.execute(
-                # last physical row per key wins within the batch
-                f"DELETE FROM {stage.qualified} s WHERE EXISTS ("
-                f"SELECT 1 FROM {stage.qualified} d "
-                f"WHERE {key_eq} AND d.ctid > s.ctid)"
-            )
-            cur.execute(
-                f"INSERT INTO {target.qualified} ({col_list}) "
-                f"SELECT {col_list} FROM {stage.qualified} "
-                f"ON CONFLICT ({keys}) DO UPDATE SET {sets}"
-            )
-            cur.execute(f"DROP TABLE {stage.qualified}")
-    finally:
-        pub.close()
-    return n
+
+    def apply(stage: str) -> list:
+        return [
+            # last physical row per key wins within the batch
+            f"DELETE FROM {stage} s WHERE EXISTS ("
+            f"SELECT 1 FROM {stage} d "
+            f"WHERE {key_eq} AND d.ctid > s.ctid)",
+            f"INSERT INTO {target.qualified} ({col_list}) "
+            f"SELECT {col_list} FROM {stage} "
+            f"ON CONFLICT ({keys}) DO UPDATE SET {sets}",
+        ]
+
+    return _keyed_apply(
+        df, conn_params, target, lambda stage: _stage_ddl(target, stage), apply
+    )
 
 
 def apply_changes_to_postgres(
@@ -781,34 +828,20 @@ def apply_changes_to_postgres(
         + ([(seq_col, "bigint")] if seq_col else [])
         if c not in data_cols
     ]
-    sel = data_cols + [c for c, _ in extras]
-    df = df.select(*sel)
+    df = df.select(*data_cols, *[c for c, _ in extras])
     if num_partitions is not None:
         df = df.repartition(num_partitions)
-    psycopg2 = _psycopg2()
-    stage = TargetTable(
-        schema=target.schema, name=f"{target.name}__cdc_stage", columns=sel
-    )
-    ctl = psycopg2.connect(**conn_params)
-    ctl.autocommit = True
-    try:
-        with ctl.cursor() as cur:
-            cur.execute(f"DROP TABLE IF EXISTS {stage.qualified}")
-            # stage = target's column types + op (text) + optional seq
-            # (appended only when NOT already target columns): COPY names
-            # its columns explicitly, so extra target columns simply stay
-            # NULL in the stage and are never read back
-            cur.execute(
-                f"CREATE TABLE {stage.qualified} AS SELECT *"
-                + "".join(
-                    f', NULL::{typ} AS "{c}"' for c, typ in extras
-                )
-                + f" FROM {target.qualified} WITH NO DATA"
-            )
-    finally:
-        ctl.close()
 
-    n = parallel_copy(df, conn_params, copy_sql(stage))
+    def stage_ddl(stage: str) -> str:
+        # stage = target's column types + op (text) + optional seq
+        # (appended only when NOT already target columns): COPY names
+        # its columns explicitly, so extra target columns simply stay
+        # NULL in the stage and are never read back
+        return (
+            f"CREATE TABLE {stage} AS SELECT *"
+            + "".join(f', NULL::{typ} AS "{c}"' for c, typ in extras)
+            + f" FROM {target.qualified} WITH NO DATA"
+        )
 
     keys = ", ".join(f'"{c}"' for c in key_cols)
     key_eq = " AND ".join(f's."{c}" = d."{c}"' for c in key_cols)
@@ -823,26 +856,19 @@ def apply_changes_to_postgres(
         f'"{c}" = EXCLUDED."{c}"' for c in data_cols if c not in key_cols
     )
     tkey_eq = " AND ".join(f't."{c}" = s."{c}"' for c in key_cols)
-    pub = psycopg2.connect(**conn_params)
-    try:
-        with pub, pub.cursor() as cur:  # ONE transaction: atomic apply
-            cur.execute(
-                f"DELETE FROM {stage.qualified} s WHERE EXISTS ("
-                f"SELECT 1 FROM {stage.qualified} d "
-                f"WHERE {key_eq} AND ({order}{tie}))"
-            )
-            cur.execute(
-                f"DELETE FROM {target.qualified} t WHERE EXISTS ("
-                f"SELECT 1 FROM {stage.qualified} s "
-                f"WHERE {tkey_eq} AND upper(s.\"{op_col}\") = 'D')"
-            )
-            cur.execute(
-                f"INSERT INTO {target.qualified} ({col_list}) "
-                f"SELECT {col_list} FROM {stage.qualified} "
-                f"WHERE upper(\"{op_col}\") <> 'D' "
-                f"ON CONFLICT ({keys}) DO UPDATE SET {sets}"
-            )
-            cur.execute(f"DROP TABLE {stage.qualified}")
-    finally:
-        pub.close()
-    return n
+
+    def apply(stage: str) -> list:
+        return [
+            f"DELETE FROM {stage} s WHERE EXISTS ("
+            f"SELECT 1 FROM {stage} d "
+            f"WHERE {key_eq} AND ({order}{tie}))",
+            f"DELETE FROM {target.qualified} t WHERE EXISTS ("
+            f"SELECT 1 FROM {stage} s "
+            f"WHERE {tkey_eq} AND upper(s.\"{op_col}\") = 'D')",
+            f"INSERT INTO {target.qualified} ({col_list}) "
+            f"SELECT {col_list} FROM {stage} "
+            f"WHERE upper(\"{op_col}\") <> 'D' "
+            f"ON CONFLICT ({keys}) DO UPDATE SET {sets}",
+        ]
+
+    return _keyed_apply(df, conn_params, target, stage_ddl, apply)

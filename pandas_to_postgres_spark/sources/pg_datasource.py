@@ -49,11 +49,11 @@ Usage::
 from __future__ import annotations
 
 import datetime
+import uuid
 from decimal import Decimal
 from typing import Iterator, List
 
 from dataclasses import dataclass
-from typing import Optional
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -67,7 +67,15 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
+)
+
+from pandas_to_postgres_spark.sinks.postgres_copy import (
+    StageMessage,
+    TargetTable,
+    _copy_task,
+    _stage_plan,
+    abort_stages,
+    publish_stages,
 )
 
 #: information_schema data_type → (Spark DDL type, python converter)
@@ -90,15 +98,22 @@ _PG_TYPES = {
 }
 
 
+def _conn_params(options) -> dict:
+    params = {
+        "user": options.get("user", "spark"),
+        "dbname": options.get("dbname", "spark"),
+    }
+    if options.get("host"):
+        params["host"] = options["host"]
+    if options.get("port"):
+        params["port"] = int(options["port"])
+    return params
+
+
 def _connect(options):
     from pandas_to_postgres_spark.sinks import pgwire  # noqa: PLC0415
 
-    kwargs = {"user": options.get("user", "spark"), "dbname": options.get("dbname", "spark")}
-    if options.get("host"):
-        kwargs["host"] = options["host"]
-    if options.get("port"):
-        kwargs["port"] = int(options["port"])
-    return pgwire.connect(**kwargs)
+    return pgwire.connect(**_conn_params(options))
 
 
 def _sql_literal(v) -> str:
@@ -293,133 +308,53 @@ class PostgresDataSource(DataSource):
         return cls(self.options, cols, convs)
 
 
-@dataclass
-class PgWriteCommit(WriterCommitMessage):
-    """Per-task commit message: which stage table holds the partition."""
+class _StagedWriter:
+    """Task side shared by both pgwire writers: each task stages its
+    partition's Arrow batches through the staged-publish core of
+    `sinks/postgres_copy` (DROP-IF-EXISTS + CREATE + COPY of its stage in
+    one transaction, so a retried or speculative attempt replaces its
+    stage) and returns the stage's :class:`StageMessage`. Commit and abort
+    are the core's publish and sweep; its module comment describes the
+    one residual caveat (orphans of a driver that died before commit or
+    abort). The stage scope is minted per writer on the driver and pickled
+    into every task."""
 
-    stage: Optional[str]
-    n_rows: int
+    def __init__(self, options, columns):
+        self.params = _conn_params(options)
+        self.target = TargetTable(
+            schema=options.get("schema", "public"),
+            name=options["table"],
+            columns=list(columns),
+        )
+        self.scope = uuid.uuid4().hex[:8]
+
+    def write(self, iterator) -> StageMessage:
+        plan = _stage_plan(self.target, self.scope)
+        return _copy_task(self.params, plan, iterator)
 
 
-class PostgresArrowWriter(DataSourceArrowWriter):
-    """``df.write.format("pgwire")`` — the WRITE half of the Python
-    DataSource, mapping Spark's writer commit protocol onto the staged
-    COPY pattern (`sinks/postgres_copy.staged_full_refresh`):
-
-    - ``write`` (per task): CREATE a task-private stage table + COPY the
-      partition's Arrow batches into it, both in ONE transaction; the
-      stage name is attempt-unique, so a retried or speculative attempt
-      can never double-write, and its name is the commit message.
-    - ``commit`` (driver, all tasks succeeded): ONE transaction —
-      TRUNCATE on overwrite mode, INSERT every message's stage, drop
-      stages. Readers see the old table until the commit.
-    - ``abort`` (driver, any task failed): drop the stages.
-
-    Stage names carry a per-JOB uuid prefix (minted driver-side in
-    ``__init__`` and shipped to tasks inside the pickled writer), so the
-    commit/abort sweep only ever sees ITS OWN job's stages — a
-    concurrent writer to the same table can neither have staged data
-    dropped out from under it nor drop ours. The commit transaction
-    additionally takes ``pg_advisory_xact_lock(hashtext(schema.table))``
-    so two simultaneous publishes serialize instead of deadlocking on
-    TRUNCATE + INSERT ordering. Residual caveat: a stage created by a
-    zombie/speculative task AFTER its job's sweep, or by a job whose
-    driver died before commit/abort, is an orphan — bounded cleanup is
-    ``DROP TABLE`` of ``<table>__dsw_%`` at a quiet moment.
-
-    Scale: identical data plane to `parallel_copy` (one connection per
-    task, pyarrow C++ CSV serialization, memory bounded by the Arrow
-    batch size); the commit transaction is server-side set operations.
-    """
+class PostgresArrowWriter(_StagedWriter, DataSourceArrowWriter):
+    """``df.write.format("pgwire")`` — Spark's writer commit protocol on
+    the staged core: ``commit`` publishes every task's stage in ONE
+    transaction (after a TRUNCATE in overwrite mode), ``abort`` sweeps
+    the job's scope — the writer is pickled into the commit, so a
+    concurrent writer to the same table never sees this job's stages."""
 
     def __init__(self, options, columns, overwrite: bool):
-        import uuid  # noqa: PLC0415
-
-        self.options = dict(options)
-        self.columns = list(columns)
+        super().__init__(options, columns)
         self.overwrite = overwrite
-        self.schema_name = options.get("schema", "public")
-        self.table = options["table"]
-        # job-scoped stage namespace: minted once on the driver, pickled
-        # into every task — concurrent writers never see each other's stages
-        self.job_id = uuid.uuid4().hex[:8]
-
-    def _q(self, name: str) -> str:
-        return f'"{self.schema_name}"."{name}"'
-
-    def write(self, iterator) -> PgWriteCommit:
-        import itertools  # noqa: PLC0415
-        import uuid  # noqa: PLC0415
-
-        from pandas_to_postgres_spark.sinks.postgres_copy import (  # noqa: PLC0415
-            _ArrowCsvStream,
-        )
-
-        first = next(iterator, None)
-        if first is None:
-            return PgWriteCommit(stage=None, n_rows=0)
-        stage = f"{self.table}__dsw_{self.job_id}_{uuid.uuid4().hex[:12]}"
-        col_list = ", ".join(f'"{c}"' for c in self.columns)
-        stream = _ArrowCsvStream(itertools.chain([first], iterator))
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:
-                cur.execute(
-                    f"CREATE TABLE {self._q(stage)} "
-                    f"(LIKE {self._q(self.table)} INCLUDING DEFAULTS)"
-                )
-                cur.copy_expert(
-                    f"COPY {self._q(stage)} ({col_list}) FROM STDIN WITH CSV",
-                    stream,
-                )
-        finally:
-            conn.close()
-        return PgWriteCommit(stage=stage, n_rows=stream.rows)
-
-    def _all_stages(self, cur) -> list:
-        import re  # noqa: PLC0415
-
-        prefix = f"{self.table}__dsw_{self.job_id}_"
-        cur.execute(
-            "SELECT tablename FROM pg_tables"
-            " WHERE schemaname = %s AND tablename LIKE %s",
-            (self.schema_name, prefix.replace("_", r"\_") + "%"),
-        )
-        pat = re.compile(re.escape(prefix) + r"[0-9a-f]+$")
-        return sorted(r[0] for r in cur.fetchall() if pat.fullmatch(r[0]))
 
     def commit(self, messages) -> None:
-        col_list = ", ".join(f'"{c}"' for c in self.columns)
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:  # ONE txn: atomic publish
-                # serialize concurrent publishes to the same target
-                # (released automatically at txn end)
-                cur.execute(
-                    "SELECT pg_advisory_xact_lock(hashtext(%s))",
-                    (f"{self.schema_name}.{self.table}",),
-                )
-                if self.overwrite:
-                    cur.execute(f"TRUNCATE {self._q(self.table)}")
-                for m in messages:
-                    if m is not None and m.stage:
-                        cur.execute(
-                            f"INSERT INTO {self._q(self.table)} ({col_list})"
-                            f" SELECT {col_list} FROM {self._q(m.stage)}"
-                        )
-                for st in self._all_stages(cur):
-                    cur.execute(f"DROP TABLE {self._q(st)}")
-        finally:
-            conn.close()
+        publish_stages(
+            self.params,
+            self.target,
+            messages,
+            self.scope,
+            truncate=self.overwrite,
+        )
 
     def abort(self, messages) -> None:
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:
-                for st in self._all_stages(cur):
-                    cur.execute(f"DROP TABLE {self._q(st)}")
-        finally:
-            conn.close()
+        abort_stages(self.params, self.target, messages, self.scope)
 
 
 @dataclass
@@ -522,21 +457,16 @@ class PostgresStreamReader(DataSourceStreamReader):
         pass  # offsets live in Spark's checkpoint; the source is passive
 
 
-class PostgresStreamWriter(DataSourceStreamArrowWriter):
+class PostgresStreamWriter(_StagedWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("pgwire")`` — exactly-once streaming
-    append into Postgres through the writer-commit protocol:
-
-    - ``write`` (per task): stage the partition's Arrow batches into a
-      task-private table (one transaction), exactly like the batch
-      writer — retried/speculative attempts can never double-write.
-    - ``commit`` (per epoch; runs in Spark's separate commit-runner
-      process, so NO writer state survives from the task side — stages
-      are addressed ONLY through the commit messages): ONE transaction
-      takes the advisory lock, consults the epoch LEDGER (same
-      convention as `sinks/postgres_copy.load_batch_exactly_once`) — if
-      this (table, run, batchId) already committed, the replay only
-      drops its message stages; otherwise it publishes every message
-      stage, records the epoch, and drops them.
+    append into Postgres through the writer-commit protocol on the staged
+    core: ``commit`` (per epoch) publishes the epoch's stages together
+    with its row in the epoch LEDGER (same convention as
+    `sinks/postgres_copy.load_batch_exactly_once`), so a replayed epoch
+    publishes nothing; ``abort`` drops the epoch's stages. Spark runs
+    commit/abort in a separate commit-runner process with a freshly
+    constructed writer, so no task-side state survives there: stages are
+    addressed ONLY through the commit messages.
 
     The ledger is namespaced by ``option("runId", ...)`` — a stable
     per-query identity the caller derives from the CHECKPOINT location
@@ -547,10 +477,6 @@ class PostgresStreamWriter(DataSourceStreamArrowWriter):
     runId is omitted it defaults to '' with a warning: safe for the
     first query against a table, unsafe for the second — clear
     ``stream_epochs`` or pass runId.
-    - ``abort``: drops the failed epoch's message stages. A stage whose
-      task died before messaging is an orphan (same caveat as the batch
-      writer): bounded cleanup is DROP of ``<table>__dsws_%`` at a
-      quiet moment.
 
     Append-only by design (a streaming sink that TRUNCATEs per epoch
     would destroy history); use foreachBatch + `staged_full_refresh`
@@ -558,13 +484,9 @@ class PostgresStreamWriter(DataSourceStreamArrowWriter):
     """
 
     def __init__(self, options, columns):
-        import uuid  # noqa: PLC0415
         import warnings  # noqa: PLC0415
 
-        self.options = dict(options)
-        self.columns = list(columns)
-        self.schema_name = options.get("schema", "public")
-        self.table = options["table"]
+        super().__init__(options, columns)
         self.epoch_table = options.get("epochTable", "stream_epochs")
         self.run_id = options.get("runId", "")
         if not self.run_id:
@@ -577,122 +499,14 @@ class PostgresStreamWriter(DataSourceStreamArrowWriter):
                 "from the checkpoint location>).",
                 stacklevel=2,
             )
-        # query_id scopes STAGE table names per writer instance only
-        # (never the ledger — a driver restart mints a new one)
-        self.query_id = uuid.uuid4().hex[:8]
-
-    def _q(self, name: str) -> str:
-        return f'"{self.schema_name}"."{name}"'
-
-    def write(self, iterator) -> PgWriteCommit:
-        import itertools  # noqa: PLC0415
-        import uuid  # noqa: PLC0415
-
-        from pandas_to_postgres_spark.sinks.postgres_copy import (  # noqa: PLC0415
-            _ArrowCsvStream,
-        )
-
-        first = next(iterator, None)
-        if first is None:
-            return PgWriteCommit(stage=None, n_rows=0)
-        stage = f"{self.table}__dsws_{self.query_id}_{uuid.uuid4().hex[:12]}"
-        col_list = ", ".join(f'"{c}"' for c in self.columns)
-        stream = _ArrowCsvStream(itertools.chain([first], iterator))
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:
-                cur.execute(
-                    f"CREATE TABLE {self._q(stage)} "
-                    f"(LIKE {self._q(self.table)} INCLUDING DEFAULTS)"
-                )
-                cur.copy_expert(
-                    f"COPY {self._q(stage)} ({col_list}) FROM STDIN WITH CSV",
-                    stream,
-                )
-        finally:
-            conn.close()
-        return PgWriteCommit(stage=stage, n_rows=stream.rows)
-
-    @staticmethod
-    def _stages(messages) -> list:
-        return sorted(
-            {m.stage for m in messages if m is not None and m.stage}
-        )
 
     def commit(self, messages, batchId) -> None:  # noqa: N803 — API name
-        ledger = self._q(self.epoch_table)
-        col_list = ", ".join(f'"{c}"' for c in self.columns)
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:
-                # create-or-migrate: adds run_id AND moves the PK to
-                # (table_name, run_id, batch_id) — a legacy 2-column PK
-                # would reject every new run's batch 0 (ADVICE r6)
-                from pandas_to_postgres_spark.sinks.postgres_copy import (
-                    _ensure_ledger,
-                )
-
-                _ensure_ledger(cur, ledger)
-            try:
-                with conn, conn.cursor() as cur:  # ONE publish txn
-                    cur.execute(
-                        "SELECT pg_advisory_xact_lock(hashtext(%s))",
-                        (f"{self.schema_name}.{self.table}",),
-                    )
-                    cur.execute(
-                        f"SELECT 1 FROM {ledger}"
-                        " WHERE table_name = %s AND run_id = %s"
-                        " AND batch_id = %s",
-                        (self.table, self.run_id, int(batchId)),
-                    )
-                    replay = bool(cur.fetchall())
-                    n = 0
-                    if not replay:
-                        for m in messages:
-                            if m is not None and m.stage:
-                                cur.execute(
-                                    f"INSERT INTO {self._q(self.table)}"
-                                    f" ({col_list}) SELECT {col_list}"
-                                    f" FROM {self._q(m.stage)}"
-                                )
-                                n += m.n_rows
-                        cur.execute(
-                            f"INSERT INTO {ledger}"
-                            " (table_name, run_id, batch_id, n_rows)"
-                            " VALUES (%s, %s, %s, %s)",
-                            (self.table, self.run_id, int(batchId), n),
-                        )
-                    for st in self._stages(messages):
-                        cur.execute(f"DROP TABLE IF EXISTS {self._q(st)}")
-            except Exception as e:
-                from pandas_to_postgres_spark.sinks.postgres_copy import (
-                    _is_unique_violation,
-                )
-
-                if not _is_unique_violation(e):
-                    raise
-                # the ledger row already exists (a publisher outside the
-                # advisory lock, e.g. an unmigratable legacy row): the txn
-                # rolled back whole — treat as a replay instead of
-                # crash-looping; drop this attempt's orphaned stages
-                cln = _connect(self.options)
-                cln.autocommit = True
-                try:
-                    with cln.cursor() as cur:
-                        for st in self._stages(messages):
-                            cur.execute(
-                                f"DROP TABLE IF EXISTS {self._q(st)}"
-                            )
-                finally:
-                    cln.close()
-        finally:
-            conn.close()
+        publish_stages(
+            self.params,
+            self.target,
+            messages,
+            ledger=(self.epoch_table, self.run_id, batchId),
+        )
 
     def abort(self, messages, batchId) -> None:  # noqa: N803 — API name
-        conn = _connect(self.options)
-        try:
-            with conn, conn.cursor() as cur:
-                for st in self._stages(messages):
-                    cur.execute(f"DROP TABLE IF EXISTS {self._q(st)}")
-        finally:
-            conn.close()
+        abort_stages(self.params, self.target, messages)

@@ -85,6 +85,21 @@ class TestPgWire:
         assert cur.fetchall() == [("42",)]
         conn.close()
 
+    def test_copy_after_notice(self, pg):
+        """A NOTICE (here: identifier truncation) may precede the server's
+        CopyInResponse; the client must skip it, not desynchronize."""
+        import io
+
+        name = "notice_" + "x" * 60
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        cur = conn.cursor()
+        cur.execute(f'CREATE TABLE IF NOT EXISTS "{name}" (a INT)')
+        cur.copy_expert(f'COPY "{name}" (a) FROM STDIN WITH CSV', io.StringIO("1\n2\n"))
+        cur.execute(f'SELECT count(*) FROM "{name}"')
+        assert cur.fetchall() == [("2",)]
+        conn.close()
+
 
 class TestReflect:
     def test_reflects_columns_pk_fk(self, schema):
@@ -133,7 +148,9 @@ class TestCopyEndToEnd:
 
     def test_staged_full_refresh_is_atomic_and_leaves_no_stages(self, spark, schema):
         """staged=True: old rows are replaced in one commit, counts are
-        exact, and no __fullstage_p* tables survive the publish."""
+        exact, and no stage tables survive the publish."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import stage_name
+
         cust = spark.createDataFrame(
             [(i, f"old#{i}", float(i)) for i in range(1, 101)],
             "c_custkey long, c_name string, c_acctbal double",
@@ -151,25 +168,27 @@ class TestCopyEndToEnd:
         assert self._counts(
             schema, "SELECT count(*) FROM customer WHERE c_name LIKE 'old%'"
         )[0] == ("0",)
-        # publish dropped every stage table
-        assert self._counts(
-            schema,
+        stages = (
             "SELECT count(*) FROM pg_tables "
-            "WHERE tablename LIKE 'customer\\_\\_fullstage\\_p%'",
-        )[0] == ("0",)
-        # a leftover stage from a crashed attempt is replaced, not published
+            "WHERE tablename LIKE 'customer\\_\\_stg\\_%'"
+        )
+        # publish dropped every stage table
+        assert self._counts(schema, stages)[0] == ("0",)
+        # a leftover stage of a crashed refresh (another scope) is never
+        # published, nor swept by a live refresh
+        orphan = stage_name("customer", "crashed", 99)
         conn = pgwire.connect(**schema)
         with conn, conn.cursor() as cur:
-            cur.execute(
-                "CREATE TABLE customer__fullstage_p99 (LIKE customer)"
-            )
-            cur.execute(
-                "INSERT INTO customer__fullstage_p99 "
-                "SELECT * FROM customer LIMIT 5"
-            )
+            cur.execute(f"CREATE TABLE {orphan} (LIKE customer)")
+            cur.execute(f"INSERT INTO {orphan} SELECT * FROM customer LIMIT 5")
         conn.close()
         copy_to_postgres(new, schema, target, num_partitions=2, staged=True)
         assert self._counts(schema, "SELECT count(*) FROM customer")[0] == ("500",)
+        assert self._counts(schema, stages)[0] == ("1",)
+        conn = pgwire.connect(**schema)
+        with conn, conn.cursor() as cur:
+            cur.execute(f"DROP TABLE {orphan}")
+        conn.close()
 
     def test_freeze_single_transaction_path(self, spark, schema):
         orders = spark.createDataFrame(
@@ -202,6 +221,9 @@ class TestCopyEndToEnd:
                 "INSERT INTO orders VALUES (9999, 888888, 'X', 1.0)"
             )
         conn.close()
+        # an empty input still leaves the target truncated
+        copy_to_postgres(orders.limit(0), schema, target, freeze=True)
+        assert self._counts(schema, "SELECT count(*) FROM orders")[0] == ("0",)
 
     def test_copy_reports_bad_rows(self, schema):
         import io
@@ -215,6 +237,138 @@ class TestCopyEndToEnd:
                     io.StringIO("not_a_number,x,1.0\n"),
                 )
         conn.close()
+
+
+class TestStagedCore:
+    """The stage→publish core under conditions the bulk path never
+    creates: retried task attempts, concurrent refreshes of one table,
+    and target names near Postgres's 63-byte identifier limit."""
+
+    def _table(self, pg, name, rows=()):
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            cur.execute(f"DROP TABLE IF EXISTS {name}")
+            cur.execute(f"CREATE TABLE {name} (k BIGINT, tag TEXT)")
+            for r in rows:
+                cur.execute(f"INSERT INTO {name} VALUES (%s, %s)", r)
+        conn.close()
+
+    def _q(self, pg, sql, params=None):
+        conn = pgwire.connect(**pg)
+        with conn, conn.cursor() as cur:
+            cur.execute(sql, params)
+            out = cur.fetchall()
+        conn.close()
+        return out
+
+    def _stages_left(self, pg, name):
+        """Tables sharing the target's first 32 bytes (every stage name's
+        head), other than the target itself."""
+        like = name[:32].replace("_", "\\_") + "%"
+        return self._q(
+            pg,
+            "SELECT count(*) FROM pg_tables WHERE tablename LIKE %s"
+            " AND tablename <> %s",
+            (like, name),
+        )[0][0]
+
+    @pytest.mark.parametrize("shape", ["append", "truncate", "ledger"])
+    def test_retried_attempt_lands_once(self, spark, schema, shape):
+        """The same (scope, part) staged twice, as a retried task does:
+        the second attempt replaces the first, and publishing its message
+        lands the rows once."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _run_copy_tasks,
+            _stage_plan,
+            publish_stages,
+        )
+
+        name = f"retry_{shape}"
+        self._table(schema, name, [(-1, "old")])
+        target = TargetTable("public", name, ["k", "tag"])
+        plan = _stage_plan(target, "attempts")
+
+        def attempt(tag):
+            df = spark.createDataFrame(
+                [(i, tag) for i in range(30)], "k long, tag string"
+            )
+            return _run_copy_tasks(df.coalesce(1), schema, plan)
+
+        first, second = attempt("stale"), attempt("final")
+        assert [m.stage for m in first] == [m.stage for m in second]
+        ledger = ("retry_epochs", "run", 1) if shape == "ledger" else None
+
+        def publish():
+            return publish_stages(
+                schema, target, second, "attempts",
+                truncate=shape == "truncate", ledger=ledger,
+            )
+
+        assert publish() == 30
+        if ledger:
+            assert publish() == 0  # the replayed epoch publishes nothing
+        kept = [] if shape == "truncate" else [("old", "1")]
+        assert self._q(
+            schema, f"SELECT tag, count(*) FROM {name} GROUP BY tag ORDER BY tag"
+        ) == [("final", "30")] + kept
+        assert self._stages_left(schema, name) == "0"
+
+    def test_long_target_name_loses_no_rows(self, spark, schema):
+        """A 52-byte target: per-partition stage names must stay distinct
+        within 63 bytes, or two partitions share one truncated stage and
+        the batch is lost."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            load_batch_exactly_once,
+        )
+
+        name = "long_" + "n" * 47
+        assert len(name) == 52
+        self._table(schema, name)
+        target = TargetTable("public", name, ["k", "tag"])
+        batch = spark.createDataFrame(
+            [(i, "x") for i in range(40)], "k long, tag string"
+        )
+        assert load_batch_exactly_once(
+            batch, schema, target, 100, num_partitions=2
+        ) == 40
+        assert self._q(schema, f"SELECT count(*) FROM {name}") == [("40",)]
+        assert self._stages_left(schema, name) == "0"
+
+    def test_concurrent_staged_refreshes_publish_one(self, spark, schema):
+        """Two staged refreshes of one table from two threads: no error,
+        exactly one refresh's rows, no stage left."""
+        import threading
+
+        name = "conc_refresh"
+        self._table(schema, name)
+        target = reflect_target_table(schema, "public", name)
+        frames = {
+            tag: spark.createDataFrame(
+                [(i, tag) for i in range(200)], "k long, tag string"
+            )
+            for tag in ("a", "b")
+        }
+        for _ in range(3):
+            errors = []
+
+            def refresh(tag):
+                try:
+                    copy_to_postgres(
+                        frames[tag], schema, target, num_partitions=4, staged=True
+                    )
+                except Exception as e:  # noqa: BLE001 - asserted below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=refresh, args=(t,)) for t in frames]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+            assert errors == []
+            got = self._q(schema, f"SELECT tag, count(*) FROM {name} GROUP BY tag")
+            assert got in ([("a", "200")], [("b", "200")])
+            assert self._stages_left(schema, name) == "0"
 
 
 class TestReferenceApiToPostgres:
@@ -340,7 +494,10 @@ class TestExactlyOnceStreaming:
         with conn, conn.cursor() as cur:
             cur.execute("SELECT count(*) FROM ev_sink")
             assert int(cur.fetchall()[0][0]) == expected  # unchanged
-            cur.execute("SELECT count(*) FROM pg_tables WHERE tablename LIKE 'ev_sink__stage_%'")
+            cur.execute(
+                "SELECT count(*) FROM pg_tables"
+                " WHERE tablename LIKE 'ev\\_sink\\_\\_stg\\_%'"
+            )
             assert int(cur.fetchall()[0][0]) == 0  # no stage leftovers
         conn.close()
 
@@ -354,13 +511,18 @@ class TestExactlyOnceStreaming:
         conn.close()
 
     def test_orphan_stage_from_crashed_batch_is_recovered(self, spark, schema):
-        """A crash AFTER staging but BEFORE publish leaves an orphan stage
-        table and no ledger row; the replayed batch must rebuild the stage
-        and publish exactly once."""
+        """A crash AFTER staging but BEFORE publish leaves orphan stage
+        tables and no ledger row; the replayed batch must rebuild its
+        stage, publish exactly once, and sweep the crashed attempt's
+        higher-numbered partition it no longer has."""
         from pandas_to_postgres_spark.sinks.postgres_copy import (
             TargetTable,
+            _batch_scope,
             load_batch_exactly_once,
+            stage_name,
         )
+
+        stale = [stage_name("ev_sink2", _batch_scope("", 7), p) for p in (0, 5)]
 
         conn_params = schema
         with pgwire.connect(**conn_params) as conn, conn.cursor() as cur:
@@ -369,13 +531,14 @@ class TestExactlyOnceStreaming:
                        event_id BIGINT, user_id BIGINT, event_type TEXT,
                        value DOUBLE PRECISION)"""
             )
-            # simulate the crash artifact: stale per-partition stage with
-            # garbage rows (partition 0 of a died batch-7 attempt)
-            cur.execute("DROP TABLE IF EXISTS ev_sink2__stage_7_p0")
-            cur.execute("CREATE TABLE ev_sink2__stage_7_p0 (LIKE ev_sink2)")
-            cur.execute(
-                "INSERT INTO ev_sink2__stage_7_p0 VALUES (999, 999, 'stale', 0.0)"
-            )
+            # simulate the crash artifact: stale per-partition stages with
+            # garbage rows (partitions 0 and 5 of a died batch-7 attempt)
+            for st in stale:
+                cur.execute(f"DROP TABLE IF EXISTS {st}")
+                cur.execute(f"CREATE TABLE {st} (LIKE ev_sink2)")
+                cur.execute(
+                    f"INSERT INTO {st} VALUES (999, 999, 'stale', 0.0)"
+                )
         target = TargetTable(
             schema="public",
             name="ev_sink2",
@@ -395,6 +558,11 @@ class TestExactlyOnceStreaming:
                 "SELECT count(*) FROM ev_sink2 WHERE event_type = 'stale'"
             )
             assert int(cur.fetchall()[0][0]) == 0
+            cur.execute(
+                "SELECT count(*) FROM pg_tables"
+                " WHERE tablename LIKE 'ev\\_sink2\\_\\_stg\\_%'"
+            )
+            assert int(cur.fetchall()[0][0]) == 0  # both stale stages swept
         conn.close()
 
     def test_legacy_ledger_without_run_id_is_migrated(self, spark, schema):
@@ -673,9 +841,13 @@ class TestExactlyOnceIsolation:
         dropped nor published."""
         from pandas_to_postgres_spark.sinks.postgres_copy import (
             TargetTable,
+            _batch_scope,
             load_batch_exactly_once,
+            stage_name,
         )
 
+        inflight = stage_name("ev_sink3", _batch_scope("", 9), 0)
+        lookalike = stage_name("ev_sink3", _batch_scope("", 8), 0) + "_preview"
         conn_params = schema
         conn = pgwire.connect(**conn_params)
         conn.autocommit = True
@@ -685,15 +857,15 @@ class TestExactlyOnceIsolation:
                        event_id BIGINT, user_id BIGINT, event_type TEXT,
                        value DOUBLE PRECISION)"""
             )
-            for tbl in ("ev_sink3__stage_9_p0", "ev_sink3__stage_8_preview"):
+            for tbl in (inflight, lookalike):
                 cur.execute(f"DROP TABLE IF EXISTS {tbl}")
             # batch 9's in-flight stage (a CONCURRENT loader's work)
-            cur.execute("CREATE TABLE ev_sink3__stage_9_p0 (LIKE ev_sink3)")
+            cur.execute(f"CREATE TABLE {inflight} (LIKE ev_sink3)")
             cur.execute(
-                "INSERT INTO ev_sink3__stage_9_p0 VALUES (111, 1, 'inflight', 1.0)"
+                f"INSERT INTO {inflight} VALUES (111, 1, 'inflight', 1.0)"
             )
-            # user table that merely matches the LIKE prefix shape
-            cur.execute("CREATE TABLE ev_sink3__stage_8_preview (x INT)")
+            # user table that merely shares batch 8's stage prefix
+            cur.execute(f"CREATE TABLE {lookalike} (x INT)")
         conn.close()
 
         target = TargetTable(
@@ -716,11 +888,11 @@ class TestExactlyOnceIsolation:
                 "SELECT count(*) FROM ev_sink3 WHERE event_type = 'inflight'"
             )
             assert int(cur.fetchall()[0][0]) == 0  # batch 9 not published
-            cur.execute("SELECT count(*) FROM ev_sink3__stage_9_p0")
+            cur.execute(f"SELECT count(*) FROM {inflight}")
             assert int(cur.fetchall()[0][0]) == 1  # batch 9 stage intact
             cur.execute(
-                "SELECT count(*) FROM pg_tables "
-                "WHERE tablename = 'ev_sink3__stage_8_preview'"
+                "SELECT count(*) FROM pg_tables WHERE tablename = %s",
+                (lookalike,),
             )
             assert int(cur.fetchall()[0][0]) == 1  # lookalike untouched
         conn.close()
@@ -1058,7 +1230,7 @@ class TestPostgresStreamSink:
         ) >= 1
         assert q1(
             "SELECT count(*) FROM pg_tables"
-            " WHERE tablename LIKE 'loop\\_tgt\\_\\_dsws\\_%'"
+            " WHERE tablename LIKE 'loop\\_tgt\\_\\_stg\\_%'"
         ) == [("0",)]
 
     def test_sink_migrates_legacy_ledger(self, spark, schema, tmp_path):
@@ -1212,7 +1384,7 @@ class TestCdcApplySink:
             # no stage left behind
             cur.execute(
                 "SELECT count(*) FROM pg_tables"
-                " WHERE tablename LIKE 'kv\\_cdc\\_\\_cdc\\_%'"
+                " WHERE tablename LIKE 'kv\\_cdc\\_\\_stg\\_%'"
             )
             assert cur.fetchall() == [("0",)]
         conn.close()
@@ -1255,6 +1427,9 @@ class TestPostgresDataSourceWriter:
         conn.close()
 
     def test_append_overwrite_and_stage_cleanup(self, spark, schema):
+        from pandas_to_postgres_spark.sinks.postgres_copy import stage_name
+
+        ghost = stage_name("dsw_tgt", "deadbeef", 0)
         conn = pgwire.connect(**schema)
         conn.autocommit = True
         with conn.cursor() as cur:
@@ -1266,13 +1441,8 @@ class TestPostgresDataSourceWriter:
             # stage owned by a DIFFERENT job (its id is not ours): the next
             # commit must neither publish it NOR drop it — it could be a
             # concurrent writer's live stage (job-scoped sweep contract)
-            cur.execute(
-                "CREATE TABLE dsw_tgt__dsw_deadbeef_cafe0123babe (LIKE dsw_tgt)"
-            )
-            cur.execute(
-                "INSERT INTO dsw_tgt__dsw_deadbeef_cafe0123babe"
-                " VALUES (999, 'ghost', 0)"
-            )
+            cur.execute(f"CREATE TABLE {ghost} (LIKE dsw_tgt)")
+            cur.execute(f"INSERT INTO {ghost} VALUES (999, 'ghost', 0)")
         conn.close()
 
         df = spark.createDataFrame(
@@ -1289,9 +1459,9 @@ class TestPostgresDataSourceWriter:
         assert self._q(
             schema,
             "SELECT count(*) FROM pg_tables"
-            " WHERE tablename LIKE 'dsw\\_tgt\\_\\_dsw\\_%'",
+            " WHERE tablename LIKE 'dsw\\_tgt\\_\\_stg\\_%'",
         )[0] == ("1",)
-        self._q_exec(schema, "DROP TABLE dsw_tgt__dsw_deadbeef_cafe0123babe")
+        self._q_exec(schema, f"DROP TABLE {ghost}")
 
         # append mode appends; overwrite mode replaces atomically
         self._writer(df.limit(50), schema, "dsw_tgt", "append")
@@ -1571,7 +1741,7 @@ class TestCdcLoopEndToEnd:
             assert cur.fetchall() == [("old7",)]  # untouched
             cur.execute(
                 "SELECT count(*) FROM pg_tables"
-                " WHERE tablename LIKE 'ob\\_tgt\\_\\_cdc\\_%'"
+                " WHERE tablename LIKE 'ob\\_tgt\\_\\_stg\\_%'"
             )
             assert cur.fetchall() == [("0",)]  # no stage left behind
         conn.close()
@@ -1732,7 +1902,7 @@ class TestStreamRestartResume:
         # no stage tables left behind by either incarnation
         assert q1(
             "SELECT count(*) FROM pg_tables"
-            " WHERE tablename LIKE 'rr\\_tgt\\_\\_cdc\\_%'"
+            " WHERE tablename LIKE 'rr\\_tgt\\_\\_stg\\_%'"
         ) == [("0",)]
 
 

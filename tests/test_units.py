@@ -2,22 +2,23 @@
 serialization, range planning, routing — the testable cores of the sink,
 HDF source, and orchestration."""
 
-import io
-
+import pyarrow as pa
 import pytest
 
 from pandas_to_postgres_spark.orchestration import resolve_routing
 from pandas_to_postgres_spark.sinks.postgres_copy import (
     ForeignKey,
     TargetTable,
+    _ArrowCsvStream,
     analyze_sql,
     copy_freeze_sql,
     copy_sql,
     create_fk_sql,
     create_pk_sql,
-    csv_chunks,
     drop_fk_sql,
     drop_pk_sql,
+    stage_name,
+    stage_pattern,
     truncate_sql,
 )
 from pandas_to_postgres_spark.sources.hdf import plan_ranges
@@ -71,27 +72,52 @@ class TestSqlBuilders:
         assert copy_freeze_sql(T).endswith("FREEZE")
 
 
-class TestCsvChunks:
-    def test_null_becomes_empty_field(self):
-        # the cast_pandas obligation: NULL → empty CSV field → SQL NULL
-        chunks = list(csv_chunks([(1, None), (2, "x")], ["a", "b"]))
-        assert len(chunks) == 1
-        assert chunks[0].getvalue() == "1,\n2,x\n"
+def _stream(*batches):
+    return _ArrowCsvStream(iter(batches))
 
-    def test_chunk_boundaries(self):
-        # reference `df_generator`: exact multiples → no trailing empty chunk
-        rows = [(i,) for i in range(20)]
-        chunks = list(csv_chunks(rows, ["a"], chunk_rows=10))
-        assert len(chunks) == 2
-        assert all(c.getvalue().count("\n") == 10 for c in chunks)
 
-    def test_empty_input_yields_nothing(self):
-        assert list(csv_chunks([], ["a"], chunk_rows=10)) == []
+class TestArrowCsvStream:
+    B = pa.RecordBatch.from_pydict(
+        {"a": pa.array([1, None, 3], pa.int64()), "b": ["x", None, ""]}
+    )
+
+    def test_null_is_empty_field_and_empty_string_quoted(self):
+        # the cast_pandas obligation: NULL → empty CSV field → SQL NULL,
+        # while "" stays a distinct (quoted) empty string
+        s = _stream(self.B)
+        assert s.read() == b'1,"x"\n,\n3,""\n'
+        assert s.rows == 3
 
     def test_no_header(self):
-        (chunk,) = csv_chunks([(1, 2)], ["a", "b"])
-        assert isinstance(chunk, io.StringIO)
-        assert "a" not in chunk.getvalue()
+        assert b"a" not in _stream(self.B).read()
+
+    def test_empty_iterator_yields_nothing(self):
+        s = _stream()
+        assert s.read() == b"" and s.read(7) == b"" and s.rows == 0
+
+    def test_small_reads_reassemble(self):
+        whole = _stream(self.B, self.B).read()
+        s = _stream(self.B, self.B)
+        parts = list(iter(lambda: s.read(4), b""))
+        assert max(map(len, parts)) == 4 and len(parts) > 2
+        assert b"".join(parts) == whole and s.rows == 6
+
+
+class TestStageNames:
+    TABLE = "t" * 60
+
+    def test_fit_distinct_and_scoped(self):
+        import re
+
+        names = [stage_name(self.TABLE, "s1", p) for p in (0, 1, 2**31 - 1)]
+        assert all(len(n.encode()) <= 63 for n in names)
+        assert len(set(names)) == 3
+        own = re.compile(stage_pattern(self.TABLE, "s1"))
+        other = re.compile(stage_pattern(self.TABLE, "s2"))
+        assert all(own.search(n) and not other.search(n) for n in names)
+        # a long name sharing the 32-byte head is another table
+        assert not own.search(stage_name(self.TABLE + "x", "s1", 0))
+        assert not own.search(names[0] + "_preview")
 
 
 class TestPlanRanges:
