@@ -6,6 +6,21 @@ local[32] test runs — on a real cluster it should be ~2-3x total executor core
 or left to AQE coalescing. Arrow is enabled because every pandas interop path
 (mapInPandas / pandas_udf, used by the HDF5 source and the multimodal
 operators) moves data through Arrow record batches.
+
+Python workers fork from `worker_daemon` (``spark.python.daemon.module``).
+Before every task the stock PySpark worker calls
+``importlib.invalidate_caches()``, and on Python 3.10+ that makes each
+``zipimporter`` re-read its archive's whole central directory: one per
+pyspark subpackage imported from ``pyspark.zip`` (~1.3k entries) plus one
+for the Spark core jar. On 4 cores that call took ~180 ms of a ~240 ms
+no-op ``mapInPandas`` task. The daemon freezes only the Spark archives on
+the worker's ``sys.path`` at its start (``pyspark.zip``,
+``py4j-*-src.zip``, ``spark-core_*.jar``), which cannot change while a
+worker lives; every other finder — the SparkFiles directory,
+``addPyFile`` archives — is still invalidated per task. The package root
+goes on ``spark.executorEnv.PYTHONPATH`` so workers import the daemon
+whatever the driver's cwd; on a cluster the package must be importable on
+the executors, as every UDF here already requires.
 """
 
 from __future__ import annotations
@@ -13,6 +28,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "pandas_to_postgres_spark") -> SparkSession:
@@ -40,5 +57,7 @@ def get_spark(app_name: str = "pandas_to_postgres_spark") -> SparkSession:
         # parquet scans: vectorized reader on, sane split size for local runs
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "pandas_to_postgres_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()

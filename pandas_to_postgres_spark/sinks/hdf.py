@@ -113,19 +113,15 @@ def load_hdf_dir(
     probe = hdf5_pandas.read_hdf(files[0], key, 0, 1).reset_index(drop=True)
     schema = spark.createDataFrame(probe).schema
 
-    ranges = spark.createDataFrame(
-        tasks, "file string, start long, stop long"
-    ).repartition(len(tasks))
-
     def read_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for file, start, stop in pdf.itertuples(index=False):
+            for i in pdf["id"]:
+                file, start, stop = tasks[i]
                 if stop > start:
-                    yield hdf5_pandas.read_hdf(
-                        file, key, int(start), int(stop)
-                    ).reset_index(drop=True)
+                    yield hdf5_pandas.read_hdf(file, key, start, stop).reset_index(drop=True)
 
-    return ranges.mapInPandas(read_ranges, schema=schema)
+    ids = spark.range(len(tasks), numPartitions=len(tasks))
+    return ids.mapInPandas(read_ranges, schema=schema)
 
 
 def write_hdf_single(

@@ -7,7 +7,7 @@ Spark has no native HDF5 source. The reference's three strategies
   into pandas → here ``spark.createDataFrame(read_hdf(...))``.
 - Big / range scan (`BigHDFTableCopy.hdf_to_pg`, `copy_hdf.py:175-230`):
   ``pd.read_hdf(file, key, start, stop)`` slices of ``hdf_chunksize`` rows.
-  The distributed generalization: ``spark.range(0, nrows, chunk)`` →
+  The distributed generalization: ``spark.range(n_ranges)`` →
   ``mapInPandas`` where EACH SPARK TASK performs one range read. The
   reference's sequential loop becomes a partition-parallel scan — this is
   the design the reference's own docstring reaches toward
@@ -107,19 +107,16 @@ def load_hdf_distributed(
     probe = read_hdf_range(file_name, key, 0, max(1, min(1, nrows)))
     schema = spark.createDataFrame(probe.reset_index(drop=True)).schema
 
-    ranges_df = spark.createDataFrame(ranges, "start long, stop long").repartition(
-        len(ranges)
-    )
-
     def read_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for start, stop in pdf.itertuples(index=False):
+            for i in pdf["id"]:
+                start, stop = ranges[i]
                 if stop > start:
-                    yield read_hdf_range(
-                        file_name, key, int(start), int(stop)
-                    ).reset_index(drop=True)
+                    yield read_hdf_range(file_name, key, start, stop).reset_index(drop=True)
 
-    return ranges_df.mapInPandas(read_ranges, schema=schema)
+    # range i -> task i: spark.range splits evenly, so no exchange is needed
+    ids = spark.range(len(ranges), numPartitions=len(ranges))
+    return ids.mapInPandas(read_ranges, schema=schema)
 
 
 def hdf_keys(file_name: str) -> list[str]:

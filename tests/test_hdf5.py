@@ -236,6 +236,8 @@ class TestSparkSources:
         assert np.allclose(got["val"].values, df["val"].values)
         assert (got["name"].values == df["name"].values).all()
         assert (got["ok"].values == df["ok"].values).all()
+        # range i is read by task i straight off spark.range: no shuffle
+        assert "Exchange" not in sdf._jdf.queryExecution().executedPlan().toString()
 
     def test_load_hdf_small(self, spark, h5):
         sdf = hdf.load_hdf_small(spark, h5, "data")
@@ -295,12 +297,9 @@ class TestHdfSink:
         nparts = write_hdf_dir(sdf, out, key="t", chunk_rows=128, complevel=4)
         assert 1 <= nparts <= 6
         assert len(os.listdir(out)) == nparts
-        back = (
-            load_hdf_dir(spark, out, key="t", chunk_rows=300)
-            .toPandas()
-            .sort_values("id")
-            .reset_index(drop=True)
-        )
+        loaded = load_hdf_dir(spark, out, key="t", chunk_rows=300)
+        back = loaded.toPandas().sort_values("id").reset_index(drop=True)
+        assert "Exchange" not in loaded._jdf.queryExecution().executedPlan().toString()
         assert len(back) == 2000
         assert (back["id"].values == df["id"].values).all()
         assert np.allclose(back["val"].values, df["val"].values)
