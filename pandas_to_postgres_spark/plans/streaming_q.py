@@ -505,17 +505,14 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pandas_to_postgres_spark.sources.parquet import load_table
     from pandas_to_postgres_spark.streaming.sink import stream_to_batch_sink
 
-    # width-corrected shared source (streaming/events.py::_event_stream):
+    # width-corrected shared source (streaming/events.py::_event_drain):
     # file-bound microbatches widen so the per-row hash fold below runs
     # pool-wide, not one task per source file (no-op at multi-file
     # scale); the ts normalization it adds is pruned away by the
     # optimizer when unused. The tight rows-per-task target reflects the
     # per-row md5+conv cost — far heavier than the windowed counts the
     # default target is sized for (r11: the volume-aware gate).
-    from pandas_to_postgres_spark.streaming.events import (
-        _event_stream,
-        _scaled_state_partitions,
-    )
+    from pandas_to_postgres_spark.streaming.events import _event_drain
 
     base = tempfile.mkdtemp(prefix="stream_hll_")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
@@ -523,8 +520,8 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     def writer(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out)
 
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir, target_rows=8192)
+    with _event_drain(spark, sf_dir, target_rows=8192) as drain:
+        stream = drain.stream()
         hv = F.conv(
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
             16,
@@ -644,17 +641,14 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pandas_to_postgres_spark.sources.parquet import load_table
     from pandas_to_postgres_spark.streaming.sink import stream_to_batch_sink
 
-    # width-corrected shared source (streaming/events.py::_event_stream):
+    # width-corrected shared source (streaming/events.py::_event_drain):
     # file-bound microbatches widen so the 4x per-row md5 cell hashing
     # below runs pool-wide, not one task per source file (no-op at
     # multi-file scale); the ts normalization it adds is pruned away by
     # the optimizer when unused. Tight rows-per-task target: the per-row
     # work here is 4 md5+conv folds, far heavier than a windowed count
     # (r11: the volume-aware gate).
-    from pandas_to_postgres_spark.streaming.events import (
-        _event_stream,
-        _scaled_state_partitions,
-    )
+    from pandas_to_postgres_spark.streaming.events import _event_drain
 
     def cell(j_col, key_col):
         return (
@@ -683,8 +677,8 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def writer(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out)
 
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir, target_rows=8192)
+    with _event_drain(spark, sf_dir, target_rows=8192) as drain:
+        stream = drain.stream()
         counters_stream = (
             stream.select("user_id", rows4)
             .select("j", cell(F.col("j"), F.col("user_id")).alias("c"))

@@ -49,10 +49,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_raw_events(spark, sf_dir)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts",
@@ -62,7 +60,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(path)
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` as stored, for the batch and streaming readers
+    to normalize: a TIMESTAMP(NANOS) ``ts`` reads as a long through the
+    legacy conf set here (the one place the package sets it), which must
+    be set BEFORE the read or Spark rejects the column."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -14,12 +14,18 @@ a real sink would use ``update``/``append`` with checkpointing.
 
 from __future__ import annotations
 
+import glob
+import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pandas_to_postgres_spark.sources.parquet import normalize_event_ts
+from pandas_to_postgres_spark.sources.parquet import (
+    normalize_event_ts,
+    read_raw_events,
+)
 
 
 def windowed_event_counts(
@@ -35,212 +41,218 @@ def windowed_event_counts(
 
     Returns the final result as a static DataFrame: (window_start string,
     event_type, n, total_value)."""
-    with _scaled_state_partitions(spark, sf_dir):
-        agg = _windowed_agg(spark, sf_dir, window_duration, watermark, slide)
-        table = f"stream_events_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    with _event_drain(spark, sf_dir) as drain:
+        agg = _windowed_agg(drain.stream(), window_duration, watermark, slide)
+        return _memory_drain(agg, "complete")
 
 
-#: default rows-per-task target for the microbatch widening below —
-#: overridable per session via ``spark.graft.stream.targetRowsPerTask``
-#: (deployment knob; the default keeps tiny local batches narrow while a
-#: genuinely large single-file batch still spreads)
-_STREAM_TARGET_ROWS = 65536
-
-#: default rows-per-STATE-PARTITION target for the stateful drains —
-#: overridable via ``spark.graft.stream.targetRowsPerStatePartition``.
-#: Each state partition is a separate state-store instance whose
-#: open/snapshot/commit runs PER MICRO-BATCH (including the 0-input
-#: watermark-eviction batch); measured at sf0.1, the stream-stream join
-#: spent ~4.7 s in a 0-row batch doing nothing but 32 partitions x 2
-#: sides of store maintenance — scaled to the batch volume it ran 3.2 s
-#: end to end (was ~11.7 s). 64k rows/partition amortizes a store's
-#: ~10-30 ms fixed cost well past it (measured sweep: the 800k-row 8x
-#: drain ran 445k rows/s at 32 partitions, 597k at 13, 685k at 4; the
-#: 100k-row sf0.1 drain is flat 78-84k across 2-7 partitions)
-_STREAM_TARGET_STATE_ROWS = 65536
+def _memory_drain(df: DataFrame, output_mode: str) -> DataFrame:
+    """Run the streaming ``df`` to completion (AvailableNow) into a memory
+    sink and return the sink's table as a static DataFrame."""
+    table = f"stream_drain_{uuid.uuid4().hex[:8]}"
+    (
+        df.writeStream.format("memory")
+        .queryName(table)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(table)
 
 
-def _source_rows(path: str) -> int | None:
-    """Total rows of a file-stream source from its parquet footers
-    (driver-side metadata, no job); None when unknowable."""
-    import glob as _glob
-    import os as _os
+#: rows per task for the microbatch widening: keeps tiny local batches
+#: narrow while a genuinely large single-file batch still spreads
+_TASK_ROWS = 65536
+
+#: rows per STATE PARTITION for the stateful drains. Each state partition
+#: is a separate state-store instance whose open/snapshot/commit runs PER
+#: MICRO-BATCH (including the 0-input watermark-eviction batch); measured
+#: at sf0.1, the stream-stream join spent ~4.7 s in a 0-row batch doing
+#: nothing but 32 partitions x 2 sides of store maintenance — scaled to
+#: the batch volume it ran 3.2 s end to end (was ~11.7 s). 64k
+#: rows/partition amortizes a store's ~10-30 ms fixed cost well past it
+#: (measured sweep: the 800k-row 8x drain ran 445k rows/s at 32
+#: partitions, 597k at 13, 685k at 4; the 100k-row sf0.1 drain is flat
+#: 78-84k across 2-7 partitions)
+_STATE_ROWS = 65536
+
+#: held by each drain from its volume probe to its conf restore, so two
+#: drains in one session cannot interleave their shuffle.partitions swaps
+#: (B saving A's narrowed value and restoring it after A has restored)
+_SWAP_LOCK = threading.Lock()
+
+
+def _batch_volume(
+    path: str, pool: int, target_rows: int, parts: int
+) -> tuple[int, int | None]:
+    """One listing pass over a file-stream source: ``(files, rows)``, rows
+    summed from the parquet footers (driver-side metadata, no job).
+
+    Footers are read only until both gates below are settled, so at scale
+    the probe reads few or none: the state-partition swap is a no-op once
+    rows exceed ``(parts - 1) * _STATE_ROWS``; the widening needs no
+    footer when ``files >= pool`` (or ``target_rows <= 0``) and is at
+    full pool width once rows reach ``pool * target_rows``. ``rows`` is
+    then a lower bound that decides both gates as the full sum would.
+    ``rows`` is None when the source has no files or a needed footer is
+    unreadable (non-parquet fixture, concurrent writer)."""
+    import pyarrow.parquet as pq
 
     files: list[str] = []
-    for p in _glob.glob(path):
-        if _os.path.isdir(p):
+    for p in glob.glob(path):
+        if os.path.isdir(p):
             files.extend(
-                _os.path.join(p, f)
-                for f in _os.listdir(p)
-                if f.endswith(".parquet")
+                os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
             )
         else:
             files.append(p)
     if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
+        return 0, None
+    widens = target_rows > 0 and len(files) < pool
+    enough = max(
+        (parts - 1) * _STATE_ROWS + 1 if parts > 1 else 0,
+        pool * target_rows if widens else 0,
+    )
+    rows = 0
+    for f in files:
+        if rows >= enough:
+            break
+        try:
+            rows += pq.ParquetFile(f).metadata.num_rows
+        except Exception:
+            return len(files), None
+    return len(files), rows
 
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
+
+def _gates(
+    spark: SparkSession, sf_dir: str, target_rows: int, parts: int = 1
+) -> tuple[int, int]:
+    """``(state_parts, width)`` for an events drain, from one
+    :func:`_batch_volume` probe; 0 means leave that gate alone.
+
+    ``state_parts`` scales the state-store partition count (pinned from
+    ``spark.sql.shuffle.partitions`` at query start, currently ``parts``)
+    to the batch volume, ``ceil(rows / _STATE_ROWS)``, when that is
+    narrower (guide §2: derive partitioning from the data; a 100k-row
+    drain does not need 32 state stores ticking over per micro-batch).
+
+    ``width`` repartitions a file-bound microbatch. A streaming file
+    source parallelizes by FILE, so a batch over few files runs its
+    scan→normalize→partial-aggregate pipeline on few cores (measured at
+    sf0.1: the single-file events source put ~5.8 s of the 7.6 s drain in
+    a one-task addBatch). Width is ``min(pool, ceil(rows / target_rows))``
+    and fires only when it at least DOUBLES the file-granted parallelism —
+    below that the raw-row exchange costs more than the extra tasks win
+    back. ``target_rows`` lets per-row-heavy consumers (md5 sketch folds)
+    widen sooner; ``target_rows <= 0`` disables the widening for
+    consumers whose FIRST operator is a stateful exchange (the
+    stream-stream join), where a pre-shuffle widening is pure cost.
+
+    Unknown volume leaves both gates alone: spreading a batch of unknown
+    size to the full pool makes a small batch pay a pool-wide raw-row
+    shuffle that costs more than it buys (the r10 stream-tier regression,
+    20%, had that shape)."""
+    pool = spark.sparkContext.defaultParallelism
+    files, rows = _batch_volume(
+        f"{sf_dir}/events.parque[t]", pool, target_rows, parts
+    )
+    if rows is None:
+        return 0, 0
+    state = max(1, -(-rows // _STATE_ROWS))
+    width = min(pool, -(-rows // target_rows)) if target_rows > 0 else 0
+    return (
+        state if state < parts else 0,
+        width if files < pool and width >= 2 * files else 0,
+    )
 
 
-class _scaled_state_partitions:
-    """Context manager: scale ``spark.sql.shuffle.partitions`` (which
-    pins a streaming query's STATE-STORE partition count at start) to
-    the batch volume — ``min(conf, ceil(rows / target))`` — and restore
-    the session conf afterwards (guide §2: derive partitioning from the
-    data; a 100k-row drain does not need 32 state stores ticking over
-    per micro-batch). No-op when the volume is unknown or already fills
-    the configured width — at 100 TB the row count blows past the
-    target and the cluster's own shuffle.partitions stands. The conf
-    swap is visible to anything else PLANNING in this session during
-    the drain; the bench and driver run queries serially."""
+class _event_drain:
+    """Context manager around one stateful events drain: probes the batch
+    volume once (:func:`_gates`), narrows ``spark.sql.shuffle.partitions``
+    to the state-partition gate for the drain and restores it on exit,
+    and hands out event streams widened by the width gate
+    (:meth:`stream`). At 100 TB the row count blows past both targets and
+    the cluster's own shuffle.partitions and file parallelism stand.
 
-    def __init__(self, spark: SparkSession, sf_dir: str):
-        self.spark = spark
-        self.path = f"{sf_dir}/events.parque[t]"
+    The swap is session-wide: anything else PLANNING in this session
+    during the drain sees it. Drains serialize on ``_SWAP_LOCK`` (not
+    reentrant: a drain must not start another drain inside its block)."""
+
+    def __init__(
+        self, spark: SparkSession, sf_dir: str, target_rows: int = _TASK_ROWS
+    ):
+        self.spark, self.sf_dir, self.target_rows = spark, sf_dir, target_rows
         self.old: str | None = None
+        self.width = 0
 
     def __enter__(self):
-        spark = self.spark
-        rows = _source_rows(self.path)
-        if rows is None:
-            return self
-        conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        target = int(
-            spark.conf.get(
-                "spark.graft.stream.targetRowsPerStatePartition",
-                str(_STREAM_TARGET_STATE_ROWS),
+        _SWAP_LOCK.acquire()
+        try:
+            conf = self.spark.conf
+            old = conf.get("spark.sql.shuffle.partitions")
+            state, self.width = _gates(
+                self.spark, self.sf_dir, self.target_rows, int(old)
             )
-        )
-        w = max(1, -(-rows // max(target, 1)))
-        if w < conf_parts:
-            self.old = str(conf_parts)
-            spark.conf.set("spark.sql.shuffle.partitions", str(w))
+            if state:
+                self.old = old
+                conf.set("spark.sql.shuffle.partitions", str(state))
+        except BaseException:
+            _SWAP_LOCK.release()
+            raise
         return self
 
     def __exit__(self, *exc):
-        if self.old is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+        try:
+            if self.old is not None:
+                self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
+        finally:
+            _SWAP_LOCK.release()
         return False
 
-
-def _stream_width(
-    spark: SparkSession, path: str, target_rows: int | None = None
-) -> int:
-    """Scale-adaptive microbatch width for a file-stream source (guide §2:
-    derive partitioning from the data, not a core-count constant).
-
-    A streaming file source parallelizes by FILE, so a batch over few
-    files runs its scan→normalize→partial-aggregate pipeline on few cores
-    (measured at sf0.1: the single-file events source put ~5.8 s of the
-    7.6 s drain in a one-task addBatch). r10 widened every few-file batch
-    to the FULL pool, which regressed the driver's stream tier 20%: a
-    100k-row batch paid a 32-partition raw-row shuffle whose overhead
-    exceeded the parallelism it bought (r10 verdict item 1). The gate is
-    therefore VOLUME-aware now: width = min(pool, ceil(rows / target))
-    with rows read from the parquet footers during the same listing pass
-    (driver-side metadata, no job), and the repartition only fires when
-    that width at least DOUBLES the file-granted parallelism — below
-    that, the exchange costs more than the extra tasks win back. Returns
-    0 for a no-op: at 100 TB a batch spans >= pool-width files and the
-    early exit keeps this metadata-free; a tiny batch stays narrow.
-    ``target_rows`` lets per-row-heavy consumers (md5 sketch folds) widen
-    sooner than the cheap windowed counts; ``target_rows <= 0`` disables
-    the widening outright — consumers whose FIRST operation is a
-    stateful exchange (the stream-stream join) get their parallelism
-    from that exchange, and a pre-shuffle widening exchange is pure
-    cost there.
-    """
-    import glob as _glob
-    import os as _os
-
-    if target_rows is not None and int(target_rows) <= 0:
-        return 0
-    pool = spark.sparkContext.defaultParallelism
-    n_files = 0
-    for p in _glob.glob(path):
-        if _os.path.isdir(p):
-            n_files += sum(
-                1 for f in _os.listdir(p) if f.endswith(".parquet")
-            )
-        else:
-            n_files += 1
-    if n_files == 0 or n_files >= pool:
-        return 0
-    if target_rows is None:
-        target_rows = int(
-            spark.conf.get(
-                "spark.graft.stream.targetRowsPerTask",
-                str(_STREAM_TARGET_ROWS),
-            )
-        )
-    rows = _source_rows(path)
-    if rows is None:
-        # footers unreadable (non-parquet fixture, concurrent writer):
-        # no volume signal — keep the r10 behavior and spread the batch
-        return pool
-    width = min(pool, -(-rows // max(int(target_rows), 1)))
-    return width if width >= 2 * n_files else 0
+    def stream(self) -> DataFrame:
+        return _event_source(self.spark, self.sf_dir, self.width)
 
 
 def _event_stream(
-    spark: SparkSession, sf_dir: str, target_rows: int | None = None
+    spark: SparkSession, sf_dir: str, target_rows: int = _TASK_ROWS
 ) -> DataFrame:
-    """The events table as a streaming source, width-corrected.
+    """The events stream for drains that keep the session's state sizing:
+    widened by the width gate alone (see :func:`_gates`)."""
+    return _event_source(spark, sf_dir, _gates(spark, sf_dir, target_rows)[1])
 
-    Shared by every §2.9 drain: sets the NANOS-as-long conf BEFORE the
-    schema probe (load-order landmine otherwise), glob-loads the file
-    source, widens file-bound microbatches (see :func:`_stream_width` —
-    the per-row normalize/aggregate/join work otherwise runs on as many
-    cores as the batch has FILES, but only when the batch carries enough
-    ROWS to pay for the raw-row exchange), and normalizes ``ts`` to a
-    watermark-eligible TIMESTAMP. Row placement is irrelevant to every
-    consumer (grouped aggregates with decimal accumulation, key-equality
-    joins, distinct-on-key dedup over full-row duplicates), so the
-    repartition never changes results; at scale it is a no-op because a
-    batch spans >= pool-width files. ``target_rows`` tunes the
-    rows-per-task target for consumers whose per-row work is heavy."""
-    path = f"{sf_dir}/events.parquet"
-    # events.ts is parquet TIMESTAMP(NANOS) — same legacy-long treatment as
-    # the batch source (see sources/parquet.py)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+
+def _event_source(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
+    """The events table as a streaming source: the raw schema comes from
+    :func:`read_raw_events` (which sets the NANOS-as-long conf BEFORE the
+    schema probe), the file source is glob-loaded, repartitioned to
+    ``width`` when nonzero, and ``ts`` normalized to a watermark-eligible
+    TIMESTAMP. Row placement is irrelevant to every consumer (grouped
+    aggregates with decimal accumulation, key-equality joins,
+    distinct-on-key dedup over full-row duplicates), so the repartition
+    never changes results."""
+    raw_schema = read_raw_events(spark, sf_dir).schema
     # the streaming file source needs a directory or glob, not a bare file
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
         .load(f"{sf_dir}/events.parque[t]")
     )
-    w = _stream_width(spark, f"{sf_dir}/events.parque[t]", target_rows)
-    if w:
-        stream = stream.repartition(w)
+    if width:
+        stream = stream.repartition(width)
     return normalize_event_ts(stream)
 
 
 def _windowed_agg(
-    spark: SparkSession,
-    sf_dir: str,
+    stream: DataFrame,
     window_duration: str = "10 minutes",
     watermark: str = "1 hour",
     slide: str | None = None,
 ) -> DataFrame:
-    stream = _event_stream(spark, sf_dir)
     window_col = (
         F.window("ts", window_duration, slide) if slide else F.window("ts", window_duration)
     )
-    agg = (
+    return (
         stream.withWatermark("ts", watermark)
         .groupBy(window_col.alias("w"), "event_type")
         .agg(
@@ -256,7 +268,6 @@ def _windowed_agg(
             "total_value",
         )
     )
-    return agg
 
 
 def session_window_counts(
@@ -277,8 +288,8 @@ def session_window_counts(
     Scale: state is keyed by (user, open session); the watermark bounds it
     to sessions whose close is within ``watermark`` of the stream's event
     time — without it, 100 TB of users would accumulate state forever."""
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        stream = drain.stream()
         agg = (
             stream.withWatermark("ts", watermark)
             .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
@@ -291,16 +302,7 @@ def session_window_counts(
                 "n",
             )
         )
-        table = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+        return _memory_drain(agg, "complete")
 
 
 def windowed_event_counts_foreachbatch(
@@ -326,8 +328,8 @@ def windowed_event_counts_foreachbatch(
         # overwrite wins and equals the drained-stream state
         batch_df.write.mode("overwrite").parquet(out)
 
-    with _scaled_state_partitions(spark, sf_dir):
-        agg = _windowed_agg(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        agg = _windowed_agg(drain.stream())
         q = stream_to_batch_sink(
             agg, writer, checkpoint_dir=ckpt, output_mode="complete"
         )
@@ -351,8 +353,8 @@ def streaming_dedup_events(
     O(stream) — the only formulation that survives an unbounded stream.
     Drained with AvailableNow + append mode; on this static source the
     result equals batch DISTINCT, which is the oracle."""
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        stream = drain.stream()
         deduped = (
             stream.withWatermark("ts", watermark)
             .dropDuplicates(["event_id", "ts"])
@@ -363,16 +365,7 @@ def streaming_dedup_events(
                 F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
             )
         )
-        table = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+        return _memory_drain(deduped, "append")
 
 
 def stream_static_enrichment(
@@ -391,8 +384,8 @@ def stream_static_enrichment(
     """
     from pandas_to_postgres_spark.sources.parquet import load_table
 
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        stream = drain.stream()
         customers = load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment"
         )
@@ -407,16 +400,7 @@ def stream_static_enrichment(
                 .alias("total_value"),
             )
         )
-        table = f"stream_static_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+        return _memory_drain(joined, "complete")
 
 
 def stream_stream_purchase_clicks(
@@ -435,14 +419,14 @@ def stream_stream_purchase_clicks(
     time-range predicate is what lets Spark prune state — an unbounded
     condition would grow state forever.
     """
-    def one_stream(alias: str) -> DataFrame:
-        # target_rows=0: no pre-join widening — the join's own stateful
-        # exchange is this query's first real operator, so a widening
-        # repartition ahead of it is a pure extra raw-row shuffle
-        s = _event_stream(spark, sf_dir, target_rows=0)
-        return s.withWatermark("ts", watermark).alias(alias)
+    # target_rows=0: no pre-join widening — the join's own stateful
+    # exchange is this query's first real operator, so a widening
+    # repartition ahead of it is a pure extra raw-row shuffle
+    with _event_drain(spark, sf_dir, target_rows=0) as drain:
 
-    with _scaled_state_partitions(spark, sf_dir):
+        def one_stream(alias: str) -> DataFrame:
+            return drain.stream().withWatermark("ts", watermark).alias(alias)
+
         p = one_stream("p").filter(F.col("event_type") == "purchase")
         c = one_stream("c").filter(F.col("event_type") == "click")
         joined = p.join(
@@ -455,16 +439,7 @@ def stream_stream_purchase_clicks(
             F.col("p.event_id").alias("purchase_id"),
             F.col("c.event_id").alias("click_id"),
         )
-        table = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+        return _memory_drain(joined, "append")
 
 
 def streaming_dedup_within_watermark(
@@ -484,23 +459,14 @@ def streaming_dedup_within_watermark(
     order dependent; the id set is not), so the AvailableNow drain of
     this static source equals batch DISTINCT event_id — the oracle.
     """
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        stream = drain.stream()
         deduped = (
             stream.withWatermark("ts", watermark)
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id")
         )
-        table = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+        return _memory_drain(deduped, "append")
 
 
 def trending_event_types(
@@ -552,10 +518,8 @@ def windowed_bin_psi(
     Returns one row per window: (window_start, psi). Scale: streaming
     state is windows x bins rows; the scoring joins are bins-sized.
     """
-    import uuid
-
-    with _scaled_state_partitions(spark, sf_dir):
-        stream = _event_stream(spark, sf_dir)
+    with _event_drain(spark, sf_dir) as drain:
+        stream = drain.stream()
         bin_col = F.least(
             F.floor(F.col("value") / bin_width), F.lit(num_bins - 1)
         ).alias("bin")
@@ -571,20 +535,12 @@ def windowed_bin_psi(
                 "n",
             )
         )
-        table = f"stream_psi_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _memory_drain(agg, "complete")
     # materialize: the window spine derives FROM the drained table and
     # joins back to it — on the raw memory-sink relation that is a
     # conflicting-reference self-join; the checkpointed copy self-joins
     # cleanly (and is windows x bins tiny)
-    drained = spark.table(table).localCheckpoint(eager=True)
+    drained = drained.localCheckpoint(eager=True)
 
     from pyspark.sql.window import Window as W
 
@@ -672,13 +628,4 @@ def stream_scd2_enrich(
         & (stream.ts >= dim.valid_from)
         & (stream.ts < dim.valid_to),
     ).select("event_id", "user_id", "tier")
-    table = f"stream_scd2_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    return _memory_drain(joined, "append")

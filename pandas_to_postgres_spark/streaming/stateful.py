@@ -14,16 +14,15 @@ key domain (user_id) is finite.
 
 from __future__ import annotations
 
-import uuid
 from typing import Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pandas_to_postgres_spark.sources.parquet import normalize_event_ts
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pandas_to_postgres_spark.streaming.events import _event_stream, _memory_drain
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -59,15 +58,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the final per-user totals (one row per user per micro-batch that
     touched the user; with a single AvailableNow batch, exactly one row per
     user)."""
-    path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .load(f"{sf_dir}/events.parque[t]")
-    )
-    stream = normalize_event_ts(stream)
+    stream = _event_stream(spark, sf_dir, target_rows=0)
 
     updated = stream.groupBy("user_id").applyInPandasWithState(
         _update_user_totals,
@@ -76,17 +67,8 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    table = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    q = (
-        updated.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = _memory_drain(updated, "update")
     # keep only the last emission per user (idempotent under multi-batch runs)
-    out = spark.table(table)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -169,32 +151,15 @@ def stateful_user_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates touch only the event types present in the batch. ``timeMode``
     'ProcessingTime' + ``registerTimer`` would bound idle-key state at
     100 TB; the drain here is single-batch so no timer fires."""
-    path = f"{sf_dir}/events.parquet"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .load(f"{sf_dir}/events.parque[t]")
-    )
-    stream = normalize_event_ts(stream)
+    stream = _event_stream(spark, sf_dir, target_rows=0)
     updated = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=user_type_counts_processor(),
         outputStructType=TWS_OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
     )
-    table = f"tws_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        updated.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = _memory_drain(updated, "update")
     # last emission per (user, type) wins — idempotent under multi-batch runs
-    out = spark.table(table)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.col("n").desc())

@@ -1,13 +1,15 @@
-"""Round-11 optimization measurement harness (guide §1).
+"""Optimization measurement harness (guide §1).
 
 Isolates each named query with the noop sink (times the computation, not
 the sink), records min-of-2 warm seconds after one warm-up run, and dumps
-``.explain("formatted")`` to plans/r11/<query>_<tag>.txt so plan claims in
-OPTIMIZATION_r11.md are checkable without running Spark.
+``.explain("formatted")`` to plans/<round>/<query>_<tag>.txt so plan
+claims in OPTIMIZATION_<round>.md are checkable without running Spark.
 
 Usage:
-    python scripts/measure_r11.py <tag> [query ...]
-        tag    = suffix for the plan files (before / after)
+    python scripts/measure.py <round> <tag> [query ...]
+        round  = plan directory under plans/ (r10, r11, ...)
+        tag    = suffix for the plan files (before / after; "none" =
+                 timing-only sweep, no plan files)
         query  = registry names; default = the bench HEADLINE tuple
 """
 
@@ -30,23 +32,26 @@ def noop(df) -> None:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    if len(sys.argv) > 2:
-        names = sys.argv[2:]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    if len(sys.argv) > 3:
+        names = sys.argv[3:]
     else:
         from bench import HEADLINE
 
         names = list(HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("measure_r11")
+    spark = get_spark(f"measure_{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["count_star"].fn(spark, sf_dir).collect()  # spin-up
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     results = {}
     for name in names:
         fn = REGISTRY[name].fn
-        spark.sparkContext.setJobDescription(f"r11-measure:{name}")
+        spark.sparkContext.setJobDescription(f"{rnd}-measure:{name}")
         # construction is INSIDE the cold timer (same convention as
         # bench.py): PySpark 4.1.2 materializes localCheckpoint at
         # construction time even with eager=False, so timing only the

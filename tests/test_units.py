@@ -484,136 +484,199 @@ class TestAdpcmIma:
         assert 0.6 < row["feature"][1] < 0.8  # sine RMS ~ 0.707
 
 
-class TestStreamWidth:
-    """r10/r11: the scale-adaptive microbatch widening for file-stream
-    drains (streaming/events.py::_stream_width) — widen only when the
-    source has fewer files than the pool AND carries enough rows (parquet
-    footer metadata) that the extra tasks at least double the file-granted
-    parallelism; never at multi-file scale, never on a tiny batch."""
+def _pool_min(n):
+    return lambda pool: min(pool, n)
 
-    @staticmethod
-    def _write_pq(path, rows):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        pq.write_table(pa.table({"x": list(range(rows))}), str(path))
+class TestEventDrainGates:
+    """The event-stream drains' one volume probe
+    (streaming/events.py::_batch_volume) and the two decisions read off
+    it: the state-store partition count the drain runs with —
+    ceil(rows / 65536) when narrower than spark.sql.shuffle.partitions,
+    restored on exit — and the microbatch widening — min(pool,
+    ceil(rows / target_rows)) when the source has fewer files than the
+    pool and the width at least doubles the file count. Unknown volume
+    leaves both gates alone."""
 
-    def test_large_single_file_widens_by_volume(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        f = tmp_path / "events.parquet"
-        self._write_pq(f, 5000)
+    #: id -> (layout, target_rows, shuffle.partitions,
+    #:        (partitions inside the drain, width))
+    #: layout: rows per file of events.parquet (one entry: a file; more: a
+    #: directory of parts), "x" = unreadable footer, "pool" = one
+    #: unreadable file per pool slot, None = no source; a callable width
+    #: is a function of the pool
+    CASES = {
         # 5000 rows / 1000-row target = 5 tasks >= 2x the 1 file
-        assert _stream_width(spark, str(f), target_rows=1000) == min(
-            spark.sparkContext.defaultParallelism, 5
-        )
-
-    def test_tiny_single_file_stays_narrow(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        f = tmp_path / "events.parquet"
-        self._write_pq(f, 100)
-        # 100 rows / 1000-row target -> width 1 < 2x files: no exchange
-        assert _stream_width(spark, str(f), target_rows=1000) == 0
-
-    def test_marginal_gain_stays_narrow(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        d = tmp_path / "events.parquet"
-        d.mkdir()
-        for i in range(4):
-            self._write_pq(d / f"part-{i:05d}.parquet", 1500)
+        "large_single_file_widens_by_volume": ([5000], 1000, 1, (1, _pool_min(5))),
+        # width 1 < 2x files: no exchange
+        "tiny_single_file_stays_narrow": ([100], 1000, 1, (1, 0)),
         # 6000 rows / 1000 = 6 tasks < 2x the 4 files: not worth a shuffle
-        assert _stream_width(spark, str(d), target_rows=1000) == 0
-
-    def test_unreadable_footers_fall_back_to_pool(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        f = tmp_path / "events.parquet"
-        f.write_bytes(b"x")  # not parquet: no volume signal -> r10 gate
-        assert (
-            _stream_width(spark, str(f))
-            == spark.sparkContext.defaultParallelism
-        )
-
-    def test_pool_width_files_disable_the_repartition(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        d = tmp_path / "events.parquet"
-        d.mkdir()
-        for i in range(spark.sparkContext.defaultParallelism):
-            (d / f"part-{i:05d}.parquet").write_bytes(b"x")
-        assert _stream_width(spark, str(d)) == 0
-
-    def test_missing_path_is_a_noop(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import _stream_width
-
-        assert _stream_width(spark, str(tmp_path / "nope.parquet")) == 0
-
-    def test_nonpositive_target_disables_widening(self, spark, tmp_path):
+        "marginal_gain_stays_narrow": ([1500] * 4, 1000, 1, (1, 0)),
+        # no volume signal: stay narrow, keep the configured state width
+        "unreadable_footers_stay_narrow": (["x"], 65536, 4, (4, 0)),
+        "pool_width_files_disable_the_repartition": ("pool", 65536, 1, (1, 0)),
         # stream-stream join opt-out: its first operator is the stateful
         # join exchange, so a pre-shuffle widening is pure cost
-        from pandas_to_postgres_spark.streaming.events import _stream_width
+        "nonpositive_target_disables_widening": ([5000], 0, 1, (1, 0)),
+        "small_source_narrows_and_restores": ([1000], 65536, 4, (1, 0)),
+        # ceil(70000 / 65536) = 2 already fills the 2 configured
+        "large_source_is_a_noop": ([70000], 0, 2, (2, 0)),
+        # the sf0.01 events file: 1 state partition; the sketch drains'
+        # 8192-row target widens it, the default target does not
+        "sf001_events_default_target": ([10000], 65536, 4, (1, 0)),
+        "sf001_events_sketch_target": ([10000], 8192, 4, (1, _pool_min(2))),
+    }
 
-        f = tmp_path / "events.parquet"
-        self._write_pq(f, 5000)
-        assert _stream_width(spark, str(f), target_rows=0) == 0
+    @staticmethod
+    def _write_source(sf, layout, pool):
+        import pyarrow.parquet as pq
+
+        if layout is None:
+            return
+        if layout == "pool":
+            layout = ["x"] * pool
+        path = sf / "events.parquet"
+        paths = [path]
+        if len(layout) > 1:
+            path.mkdir()
+            paths = [path / f"part-{i:05d}.parquet" for i in range(len(layout))]
+        for p, rows in zip(paths, layout):
+            if rows == "x":
+                p.write_bytes(b"x")
+            else:
+                pq.write_table(pa.table({"x": pa.array(range(rows))}), str(p))
+
+    @pytest.fixture
+    def partitions(self, spark):
+        """Set spark.sql.shuffle.partitions for one test, then put the
+        session's own value back."""
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        yield lambda n: spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    @pytest.mark.parametrize("case", list(CASES))
+    def test_decisions(self, spark, tmp_path, partitions, case):
+        from pandas_to_postgres_spark.streaming.events import _event_drain
+
+        layout, target, parts, (want_parts, want_width) = self.CASES[case]
+        pool = spark.sparkContext.defaultParallelism
+        self._write_source(tmp_path, layout, pool)
+        partitions(parts)
+        with _event_drain(spark, str(tmp_path), target) as drain:
+            inside = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(parts)
+        if callable(want_width):
+            want_width = want_width(pool)
+        assert (inside, drain.width) == (want_parts, want_width)
+
+    def test_probe_stops_reading_footers_once_settled(
+        self, spark, tmp_path, partitions, monkeypatch
+    ):
+        import types
+
+        import pyarrow.parquet as pq
+
+        from pandas_to_postgres_spark.streaming.events import (
+            _batch_volume,
+            _event_drain,
+        )
+
+        reads = []
+
+        def footer(path):
+            reads.append(path)
+            return types.SimpleNamespace(
+                metadata=types.SimpleNamespace(num_rows=40000)
+            )
+
+        monkeypatch.setattr(pq, "ParquetFile", footer)
+        d = tmp_path / "events.parquet"
+        d.mkdir()
+        for i in range(8):
+            (d / f"part-{i}.parquet").write_bytes(b"")
+        # 3 configured state partitions: the swap is settled (a no-op)
+        # once rows exceed 2 x 65536, i.e. after 4 of the 8 footers
+        partitions(3)
+        with _event_drain(spark, str(tmp_path), target_rows=0):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert len(reads) == 4
+        # files >= pool and no state gate: no footer at all
+        reads.clear()
+        assert _batch_volume(str(d), 8, 65536, 1)[0] == 8
+        assert reads == []
+
+    def test_overlapping_drains_restore_the_session(
+        self, spark, tmp_path, partitions
+    ):
+        """Drain A (200k rows) narrows 32 -> 4; drain B (1k rows) starting
+        while A is open must not save A's 4 as the value to restore (B
+        would put it back after A restored 32). Drains serialize, so each
+        sees the session's own 32."""
+        import threading
+
+        import pyarrow.parquet as pq
+
+        from pandas_to_postgres_spark.streaming.events import _event_drain
+
+        for name, rows in (("a", 200_000), ("b", 1000)):
+            (tmp_path / name).mkdir()
+            pq.write_table(
+                pa.table({"x": pa.array(range(rows))}),
+                str(tmp_path / name / "events.parquet"),
+            )
+        a_in, b_in, a_out = (threading.Event() for _ in range(3))
+        seen, errors = {}, []
+
+        def drain(name, entered, wait_for, timeout):
+            try:
+                with _event_drain(spark, str(tmp_path / name)):
+                    seen[name] = spark.conf.get("spark.sql.shuffle.partitions")
+                    entered.set()
+                    # unserialized, B enters while A waits here and
+                    # exits after A has restored
+                    wait_for.wait(timeout)
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+            finally:
+                if name == "a":
+                    a_out.set()
+
+        partitions(32)
+        a = threading.Thread(target=drain, args=("a", a_in, b_in, 1))
+        b = threading.Thread(target=drain, args=("b", b_in, a_out, 30))
+        a.start()
+        a_in.wait(30)
+        b.start()
+        a.join(60)
+        b.join(60)
+        assert not a.is_alive() and not b.is_alive()
+        assert errors == []
+        assert seen == {"a": "4", "b": "1"}
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+
+class TestStreamWidth:
+    """The microbatch widening (streaming/events.py::_gates, width) of a
+    drain whose source is missing."""
+
+    def test_missing_path_is_a_noop(self, spark, tmp_path):
+        from pandas_to_postgres_spark.streaming.events import _gates
+
+        assert _gates(spark, str(tmp_path / "nope"), 1000) == (0, 0)
 
 
 class TestScaledStatePartitions:
-    """r11: stateful drains scale their state-store partition count
-    (pinned from spark.sql.shuffle.partitions at query start) to the
-    batch volume — min(conf, ceil(rows/target)) — and restore the conf;
-    no-op when the volume is unknown or already fills the conf width."""
-
-    def test_small_source_narrows_and_restores(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pandas_to_postgres_spark.streaming.events import (
-            _scaled_state_partitions,
-        )
-
-        sf = tmp_path / "sf"
-        sf.mkdir()
-        pq.write_table(
-            pa.table({"x": list(range(1000))}), str(sf / "events.parquet")
-        )
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        with _scaled_state_partitions(spark, str(sf)):
-            # 1000 rows / 16384 target -> 1 state partition
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    def test_large_source_is_a_noop(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pandas_to_postgres_spark.streaming.events import (
-            _scaled_state_partitions,
-        )
-
-        sf = tmp_path / "sf"
-        sf.mkdir()
-        pq.write_table(
-            pa.table({"x": list(range(100))}), str(sf / "events.parquet")
-        )
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        # a 1-row/partition target would need >= conf partitions: no-op
-        spark.conf.set("spark.graft.stream.targetRowsPerStatePartition", "1")
-        try:
-            with _scaled_state_partitions(spark, str(sf)):
-                assert (
-                    spark.conf.get("spark.sql.shuffle.partitions") == before
-                )
-        finally:
-            spark.conf.unset("spark.graft.stream.targetRowsPerStatePartition")
+    """The state-partition swap (streaming/events.py::_event_drain) of a
+    drain whose source is missing."""
 
     def test_missing_source_is_a_noop(self, spark, tmp_path):
-        from pandas_to_postgres_spark.streaming.events import (
-            _scaled_state_partitions,
-        )
+        from pandas_to_postgres_spark.streaming.events import _event_drain
 
         before = spark.conf.get("spark.sql.shuffle.partitions")
-        with _scaled_state_partitions(spark, str(tmp_path / "nope")):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            with _event_drain(spark, str(tmp_path / "nope")) as drain:
+                inside = spark.conf.get("spark.sql.shuffle.partitions")
+            assert (inside, drain.width) == ("4", 0)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
