@@ -1,12 +1,14 @@
 """Registry-wide narrow-stage audit (the round-6 checkpoint-width trap).
 
 Runs every registered query at the given sf tier and flags completed
-stages that ran with <= ``MAX_TASKS`` tasks while burning more than
-``MIN_CPU_S`` seconds of executor CPU — the signature of a CPU-heavy
-stage serialized onto 1-2 cores by AQE's byte-based coalescing or by a
-localCheckpoint that froze a coalesced width (see SCALE.md "Round-6
-performance fix"). Wall times are also reported for anything slower
-than ``SLOW_WALL_S``.
+stages that ran with <= ``min(MAX_TASKS, defaultParallelism - 1)`` tasks
+while burning more than ``MIN_CPU_S`` seconds of executor CPU — the
+signature of a CPU-heavy stage serialized onto 1-2 cores by AQE's
+byte-based coalescing or by a localCheckpoint that froze a coalesced
+width (see SCALE.md "Round-6 performance fix"). A stage with at least
+one task per core slot of the pool is full width, so on a small pool the
+bound drops below ``MAX_TASKS``. Wall times are also reported for
+anything slower than ``SLOW_WALL_S``.
 
 Stage metrics come from the live Spark UI REST API, so this needs no
 event-log configuration. Run it WARM-aware: the first execution of a
@@ -42,6 +44,8 @@ def main() -> None:
     spark = get_spark("width-audit")
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
+    pool = spark.sparkContext.defaultParallelism
+    max_tasks = min(MAX_TASKS, pool - 1)
 
     def stages() -> list[dict]:
         app = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))[0]["id"]
@@ -69,7 +73,7 @@ def main() -> None:
                 if s["stageId"] <= prev:
                     continue
                 cpu = s.get("executorRunTime", 0) / 1000.0
-                if s["numCompleteTasks"] <= MAX_TASKS and cpu > MIN_CPU_S:
+                if s["numCompleteTasks"] <= max_tasks and cpu > MIN_CPU_S:
                     narrow.append(
                         (s["stageId"], s["numCompleteTasks"], round(cpu, 1))
                     )
@@ -81,7 +85,7 @@ def main() -> None:
 
     print(
         f"==== findings (wall > {SLOW_WALL_S}s or stage with <= "
-        f"{MAX_TASKS} tasks and > {MIN_CPU_S}s CPU) ===="
+        f"{max_tasks} tasks on a {pool}-core pool and > {MIN_CPU_S}s CPU) ===="
     )
     for row in findings:
         print(row)

@@ -17,7 +17,7 @@ import datetime
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pandas_to_postgres_spark.operators.joins import asof_join
@@ -697,6 +697,8 @@ class TestHdf5RoundTripProperties:
         max_size=7,
     )
 )
+# a merge inserts key 101, then the second append must not reuse it
+@example(ops=[("append", 1), ("merge", 101), ("append", 1)])
 def test_snapshot_table_matches_python_model(spark, tmp_path_factory, ops):
     """Model-based check for the whole snapshot-DML surface: apply a
     random op sequence (append / DV delete / CoW merge / compaction /
@@ -723,7 +725,14 @@ def test_snapshot_table_matches_python_model(spark, tmp_path_factory, ops):
 
     for op, arg in ops:
         if op == "append":
-            rows = [Row(k=next_k + i, v=(next_k + i) * 10) for i in range(arg)]
+            # append_snapshot is a plain append (no key dedup): keep appended
+            # keys fresh, skipping any key a merge already made live
+            keys = []
+            while len(keys) < arg:
+                if next_k not in model:
+                    keys.append(next_k)
+                next_k += 1
+            rows = [Row(k=k, v=k * 10) for k in keys]
             spark.createDataFrame(rows).coalesce(1).write.mode(
                 "append"
             ).parquet(p)
@@ -744,7 +753,6 @@ def test_snapshot_table_matches_python_model(spark, tmp_path_factory, ops):
             M.append_snapshot(p, new)
             for r in rows:
                 model[r.k] = r.v
-            next_k += arg
         elif op == "dv_delete":
             M.delete_snapshot_rows_dv(
                 spark, p, spark.createDataFrame([Row(k=arg)]), ["k"]
