@@ -15,6 +15,7 @@ equivalent to need.
 from __future__ import annotations
 
 import logging
+import sys
 from typing import Callable, Optional, Sequence
 
 import pandas as pd
@@ -26,7 +27,6 @@ from pandas_to_postgres_spark.sources.hdf import (
     DEFAULT_CHUNK_ROWS,
     hdf_metadata,
     load_hdf_distributed,
-    load_hdf_small,
 )
 
 Sink = Callable[[str, DataFrame], None]
@@ -76,9 +76,10 @@ class DataFrameCopy(_BaseCopy):
 
 
 class HDFTableCopy(_BaseCopy):
-    """`copy_hdf.py:14-121` — HDF keys → union → sink. ``big=True`` selects
-    the distributed range scan (BigHDFTableCopy, `copy_hdf.py:175-230`);
-    ``big=False`` the whole-key read (Small/plain, `:82-163`)."""
+    """`copy_hdf.py:14-121` — HDF keys → union → sink, each key through
+    the distributed range scan. ``big=True`` reads ``hdf_chunksize``-row
+    ranges (BigHDFTableCopy, `copy_hdf.py:175-230`); ``big=False`` reads
+    each key as one range (Small/plain, `:82-163`)."""
 
     def __init__(
         self,
@@ -113,14 +114,10 @@ class HDFTableCopy(_BaseCopy):
         return kw
 
     def _load(self, formatted: bool = True) -> DataFrame:
-        loader = (
-            (lambda k: load_hdf_distributed(self.spark, self.file_name, k, self.hdf_chunksize))
-            if self.big
-            else (lambda k: load_hdf_small(self.spark, self.file_name, k))
-        )
+        chunk_rows = self.hdf_chunksize if self.big else sys.maxsize
         parts = []
         for k in self.hdf_tables:
-            df = loader(k)
+            df = load_hdf_distributed(self.spark, self.file_name, k, chunk_rows)
             if formatted:
                 # per-key application so hooks see THIS key's constants,
                 # matching the reference's per-table loop (`copy_hdf.py:98-120`)

@@ -3260,14 +3260,20 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier (SURVEY §2.12 [EXT]) — the sketch leg, exact-oracle variant of
     the rows-only ``approx_distinct_parts``."""
     ev = load_table(spark, sf_dir, "events")
-    # No distinct() here: registers fold with max, which absorbs
-    # duplicate hashes for free. A pre-bucketing distinct would shuffle
-    # every distinct hash value — the exact full-cardinality exchange
-    # the sketch exists to avoid. With the straight groupBy(bucket) the
-    # partial (map-side) max bounds the exchange at <=1024 register
-    # rows per task; the streaming twin (stream_hll_distinct) has
-    # always taken this path against the identical oracle.
-    h = ev.select(
+    return _hll_estimate(_hll_registers(ev), ev)
+
+
+def _hll_registers(events: DataFrame) -> DataFrame:
+    """``(bucket, rho)`` HLL registers of ``user_id`` over a batch or a
+    streaming frame (``stream_hll_distinct`` keeps them as its state).
+
+    No distinct() here: registers fold with max, which absorbs
+    duplicate hashes for free. A pre-bucketing distinct would shuffle
+    every distinct hash value — the exact full-cardinality exchange the
+    sketch exists to avoid. With the straight groupBy(bucket) the
+    partial (map-side) max bounds the exchange at <=1024 register rows
+    per task."""
+    h = events.select(
         F.conv(
             F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
             16,
@@ -3276,7 +3282,7 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("hv")
     )
-    reg = (
+    return (
         h.select(
             (F.col("hv") % 1024).alias("bucket"),
             # shiftright = integer hv // 1024; `/` loses bits > 2^53
@@ -3290,6 +3296,11 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.max("rho_row").alias("rho"))
     )
+
+
+def _hll_estimate(reg: DataFrame, ev: DataFrame) -> DataFrame:
+    """The integer-exact estimator fold over ``reg`` (`_HLL_ORACLE`),
+    beside the exact distinct count of ``ev``."""
     fold = reg.agg(
         F.count(F.lit(1)).alias("n_present"),
         F.sum(F.expr("CAST(POW(2, 51 - rho) AS BIGINT)")).alias(
@@ -3375,45 +3386,60 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: no analytics in the 988-LoC loader; in-engine statistics
     tier (SURVEY §2.12 [EXT]) — frequency-sketch leg."""
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    rows4 = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("j")
+    return _cms_topk(_cms_counters(ev), ev)
 
-    def cell(j_col, key_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j_col.cast("string"),
-                            F.lit(":"),
-                            key_col.cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
+
+def _cms_rows():
+    return F.explode(F.sequence(F.lit(0), F.lit(3))).alias("j")
+
+
+def _cms_cell(j_col, key_col):
+    """The counter of ``key_col`` in hash row ``j_col`` (`_CMS_ORACLE`)."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        j_col.cast("string"),
+                        F.lit(":"),
+                        key_col.cast("string"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("long")
-            % 1024
-        )
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 1024
+    )
 
-    counters = (
-        ev.select("user_id", rows4)
-        .select("j", cell(F.col("j"), F.col("user_id")).alias("c"))
+
+def _cms_counters(events: DataFrame) -> DataFrame:
+    """``(j, c, n)`` Count-Min counters of ``user_id`` over a batch or a
+    streaming frame (``stream_cms_topk`` keeps them as its state)."""
+    return (
+        events.select("user_id", _cms_rows())
+        .select("j", _cms_cell(F.col("j"), F.col("user_id")).alias("c"))
         .groupBy("j", "c")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
+
+
+def _cms_topk(counters: DataFrame, ev: DataFrame) -> DataFrame:
+    """The 10 heaviest users of ``ev`` probed against ``counters``:
+    exact count beside the min-over-rows estimate."""
     exact = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")
     )
     topk = exact.orderBy(
         F.col("exact_n").desc(), F.col("user_id").asc()
     ).limit(10)
-    probes = topk.select("user_id", "exact_n", rows4).select(
+    probes = topk.select("user_id", "exact_n", _cms_rows()).select(
         "user_id",
         "exact_n",
         "j",
-        cell(F.col("j"), F.col("user_id")).alias("c"),
+        _cms_cell(F.col("j"), F.col("user_id")).alias("c"),
     )
     return (
         probes.join(F.broadcast(counters), ["j", "c"])

@@ -11,6 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pandas_to_postgres_spark.functions.agg import dsum_sql
+from pandas_to_postgres_spark.plans.analytics import (
+    _CMS_ORACLE,
+    _HLL_ORACLE,
+    _cms_counters,
+    _cms_topk,
+    _hll_estimate,
+    _hll_registers,
+)
 from pandas_to_postgres_spark.plans.registry import register
 from pandas_to_postgres_spark.streaming.events import windowed_event_counts
 
@@ -445,47 +453,7 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_event_rollup(spark, sf_dir)
 
 
-@register(
-    "stream_hll_distinct",
-    min_rows=1,
-    oracle="""
-    WITH h AS (
-        SELECT DISTINCT
-               CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) AS hv
-        FROM events),
-    reg AS (
-        SELECT hv % 1024 AS bucket,
-               max(CASE WHEN hv // 1024 = 0 THEN 51
-                        ELSE 51 - length(bin(hv // 1024)) END) AS rho
-        FROM h GROUP BY hv % 1024),
-    fold AS (
-        SELECT count(*) AS n_present,
-               sum(CAST(2 AS BIGINT) ** (51 - rho)) AS z_present
-        FROM reg),
-    stat AS (
-        SELECT CAST(1024 - n_present AS BIGINT) AS v_zero,
-               CAST(z_present
-                    + (1024 - n_present) * (CAST(2 AS BIGINT) ** 51)
-                    AS BIGINT) AS z_num
-        FROM fold),
-    est AS (
-        SELECT v_zero, z_num,
-               (CAST(0.7213 AS DOUBLE) / (1 + CAST(1.079 AS DOUBLE) / 1024))
-                   * 1024 * 1024
-                   * (CAST(2 AS DOUBLE) ** 51) / CAST(z_num AS DOUBLE)
-                   AS e_raw
-        FROM stat)
-    SELECT CAST(1024 AS BIGINT) AS m, v_zero, z_num,
-           floor((CASE WHEN e_raw <= 2.5 * 1024 AND v_zero > 0
-                       THEN 1024 * ln(CAST(1024 AS DOUBLE) / v_zero)
-                       ELSE e_raw END) * 10000 + 0.5) / 10000
-               AS hll_estimate,
-           (SELECT CAST(count(DISTINCT user_id) AS BIGINT) FROM events)
-               AS exact_distinct
-    FROM est
-    """,
-)
+@register("stream_hll_distinct", min_rows=1, oracle=_HLL_ORACLE)
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 × sketch composition: the HyperLogLog register table
     MAINTAINED BY A STREAM — a complete-mode ``groupBy(bucket).max(rho)``
@@ -499,8 +467,6 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact fold."""
     import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from pandas_to_postgres_spark.sources.parquet import load_table
     from pandas_to_postgres_spark.streaming.sink import stream_to_batch_sink
@@ -521,25 +487,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(out)
 
     with _event_drain(spark, sf_dir, target_rows=8192) as drain:
-        stream = drain.stream()
-        hv = F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        hvd = stream.select(hv.alias("hv"))
-        # shiftright = integer hv // 1024; double `/` loses bits above
-        # 2^53 on this 60-bit hash vs the oracle's exact integer division.
-        rho_row = F.when(
-            F.expr("shiftright(hv, 10)") == 0, F.lit(51)
-        ).otherwise(F.lit(51) - F.length(F.expr("bin(shiftright(hv, 10))")))
-        regs = (
-            hvd.select(
-                (F.col("hv") % 1024).alias("bucket"), rho_row.alias("rho_row")
-            )
-            .groupBy("bucket")
-            .agg(F.max("rho_row").alias("rho"))
-        )
+        regs = _hll_registers(drain.stream())
         q = stream_to_batch_sink(
             regs, writer, checkpoint_dir=ckpt, output_mode="complete"
         )
@@ -551,73 +499,10 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = spark.read.parquet(out)
     reg = spark.createDataFrame(drained.collect(), drained.schema)
     shutil.rmtree(base, ignore_errors=True)
-
-    fold = reg.agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(F.expr("CAST(POW(2, 51 - rho) AS BIGINT)")).alias(
-            "z_present"
-        ),
-    )
-    ev = load_table(spark, sf_dir, "events")
-    exact = ev.agg(
-        F.countDistinct("user_id").cast("long").alias("exact_distinct")
-    )
-    alpha = F.lit(0.7213) / (F.lit(1.0) + F.lit(1.079) / F.lit(1024.0))
-    v_zero = (F.lit(1024) - F.col("n_present")).cast("long")
-    z_num = (
-        F.col("z_present")
-        + (F.lit(1024) - F.col("n_present")) * F.lit(2**51)
-    ).cast("long")
-    e_raw = (
-        alpha
-        * F.lit(1024.0 * 1024.0)
-        * F.lit(float(2**51))
-        / z_num.cast("double")
-    )
-    lc = F.lit(1024.0) * F.log(F.lit(1024.0) / v_zero.cast("double"))
-    est = F.when((e_raw <= 2.5 * 1024) & (v_zero > 0), lc).otherwise(
-        e_raw
-    )
-    return fold.crossJoin(F.broadcast(exact)).select(
-        F.lit(1024).cast("long").alias("m"),
-        v_zero.alias("v_zero"),
-        z_num.alias("z_num"),
-        (F.floor(est * 10000 + F.lit(0.5)) / 10000).alias("hll_estimate"),
-        "exact_distinct",
-    )
+    return _hll_estimate(reg, load_table(spark, sf_dir, "events"))
 
 
-@register(
-    "stream_cms_topk",
-    min_rows=10,
-    oracle="""
-    WITH pos AS (
-        SELECT j, user_id,
-               CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
-                         || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                   % 1024 AS c
-        FROM events, range(0, 4) r(j)),
-    counters AS (
-        SELECT j, c, CAST(count(*) AS BIGINT) AS n
-        FROM pos GROUP BY j, c),
-    exact AS (
-        SELECT user_id, CAST(count(*) AS BIGINT) AS exact_n
-        FROM events GROUP BY user_id),
-    topk AS (
-        SELECT user_id, exact_n
-        FROM exact ORDER BY exact_n DESC, user_id ASC LIMIT 10),
-    probes AS (
-        SELECT t.user_id, t.exact_n, r.j,
-               CAST(('0x' || substr(md5(CAST(r.j AS VARCHAR) || ':'
-                         || CAST(t.user_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                   % 1024 AS c
-        FROM topk t, range(0, 4) r(j))
-    SELECT p.user_id, p.exact_n,
-           CAST(min(c2.n) AS BIGINT) AS cms_estimate
-    FROM probes p JOIN counters c2 ON p.j = c2.j AND p.c = c2.c
-    GROUP BY p.user_id, p.exact_n
-    """,
-)
+@register("stream_cms_topk", min_rows=10, oracle=_CMS_ORACLE)
 def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 × sketch composition #2: the Count-Min counter table
     MAINTAINED BY A STREAM — a complete-mode ``groupBy(j, cell).count``
@@ -636,8 +521,6 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from pandas_to_postgres_spark.sources.parquet import load_table
     from pandas_to_postgres_spark.streaming.sink import stream_to_batch_sink
 
@@ -650,27 +533,6 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r11: the volume-aware gate).
     from pandas_to_postgres_spark.streaming.events import _event_drain
 
-    def cell(j_col, key_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j_col.cast("string"),
-                            F.lit(":"),
-                            key_col.cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 1024
-        )
-
-    rows4 = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("j")
     base = tempfile.mkdtemp(prefix="stream_cms_")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
 
@@ -678,13 +540,7 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(out)
 
     with _event_drain(spark, sf_dir, target_rows=8192) as drain:
-        stream = drain.stream()
-        counters_stream = (
-            stream.select("user_id", rows4)
-            .select("j", cell(F.col("j"), F.col("user_id")).alias("c"))
-            .groupBy("j", "c")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
+        counters_stream = _cms_counters(drain.stream())
         q = stream_to_batch_sink(
             counters_stream,
             writer,
@@ -699,22 +555,5 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained = spark.read.parquet(out)
     counters = spark.createDataFrame(drained.collect(), drained.schema)
     shutil.rmtree(base, ignore_errors=True)
-
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    exact = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("exact_n")
-    )
-    topk = exact.orderBy(
-        F.col("exact_n").desc(), F.col("user_id").asc()
-    ).limit(10)
-    probes = topk.select("user_id", "exact_n", rows4).select(
-        "user_id",
-        "exact_n",
-        "j",
-        cell(F.col("j"), F.col("user_id")).alias("c"),
-    )
-    return (
-        probes.join(F.broadcast(counters), ["j", "c"])
-        .groupBy("user_id", "exact_n")
-        .agg(F.min("n").cast("long").alias("cms_estimate"))
-    )
+    return _cms_topk(counters, ev)

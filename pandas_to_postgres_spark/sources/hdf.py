@@ -1,27 +1,35 @@
-"""HDF5 sources (SURVEY.md §2.1 S2/S3/S4/S7).
+"""HDF5 sources (SURVEY.md §2.1 S2/S3/S4/S7): the engine's one HDF5 layer.
 
-Spark has no native HDF5 source. The reference's three strategies
-(`/root/reference/pandas_to_postgres/copy_hdf.py`):
+Spark has no native HDF5 source. Every HDF5 read of the engine goes
+through the functions below, so each decision is made once:
 
-- Small / full-table read (`SmallHDFTableCopy`, `HDFTableCopy`): whole key
-  into pandas → here ``spark.createDataFrame(read_hdf(...))``.
-- Big / range scan (`BigHDFTableCopy.hdf_to_pg`, `copy_hdf.py:175-230`):
-  ``pd.read_hdf(file, key, start, stop)`` slices of ``hdf_chunksize`` rows.
-  The distributed generalization: ``spark.range(n_ranges)`` →
-  ``mapInPandas`` where EACH SPARK TASK performs one range read. The
-  reference's sequential loop becomes a partition-parallel scan — this is
-  the design the reference's own docstring reaches toward
-  (`copy_hdf.py:169-172`: range reads chosen over ``iterator=True``
-  precisely because they are random-access).
+- **backend:** PyTables (``pd.read_hdf``) when importable, else the
+  repo's pure-Python parser (`sources/hdf5_reader` + the pandas dialect
+  in `sources/hdf5_pandas`), so every path executes without PyTables
+  too. Only this module calls either backend (row counts, range reads,
+  the key catalog); both honor the same range-read contract.
+- **slices:** :func:`plan_ranges` cuts a key's rows into ``[start,
+  stop)`` ranges of ``chunk_rows`` (`copy_hdf.py:198-213`), one empty
+  range for an empty key.
+- **schema:** :func:`hdf_schema` maps the key's pandas dtypes to Spark
+  types through one fixed table: no Spark job, no dependence on the
+  session's Arrow conf, and an empty key gets the schema of a full one.
+- **scan:** :func:`scan_hdf` reads slice i in task i of a range of
+  slice ids through ``mapInPandas``: no shuffle. The reference's
+  sequential range loop (`BigHDFTableCopy.hdf_to_pg`,
+  `copy_hdf.py:175-230`) becomes a partition-parallel scan, the design
+  its own docstring reaches toward (`copy_hdf.py:169-172`: range reads
+  chosen over ``iterator=True`` because they are random-access). The
+  reference's Small path (a whole key into pandas) is the same scan with
+  one range per key.
 
-Backend selection: PyTables (``pd.read_hdf``) when importable, else the
-repo's pure-Python HDF5 parser (`sources/hdf5_reader` + the pandas
-dialect in `sources/hdf5_pandas`) — so every strategy EXECUTES in this
-container too. Both backends honor the same range-read contract.
+Callers: :func:`load_hdf_distributed` (one file), `sinks/hdf.load_hdf_dir`
+(a part-file directory) and the ``format("hdf5")`` DataSource of
+`sources/hdf5_stream`, which plans and reads its partitions here.
 
-100 TB notes: the file must be visible to every executor (shared FS). Range
-reads are per-task independent — no shuffle at all; chunk size bounds task
-memory exactly like the reference's ``hdf_chunksize`` (10**7 default,
+100 TB notes: the file must be visible to every executor (shared FS).
+Range reads are per-task independent; chunk size bounds task memory
+exactly like the reference's ``hdf_chunksize`` (10**7 default,
 `copy_hdf.py:21`). The pure backend mmaps the file per task and touches
 only the superblock, index nodes, and the chunks overlapping its range.
 """
@@ -32,8 +40,25 @@ from typing import Iterator, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CHUNK_ROWS = 10**7  # the reference's hdf_chunksize (`copy_hdf.py:21`)
+
+#: pandas dtype of a decoded frame_table column -> Spark type
+_SPARK_TYPES = {
+    "bool": T.BooleanType(),
+    "int8": T.ByteType(),
+    "int16": T.ShortType(),
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "uint8": T.ShortType(),
+    "uint16": T.IntegerType(),
+    "uint32": T.LongType(),
+    "float32": T.FloatType(),
+    "float64": T.DoubleType(),
+    "object": T.StringType(),
+    "datetime64[ns]": T.TimestampType(),
+}
 
 
 def _has_pytables() -> bool:
@@ -81,10 +106,40 @@ def hdf_nrows(file_name: str, key: str) -> int:
     return hdf5_pandas.get_nrows(file_name, key)
 
 
-def load_hdf_small(spark: SparkSession, file_name: str, key: str) -> DataFrame:
-    """S2/S4: whole-key read → Spark DataFrame (Arrow-accelerated)."""
-    pdf = read_hdf_range(file_name, key)
-    return spark.createDataFrame(pdf.reset_index(drop=True))
+def hdf_schema(file_name: str, key: str) -> T.StructType:
+    """Spark schema of ``key``: its fields' pandas dtypes (an empty range
+    read, so no row data is decoded) through one fixed type table."""
+    fields = []
+    for col, dtype in read_hdf_range(file_name, key, 0, 0).dtypes.items():
+        spark_t = _SPARK_TYPES.get(str(dtype))
+        if spark_t is None:
+            raise TypeError(f"HDF5 key {key!r}: unsupported dtype {dtype} ({col})")
+        fields.append(T.StructField(str(col), spark_t))
+    return T.StructType(fields)
+
+
+def scan_hdf(
+    spark: SparkSession, files: Sequence[str], key: str, chunk_rows: int
+) -> DataFrame:
+    """``key`` of every file as one DataFrame: one Spark task per
+    ``(file, [start, stop))`` slice, each one range read, no exchange.
+    The schema comes from the first file."""
+    slices = [
+        (f, start, stop)
+        for f in files
+        for start, stop in plan_ranges(hdf_nrows(f, key), chunk_rows)
+    ]
+
+    def read_slices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"]:
+                file, start, stop = slices[i]
+                if stop > start:
+                    yield read_hdf_range(file, key, start, stop)
+
+    # slice i -> task i: spark.range splits evenly, so no exchange is needed
+    ids = spark.range(len(slices), numPartitions=len(slices))
+    return ids.mapInPandas(read_slices, schema=hdf_schema(files[0], key))
 
 
 def load_hdf_distributed(
@@ -92,31 +147,10 @@ def load_hdf_distributed(
     file_name: str,
     key: str,
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
-    nrows: Optional[int] = None,
 ) -> DataFrame:
-    """S3: partition-parallel HDF5 range scan.
-
-    One Spark task per [start, stop) range; each task opens the file
-    read-only and performs exactly one range read — the reference's
-    `copy_hdf.py:211` executed N-wide.
-    """
-    if nrows is None:
-        nrows = hdf_nrows(file_name, key)
-    ranges = plan_ranges(nrows, chunk_rows)
-    # infer the schema from a 1-row probe (schema is identical across ranges)
-    probe = read_hdf_range(file_name, key, 0, max(1, min(1, nrows)))
-    schema = spark.createDataFrame(probe.reset_index(drop=True)).schema
-
-    def read_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
-                start, stop = ranges[i]
-                if stop > start:
-                    yield read_hdf_range(file_name, key, start, stop).reset_index(drop=True)
-
-    # range i -> task i: spark.range splits evenly, so no exchange is needed
-    ids = spark.range(len(ranges), numPartitions=len(ranges))
-    return ids.mapInPandas(read_ranges, schema=schema)
+    """S3: partition-parallel HDF5 range scan of one key — the
+    reference's `copy_hdf.py:211` executed N-wide (:func:`scan_hdf`)."""
+    return scan_hdf(spark, [file_name], key, chunk_rows)
 
 
 def hdf_keys(file_name: str) -> list[str]:

@@ -66,7 +66,9 @@ def group_attrs(path: str, key: str) -> Dict[str, object]:
 
 
 def _decode_strings(arr: np.ndarray) -> np.ndarray:
-    return np.char.decode(arr.astype("S"), "utf-8")
+    # object, not numpy's unicode dtype: np.char.decode of an EMPTY array
+    # returns float64, which would give an empty key a different schema
+    return np.char.decode(arr.astype("S"), "utf-8").astype(object)
 
 
 def _column_from_field(
@@ -115,7 +117,7 @@ def read_hdf(
                 field.startswith("values_block") or len(block_cols) != 1 or block_cols[0] != field
             ):
                 # block dialect: (n, k) member carries k columns
-                vals2 = vals.reshape(len(vals), -1)
+                vals2 = vals.reshape(len(vals), len(block_cols))
                 for j, col in enumerate(block_cols):
                     cv = vals2[:, j]
                     data[str(col)] = _column_from_field(cv, field, attrs)

@@ -1,6 +1,8 @@
-"""Spark 4 Python DataSource for HDF5 part-file directories: batch scans
-and STREAMING ingest of PyTables frame_table files, powered by the
-pure-Python parser (`sources/hdf5_reader`) — no PyTables/h5py anywhere.
+"""Spark 4 Python DataSource for HDF5 part-file directories: batch scans,
+STREAMING ingest and writes of PyTables frame_table files. Planning,
+schema and range reads go through `sources/hdf` (PyTables when
+importable, else the pure-Python parser), so ``format("hdf5")`` reads a
+file exactly as the range scans there do.
 
     spark.dataSource.register(Hdf5DataSource)
 
@@ -65,17 +67,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-_PD_TO_SPARK = {
-    "int64": "bigint",
-    "int32": "int",
-    "int16": "smallint",
-    "int8": "tinyint",
-    "uint8": "smallint",
-    "float64": "double",
-    "float32": "float",
-    "bool": "boolean",
-    "object": "string",
-}
+from pandas_to_postgres_spark.sources.hdf import (
+    hdf_nrows,
+    hdf_schema,
+    plan_ranges,
+    read_hdf_range,
+)
 
 
 def _part_files(path: str) -> list:
@@ -94,34 +91,29 @@ class H5Partition(InputPartition):
 
 
 def _plan_file(path: str, name: str, key: str, chunk_rows: int):
-    from pandas_to_postgres_spark.sources import hdf5_pandas  # noqa: PLC0415
-
-    full = os.path.join(path, name)
-    n = hdf5_pandas.get_nrows(full, key)
-    return [
-        H5Partition(file=name, start=s, stop=min(s + chunk_rows, n))
-        for s in range(0, max(n, 1), chunk_rows)
-        if n > 0
-    ]
+    """The partitions of one part file: `sources/hdf.plan_ranges`."""
+    n = hdf_nrows(os.path.join(path, name), key)
+    return [H5Partition(name, start, stop) for start, stop in plan_ranges(n, chunk_rows)]
 
 
-def _read_partition(path: str, key: str, columns, part: H5Partition):
-    """One slice → one Arrow RecordBatch (never Python row tuples)."""
+def _read_partition(path: str, key: str, schema, part: H5Partition):
+    """One slice → one Arrow RecordBatch of the Spark ``schema`` (never
+    Python row tuples); an empty slice yields nothing."""
     import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
 
-    from pandas_to_postgres_spark.sources import hdf5_pandas  # noqa: PLC0415
-
-    pdf = hdf5_pandas.read_hdf(
-        os.path.join(path, part.file), key, part.start, part.stop
-    ).reset_index(drop=True)
-    yield pa.RecordBatch.from_pandas(pdf[list(columns)], preserve_index=False)
+    if part.stop > part.start:
+        pdf = read_hdf_range(os.path.join(path, part.file), key, part.start, part.stop)
+        yield pa.RecordBatch.from_pandas(
+            pdf, schema=to_arrow_schema(schema), preserve_index=False
+        )
 
 
 class Hdf5Reader(DataSourceReader):
-    def __init__(self, path, key, chunk_rows, columns):
+    def __init__(self, path, key, chunk_rows, schema):
         self.path, self.key = path, key
         self.chunk_rows = chunk_rows
-        self.columns = columns
+        self.schema = schema
 
     def partitions(self):
         parts = []
@@ -130,9 +122,7 @@ class Hdf5Reader(DataSourceReader):
         return parts or [H5Partition(file="", start=0, stop=0)]
 
     def read(self, part: H5Partition) -> Iterator:
-        if not part.file:
-            return
-        yield from _read_partition(self.path, self.key, self.columns, part)
+        return _read_partition(self.path, self.key, self.schema, part)
 
 
 def _offset_norm(off: dict) -> tuple:
@@ -154,10 +144,10 @@ class Hdf5StreamReader(DataSourceStreamReader):
     lifetime. Files are immutable, so a replayed (start, end] range
     yields byte-identical rows."""
 
-    def __init__(self, path, key, chunk_rows, columns, late_file_lag_s=300.0):
+    def __init__(self, path, key, chunk_rows, schema, late_file_lag_s=300.0):
         self.path, self.key = path, key
         self.chunk_rows = chunk_rows
-        self.columns = columns
+        self.schema = schema
         self._lag_ns = int(late_file_lag_s * 1e9)
         #: (wm, {name: mtime}) of the last offset Spark COMMITTED this
         #: session; None until the first commit (module docstring — the
@@ -215,9 +205,7 @@ class Hdf5StreamReader(DataSourceStreamReader):
         return parts or [H5Partition(file="", start=0, stop=0)]
 
     def read(self, part: H5Partition) -> Iterator:
-        if not part.file:
-            return
-        yield from _read_partition(self.path, self.key, self.columns, part)
+        return _read_partition(self.path, self.key, self.schema, part)
 
     def commit(self, end: dict) -> None:
         # nothing to clean (offsets live in Spark's checkpoint) — but the
@@ -236,7 +224,8 @@ class Hdf5WriteCommit(WriterCommitMessage):
 class Hdf5ArrowWriter(DataSourceArrowWriter):
     """``df.write.format("hdf5")`` — the WRITE half, API-symmetric with
     the round-5 read/stream halves. Maps Spark's writer commit protocol
-    onto the part-file directory layout (`sinks/hdf.write_hdf_dir`):
+    onto the part-file directory layout (`sinks/hdf.write_hdf_dir` writes
+    through it):
 
     - ``write`` (per task): stage the partition's Arrow batches as ONE
       self-contained ``.tmp-<job>-<uuid>.h5`` (dot-prefixed: invisible to
@@ -338,9 +327,7 @@ class Hdf5DataSource(DataSource):
                                        self.options.get("lateFileLag", 300.0)))
         return path, key, chunk_rows, lag_s
 
-    def schema(self) -> str:
-        from pandas_to_postgres_spark.sources import hdf5_pandas  # noqa: PLC0415
-
+    def schema(self):
         path, key, _, _ = self._opts()
         files = _part_files(path)
         if not files:
@@ -349,23 +336,16 @@ class Hdf5DataSource(DataSource):
                 "schema from — pass .schema(...) explicitly for an empty "
                 "landing directory"
             )
-        probe = hdf5_pandas.read_hdf(os.path.join(path, files[0]), key, 0, 1)
-        ddl = []
-        for col, dtype in probe.dtypes.items():
-            spark_t = _PD_TO_SPARK.get(str(dtype))
-            if spark_t is None:
-                raise TypeError(f"hdf5 source: unsupported dtype {dtype} ({col})")
-            ddl.append(f"{col} {spark_t}")
-        return ", ".join(ddl)
+        return hdf_schema(os.path.join(path, files[0]), key)
 
     def reader(self, schema) -> Hdf5Reader:
         path, key, chunk_rows, _ = self._opts()
-        return Hdf5Reader(path, key, chunk_rows, schema.fieldNames())
+        return Hdf5Reader(path, key, chunk_rows, schema)
 
     def streamReader(self, schema) -> Hdf5StreamReader:
         path, key, chunk_rows, lag_s = self._opts()
         return Hdf5StreamReader(
-            path, key, chunk_rows, schema.fieldNames(), late_file_lag_s=lag_s
+            path, key, chunk_rows, schema, late_file_lag_s=lag_s
         )
 
     def writer(self, schema, overwrite: bool) -> Hdf5ArrowWriter:

@@ -22,7 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pandas_to_postgres_spark.streaming.events import _event_stream, _memory_drain
+from pandas_to_postgres_spark.streaming.events import (
+    _event_drain,
+    _event_stream,
+    _memory_drain,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -58,16 +62,18 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the final per-user totals (one row per user per micro-batch that
     touched the user; with a single AvailableNow batch, exactly one row per
     user)."""
-    stream = _event_stream(spark, sf_dir, target_rows=0)
-
-    updated = stream.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    out = _memory_drain(updated, "update")
+    # state stores sized to the batch (one per 64k rows, each a Python
+    # worker here), not the session's shuffle.partitions; no widening
+    # ahead of the grouped exchange
+    with _event_drain(spark, sf_dir, target_rows=0) as drain:
+        updated = drain.stream().groupBy("user_id").applyInPandasWithState(
+            _update_user_totals,
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        out = _memory_drain(updated, "update")
     # keep only the last emission per user (idempotent under multi-batch runs)
     from pyspark.sql import Window
 

@@ -239,10 +239,72 @@ class TestSparkSources:
         # range i is read by task i straight off spark.range: no shuffle
         assert "Exchange" not in sdf._jdf.queryExecution().executedPlan().toString()
 
-    def test_load_hdf_small(self, spark, h5):
-        sdf = hdf.load_hdf_small(spark, h5, "data")
-        assert sdf.count() == 500
-        assert set(sdf.columns) == {"id", "val", "name", "ok"}
+    @pytest.mark.parametrize("arrow", ["true", "false"])
+    def test_one_schema_whatever_arrow_conf(self, spark, tmp_path, arrow):
+        """Every HDF5 read path gives one file the same rows and schema,
+        whatever ``spark.sql.execution.arrow.pyspark.enabled`` says:
+        float32 stays ``float``."""
+        from pyspark.sql import types as T
+
+        from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir
+        from pandas_to_postgres_spark.sources.hdf5_stream import Hdf5DataSource
+
+        d = str(tmp_path / "f32")
+        os.makedirs(d)
+        df = _frame(250, seed=9).assign(
+            f32=lambda x: x["val"].astype(np.float32)
+        )
+        p = os.path.join(d, "part-00000.h5")
+        write_frame_table(p, {"data": df}, chunk_rows=64)
+        spark.dataSource.register(Hdf5DataSource)
+        conf = "spark.sql.execution.arrow.pyspark.enabled"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, arrow)
+        try:
+            reads = {
+                "distributed": hdf.load_hdf_distributed(spark, p, "data", 100),
+                "dir": load_hdf_dir(spark, d, "data", chunk_rows=100),
+                "format": spark.read.format("hdf5").option("path", d)
+                .option("chunkRows", 100).load(),
+                "big=False": compat.HDFTableCopy(
+                    p, ["data"], spark, sink=None, table_name="t", big=False
+                )._load(formatted=False),
+            }
+            schemas = {name: r.schema for name, r in reads.items()}
+            rows = {name: sorted(r.collect()) for name, r in reads.items()}
+        finally:
+            spark.conf.set(conf, old)
+        assert schemas["distributed"]["f32"].dataType == T.FloatType()
+        assert all(s == schemas["distributed"] for s in schemas.values()), schemas
+        assert len(rows["distributed"]) == 250
+        assert all(r == rows["distributed"] for r in rows.values())
+
+    def test_empty_key_reads_with_full_schema(self, spark, tmp_path):
+        """A 0-row key is valid input (`utilities.py:107-108`): it reads
+        as 0 rows with the schema of a full key, and a routed table with
+        an empty slice still loads its other keys."""
+        p = str(tmp_path / "e.h5")
+        write_frame_table(
+            p,
+            {"s1": _frame(20), "s2": _frame(20).iloc[:0], "solo": _frame(5)},
+            group_meta={
+                "s1": {"pg_meta": {"sql_table_name": "t"}},
+                "s2": {"pg_meta": {"sql_table_name": "t"}},
+            },
+        )
+        full = hdf.load_hdf_distributed(spark, p, "s1", 8).schema
+        empty = hdf.load_hdf_distributed(spark, p, "s2", 8)
+        assert empty.schema == full and empty.count() == 0
+        small = compat.HDFTableCopy(
+            p, ["s2"], spark, sink=None, table_name="t", big=False
+        )._load(formatted=False)
+        assert small.schema == full and small.count() == 0
+        seen = {}
+        compat.hdf_to_postgres(
+            p, spark, lambda name, df: seen.__setitem__(name, df.count()),
+            metadata_attr="pg_meta", big=True, hdf_chunksize=8,
+        )
+        assert seen == {"t": 20, "solo": 5}
 
     def test_hdf_nrows_and_metadata_routing(self, spark, tmp_path):
         p = str(tmp_path / "m.h5")
@@ -315,6 +377,34 @@ class TestHdfSink:
         assert nparts <= 3  # empty partitions write nothing
         back = load_hdf_dir(spark, out).toPandas()
         assert sorted(back["id"]) == [0, 1, 2]
+
+    def test_failed_overwrite_keeps_previous_dataset(self, spark, tmp_path):
+        """Overwrite is committed by the job: a write that fails in one
+        partition leaves the previous dataset whole and no temp files."""
+        import glob
+        import time
+
+        from pyspark.sql import functions as F
+
+        from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir, write_hdf_dir
+
+        out = str(tmp_path / "atomic")
+        nparts = write_hdf_dir(spark.createDataFrame(_frame(300)).repartition(3), out)
+
+        @F.udf("long")
+        def boom(i):
+            if i == 33:
+                time.sleep(1)  # the other partitions stage their files first
+                raise ValueError("boom")
+            return i
+
+        bad = spark.range(0, 40, numPartitions=4).select(boom("id").alias("id"))
+        with pytest.raises(Exception, match="boom"):
+            write_hdf_dir(bad, out)
+        back = load_hdf_dir(spark, out).toPandas()
+        assert sorted(back["id"]) == list(range(300))
+        assert len(glob.glob(os.path.join(out, "part-*.h5"))) == nparts
+        assert glob.glob(os.path.join(out, ".tmp-*")) == []
 
     def test_unsupported_dtype_rejected(self, spark):
         from pandas_to_postgres_spark.sinks.hdf import write_hdf_dir

@@ -279,7 +279,7 @@ class TestFormatterKwargs:
                 return 1
 
         monkeypatch.setattr(
-            compat, "load_hdf_small", lambda spark, f, k: FakeDF(k)
+            compat, "load_hdf_distributed", lambda spark, f, k, chunk_rows: FakeDF(k)
         )
         seen = []
 
