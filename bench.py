@@ -91,7 +91,7 @@ def etl_copy_to_postgres(spark, sf_dir: str):
     `/root/reference/README.md:16`). Spins up a throwaway local cluster
     (sinks/pglocal), creates the lineitem target, and times
     copy_to_postgres (parallel per-partition COPY FROM STDIN over the
-    pure-Python wire client). Returns (secs, rows) or None when the
+    pure-Python wire client). Returns (secs, rows), or None when the
     environment can't run a server — the bench line stays valid either way.
     """
     from pandas_to_postgres_spark.sinks import pglocal, pgwire
@@ -165,8 +165,6 @@ def etl_copy_to_postgres(spark, sf_dir: str):
             rows = int(cur.fetchall()[0][0])
         conn.close()
         return secs, rows
-    except Exception:
-        return None
     finally:
         if server is not None:
             pglocal.stop(server)
@@ -177,24 +175,19 @@ def stream_throughput(spark, sf_dir: str, runs: int = 3):
     windowed aggregation (watermark + 10-minute tumbling windows, the
     §2.9 workhorse) with an AvailableNow trigger and report sustained
     rows/s of STREAM INPUT processed. Returns ([secs...], rows) — one
-    timing per full drain — or None if the streaming path is unavailable."""
-    try:
-        from pandas_to_postgres_spark.streaming.events import (
-            windowed_event_counts,
-        )
+    timing per full drain."""
+    from pandas_to_postgres_spark.streaming.events import windowed_event_counts
 
-        import pyarrow.parquet as pq  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
 
-        rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-        secs = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            out = windowed_event_counts(spark, sf_dir)
-            out.count()
-            secs.append(time.perf_counter() - t0)
-        return secs, rows
-    except Exception:
-        return None
+    rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
+    secs = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        out = windowed_event_counts(spark, sf_dir)
+        out.count()
+        secs.append(time.perf_counter() - t0)
+    return secs, rows
 
 
 def stream_throughput_8x(spark, sf_dir: str):
@@ -203,43 +196,51 @@ def stream_throughput_8x(spark, sf_dir: str):
     section). Draining 8 key-shifted copies amortizes the fixed cost and
     reports a number close to the marginal per-row rate. Builds the 8x
     events table once under .bench_stream8x/ (events only — the stream
-    tier reads nothing else); returns (secs, rows) min-of-2 or None."""
+    tier reads nothing else); returns (secs, rows) min-of-2."""
+    import shutil
+
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    from pyspark.sql import functions as F
+    from pandas_to_postgres_spark.sources.parquet import load_table
+    from pandas_to_postgres_spark.streaming.events import (
+        windowed_event_counts,
+    )
+
+    x8 = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_stream8x")
+    path = f"{x8}/events.parquet"
+    base_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
+    want = 8 * base_rows
+    # Spark writes a parquet DIRECTORY — count through Spark on reuse
+    have = spark.read.parquet(path).count() if os.path.isdir(path) else -1
+    if have != want:
+        shutil.rmtree(x8, ignore_errors=True)
+        base = load_table(spark, sf_dir, "events")
+        copies = [
+            base.withColumn("event_id", F.col("event_id") + F.lit(i * 10**9))
+            .withColumn("user_id", F.col("user_id") + F.lit(i * 10**9))
+            for i in range(8)
+        ]
+        out = copies[0]
+        for c in copies[1:]:
+            out = out.unionByName(c)
+        out.write.mode("overwrite").parquet(path)
+    secs = float("inf")
+    for _ in range(2):
+        t0 = time.perf_counter()
+        windowed_event_counts(spark, x8).count()
+        secs = min(secs, time.perf_counter() - t0)
+    return secs, want
+
+
+def _tier(errors: dict, name: str, fn, *args):
+    """``fn(*args)``, or None after recording its first failure as
+    ``errors[name] = "<ExcType>: <message>"`` — a failing tier still drops
+    out of the JSON line, but says why under ``"tier_errors"``."""
     try:
-        import shutil
-
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        from pyspark.sql import functions as F
-        from pandas_to_postgres_spark.sources.parquet import load_table
-        from pandas_to_postgres_spark.streaming.events import (
-            windowed_event_counts,
-        )
-
-        x8 = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_stream8x")
-        path = f"{x8}/events.parquet"
-        base_rows = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-        want = 8 * base_rows
-        # Spark writes a parquet DIRECTORY — count through Spark on reuse
-        have = spark.read.parquet(path).count() if os.path.isdir(path) else -1
-        if have != want:
-            shutil.rmtree(x8, ignore_errors=True)
-            base = load_table(spark, sf_dir, "events")
-            copies = [
-                base.withColumn("event_id", F.col("event_id") + F.lit(i * 10**9))
-                .withColumn("user_id", F.col("user_id") + F.lit(i * 10**9))
-                for i in range(8)
-            ]
-            out = copies[0]
-            for c in copies[1:]:
-                out = out.unionByName(c)
-            out.write.mode("overwrite").parquet(path)
-        secs = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            windowed_event_counts(spark, x8).count()
-            secs = min(secs, time.perf_counter() - t0)
-        return secs, want
-    except Exception:
+        return fn(*args)
+    except Exception as e:  # noqa: BLE001 - reported in the JSON line
+        errors.setdefault(name, f"{type(e).__name__}: {e}")
         return None
 
 
@@ -347,8 +348,10 @@ def main() -> None:
     # #3), so the first attempt — which pays filesystem/page-cache
     # warm-up for the tier — is excluded and the headline field is the
     # MEDIAN of the next 5, min/max recorded for dispersion
-    etl_copy_to_postgres(spark, sf_dir)  # warm-up attempt, discarded
-    attempts = [p for p in (etl_copy_to_postgres(spark, sf_dir) for _ in range(5)) if p]
+    tier_errors: dict[str, str] = {}
+    pg_tier = ("etl_copy_to_postgres", etl_copy_to_postgres, spark, sf_dir)
+    _tier(tier_errors, *pg_tier)  # warm-up attempt, discarded
+    attempts = [p for p in (_tier(tier_errors, *pg_tier) for _ in range(5)) if p]
     if attempts:
         rates = sorted(r / s for s, r in attempts)
         # not added to "value": the headline total stays comparable with
@@ -359,7 +362,7 @@ def main() -> None:
         line["pg_copy_rows"] = attempts[0][1]
     # stream tier: discarded warm-up + 5-rep median, the pg/etl protocol
     # (round-7 verdict What's-wrong #3 — 77.6k→69k r6→r7 was phase)
-    st = stream_throughput(spark, sf_dir, runs=6)
+    st = _tier(tier_errors, "stream_throughput", stream_throughput, spark, sf_dir, 6)
     if st is not None:
         st_secs, st_rows = st
         st_secs = st_secs[1:]  # first drain pays tier warm-up: discard
@@ -372,7 +375,7 @@ def main() -> None:
     # on a sub-second workload); the 8x drain amortizes it and approaches
     # the marginal per-row rate SCALE.md measures — emit both so the
     # recorded artifact stops implying a 47k rows/s ceiling
-    st8 = stream_throughput_8x(spark, sf_dir)
+    st8 = _tier(tier_errors, "stream_throughput_8x", stream_throughput_8x, spark, sf_dir)
     if st8 is not None:
         s8, r8 = st8
         line["stream_rows_per_sec_8x"] = round(r8 / s8)
@@ -380,6 +383,8 @@ def main() -> None:
             line["stream_rows_per_sec_marginal"] = round(
                 (r8 - st_rows) / (s8 - min(st_secs))
             )
+    if tier_errors:
+        line["tier_errors"] = tier_errors
     print(json.dumps(line))
 
 

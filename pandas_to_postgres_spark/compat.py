@@ -29,7 +29,9 @@ from pandas_to_postgres_spark.sources.hdf import (
     load_hdf_distributed,
 )
 
-Sink = Callable[[str, DataFrame], None]
+#: ``sink(table_name, df)``; a sink that returns the rows it loaded spares
+#: the copy classes a second scan of the source to count them
+Sink = Callable[[str, DataFrame], Optional[int]]
 
 
 def get_logger(name: str) -> logging.Logger:
@@ -52,8 +54,11 @@ class _BaseCopy:
         df = apply_formatters(
             df, self.formatters, copy_obj=self, **formatter_kwargs
         )
-        self.sink(self.table_name, df)
-        self.rows = df.count()
+        self._sink(df)
+
+    def _sink(self, df: DataFrame) -> None:
+        n = self.sink(self.table_name, df)
+        self.rows = n if isinstance(n, int) else df.count()
 
 
 class DataFrameCopy(_BaseCopy):
@@ -128,9 +133,7 @@ class HDFTableCopy(_BaseCopy):
         return union_sources(parts)
 
     def copy(self) -> None:
-        df = self._load(formatted=True)
-        self.sink(self.table_name, df)
-        self.rows = df.count()
+        self._sink(self._load(formatted=True))
 
 
 class SmallHDFTableCopy(HDFTableCopy):

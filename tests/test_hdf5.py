@@ -348,6 +348,33 @@ class TestSparkSources:
         copy.copy()
         assert seen == {"t": 50}
 
+    def test_compat_copy_takes_rows_from_the_sink(self, spark, tmp_path):
+        """A sink that returns the rows it loaded spares the copy a second
+        scan of the source: no Spark job runs after the sink's."""
+        p = str(tmp_path / "rows.h5")
+        write_frame_table(p, {"k": _frame(4000)}, chunk_rows=500)
+        sc = spark.sparkContext
+        group = "compat-copy-rows"
+        seen = {}
+
+        def sink(name, df):
+            n = df.count()
+            seen["jobs"] = set(sc.statusTracker().getJobIdsForGroup(group))
+            return n
+
+        copy = compat.HDFTableCopy(
+            p, ["k"], spark, sink, "t", big=True, hdf_chunksize=1000
+        )
+        sc.setJobGroup(group, "compat copy rows")
+        try:
+            copy.copy()
+            after = set(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+                sc.setLocalProperty(f"spark.{prop}", None)
+        assert copy.rows == 4000
+        assert seen["jobs"] and after == seen["jobs"]
+
 
 class TestHdfSink:
     def test_write_dir_roundtrip(self, spark, tmp_path):

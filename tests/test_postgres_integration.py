@@ -371,6 +371,109 @@ class TestStagedCore:
             assert self._stages_left(schema, name) == "0"
 
 
+class TestDirectRefresh:
+    """The default (direct) full refresh: its pre-load transaction commits
+    beside the COPY job, and every task checks it landed in the storage
+    that transaction's TRUNCATE created."""
+
+    _q = TestStagedCore._q
+
+    def _table(self, pg, name, rows=()):
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            cur.execute(f"DROP TABLE IF EXISTS {name}")
+            cur.execute(f"CREATE TABLE {name} (k BIGINT PRIMARY KEY, tag TEXT)")
+            for r in rows:
+                cur.execute(f"INSERT INTO {name} VALUES (%s, %s)", r)
+        conn.close()
+        return reflect_target_table(pg, "public", name)
+
+    def _has_pk(self, pg, name):
+        return self._q(
+            pg, "SELECT count(*) FROM pg_constraint WHERE conname = %s",
+            (f"{name}_pkey",),
+        ) == [("1",)]
+
+    def _frame(self, spark, tag, keys=range(200)):
+        return spark.createDataFrame([(k, tag) for k in keys], "k long, tag string")
+
+    def test_returns_rows_on_every_path(self, spark, schema):
+        target = self._table(schema, "direct_rows")
+        df = self._frame(spark, "a", range(50))
+        assert copy_to_postgres(df, schema, target, num_partitions=3) == 50
+        assert copy_to_postgres(df, schema, target, staged=True) == 50
+        assert copy_to_postgres(df, schema, target, freeze=True) == 50
+        assert copy_to_postgres(df.limit(0), schema, target) == 0
+        assert self._q(schema, "SELECT count(*) FROM direct_rows") == [("0",)]
+        assert self._has_pk(schema, "direct_rows")
+
+    def test_failed_copy_leaves_no_session(self, spark, schema):
+        """A job that fails mid-COPY still closes the DDL connection, even
+        while the caller holds the traceback (and so the call's frame)."""
+        import time
+
+        target = self._table(schema, "direct_fail")
+        bad = spark.createDataFrame(
+            [("x" if k == 7 else str(k), "t") for k in range(20)],
+            "k string, tag string",
+        )
+        with pytest.raises(Exception, match="invalid input syntax") as err:
+            copy_to_postgres(bad, schema, target, num_partitions=2)
+        others = (
+            "SELECT count(*) FROM pg_stat_activity"
+            " WHERE backend_type = 'client backend' AND pid <> pg_backend_pid()"
+        )
+        deadline = time.monotonic() + 10
+        while self._q(schema, others) != [("0",)] and time.monotonic() < deadline:
+            time.sleep(0.1)
+        assert err.tb is not None
+        assert self._q(schema, others) == [("0",)]
+
+    def test_rolled_back_bracket_copies_nothing(self, spark, schema, monkeypatch):
+        """The pre-load transaction rolls back instead of committing: every
+        task's storage check fails, so no row lands in the old storage, and
+        the constraint drop rolled back with the TRUNCATE."""
+        from pandas_to_postgres_spark.sinks import postgres_copy
+
+        target = self._table(schema, "direct_rollback", [(k, "old") for k in range(10)])
+        monkeypatch.setattr(postgres_copy, "_commit_bracket", lambda c: c.rollback())
+        new = self._frame(spark, "new", range(100, 130))
+        with pytest.raises(Exception, match="did not commit"):
+            copy_to_postgres(new, schema, target, num_partitions=2)
+        assert self._q(
+            schema, "SELECT tag, count(*) FROM direct_rollback GROUP BY tag"
+        ) == [("old", "10")]
+        assert self._has_pk(schema, "direct_rollback")
+
+    def test_concurrent_direct_refreshes_keep_one(self, spark, schema):
+        """Two direct refreshes of one table from two threads: no error, no
+        deadlock, exactly one refresh's rows and the PK."""
+        import threading
+
+        target = self._table(schema, "direct_conc")
+        frames = {tag: self._frame(spark, tag) for tag in ("a", "b")}
+        for _ in range(3):
+            errors = []
+
+            def refresh(tag):
+                try:
+                    copy_to_postgres(frames[tag], schema, target, num_partitions=4)
+                except Exception as e:  # noqa: BLE001 - asserted below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=refresh, args=(t,)) for t in frames]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(120)
+            assert not any(t.is_alive() for t in threads)
+            assert errors == []
+            got = self._q(schema, "SELECT tag, count(*) FROM direct_conc GROUP BY tag")
+            assert got in ([("a", "200")], [("b", "200")])
+            assert self._has_pk(schema, "direct_conc")
+
+
 class TestReferenceApiToPostgres:
     """The reference's flagship verb driven end-to-end: a user of
     cid-harvard/pandas-to-postgres switches `ParquetCopy` to this engine

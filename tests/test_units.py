@@ -680,3 +680,32 @@ class TestScaledStatePartitions:
             assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+class TestStorageGuard:
+    """The setup statements of a direct COPY task (sinks/postgres_copy)."""
+
+    def test_lock_then_filenode_check(self):
+        from pandas_to_postgres_spark.sinks.postgres_copy import _storage_guard
+
+        lock, check = _storage_guard(TargetTable("s", "it's", ("a",)), "16390")
+        assert lock == 'LOCK TABLE "s"."it\'s" IN ROW EXCLUSIVE MODE'
+        assert "pg_relation_filenode('\"s\".\"it''s\"'::regclass)" in check
+        assert "IS DISTINCT FROM 16390 THEN RAISE EXCEPTION" in check
+        # a table without storage of its own (partitioned) reads NULL
+        assert "IS DISTINCT FROM NULL " in _storage_guard(T, None)[1]
+
+
+class TestBenchTierErrors:
+    def test_failure_is_recorded_and_tier_drops_out(self):
+        import bench
+
+        errors: dict = {}
+        assert bench._tier(errors, "ok", lambda x: x + 1, 1) == 2
+
+        def no_server():
+            raise RuntimeError("server did not start")
+
+        assert bench._tier(errors, "pg", no_server) is None
+        bench._tier(errors, "pg", lambda: 1 / 0)  # the first failure is kept
+        assert errors == {"pg": "RuntimeError: server did not start"}
