@@ -170,6 +170,88 @@ def etl_copy_to_postgres(spark, sf_dir: str):
             pglocal.stop(server)
 
 
+def pg_exactly_once(spark, sf_dir: str, n_files: int = 8):
+    """Exactly-once Postgres tier: the events table split into ``n_files``
+    parquet files, drained one file per trigger through
+    `streaming/sink.stream_to_postgres_exactly_once` into a throwaway
+    server — per batch: stage COPY, the publish transaction, the deferred
+    stage drop. Returns (median rows/s over the batches after the first,
+    rows), or None when the environment can't run a server."""
+    import json
+    import shutil
+
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    from pandas_to_postgres_spark.sinks import pglocal, pgwire
+    from pandas_to_postgres_spark.sinks.postgres_copy import (
+        join_stage_drops,
+        reflect_target_table,
+    )
+    from pandas_to_postgres_spark.sources.parquet import (
+        normalize_event_ts,
+        read_raw_events,
+    )
+    from pandas_to_postgres_spark.streaming.sink import (
+        stream_to_postgres_exactly_once,
+    )
+
+    if pglocal.available() is not None:
+        return None
+    work = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_pg_stream")
+    files = os.path.join(work, "events.parquet")
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(files)
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    step = -(-events.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(
+            events.slice(i * step, step), os.path.join(files, f"part-{i:03d}.parquet")
+        )
+    server = None
+    try:
+        server = pglocal.start(port=54332, server_opts=pglocal.BULK_LOAD_OPTS)
+        conn = pgwire.connect(**server.conn_params)
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            cur.execute(
+                "CREATE TABLE events_sink (event_id BIGINT, ts TIMESTAMP,"
+                " user_id BIGINT, event_type TEXT, value DOUBLE PRECISION,"
+                " props TEXT)"
+            )
+        conn.close()
+        target = reflect_target_table(server.conn_params, "public", "events_sink")
+        stream = normalize_event_ts(
+            spark.readStream.schema(read_raw_events(spark, work).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(files)
+        )
+        q = stream_to_postgres_exactly_once(
+            stream, server.conn_params, target, os.path.join(work, "ckpt"),
+            num_partitions=spark.sparkContext.defaultParallelism,
+        )
+        q.awaitTermination()
+        if q.exception() is not None:
+            raise RuntimeError(str(q.exception()))
+        join_stage_drops()  # the last batch's drop, before the server stops
+        conn = pgwire.connect(**server.conn_params)
+        with conn, conn.cursor() as cur:
+            cur.execute("SELECT count(*) FROM events_sink")
+            rows = int(cur.fetchall()[0][0])
+        conn.close()
+        if rows != events.num_rows:
+            raise RuntimeError(f"{rows} rows landed, {events.num_rows} sent")
+        batches = [json.loads(p.json) for p in q.recentProgress]
+        rates = [
+            b["numInputRows"] / b["durationMs"]["triggerExecution"] * 1000
+            for b in batches if b["numInputRows"]
+        ][1:]
+        return _median(rates), rows
+    finally:
+        if server is not None:
+            pglocal.stop(server)
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def stream_throughput(spark, sf_dir: str, runs: int = 3):
     """Structured Streaming tier: drain the events table through the
     windowed aggregation (watermark + 10-minute tumbling windows, the
@@ -360,6 +442,13 @@ def main() -> None:
         line["pg_copy_rows_per_sec_min"] = round(rates[0])
         line["pg_copy_rows_per_sec_max"] = round(rates[-1])
         line["pg_copy_rows"] = attempts[0][1]
+    # exactly-once Postgres tier: median rows/s over one drain's warm
+    # micro-batches (stage COPY + publish per batch), the path the COPY
+    # tier above never takes
+    eo = _tier(tier_errors, "pg_exactly_once", pg_exactly_once, spark, sf_dir)
+    if eo is not None:
+        line["pg_exactly_once_rows_per_sec"] = round(eo[0])
+        line["pg_exactly_once_rows"] = eo[1]
     # stream tier: discarded warm-up + 5-rep median, the pg/etl protocol
     # (round-7 verdict What's-wrong #3 — 77.6k→69k r6→r7 was phase)
     st = _tier(tier_errors, "stream_throughput", stream_throughput, spark, sf_dir, 6)

@@ -52,6 +52,7 @@ class Cursor:
         self._conn = conn
         self._rows: list = []
         self.description: Optional[list] = None
+        self.rowcount = -1
 
     def __enter__(self):
         return self
@@ -63,7 +64,7 @@ class Cursor:
         if params is not None:
             sql = sql % tuple(_literal(p) for p in params)
         self._conn._maybe_begin()
-        cols, rows = self._conn._query(sql)
+        cols, rows, self.rowcount = self._conn._query(sql)
         self.description = [(c,) for c in cols] if cols else None
         self._rows = rows
 
@@ -143,10 +144,14 @@ class Connection:
 
     # ---------------------------------------------------------------- queries
 
-    def _query(self, sql: str) -> tuple[list, list]:
+    def _query(self, sql: str) -> tuple[list, list, int]:
+        """Run ``sql``; returns its columns, its rows and the row count of
+        its CommandComplete tag (``INSERT 0 5`` → 5; -1 for a tag without
+        one, such as ``CREATE TABLE``), as psycopg2's ``rowcount``."""
         self._send(b"Q", sql.encode() + b"\0")
         cols: list = []
         rows: list = []
+        rowcount = -1
         err: Optional[str] = None
         while True:
             t, payload = self._recv()
@@ -171,15 +176,18 @@ class Connection:
                         row.append(payload[off : off + ln].decode())
                         off += ln
                 rows.append(tuple(row))
+            elif t == b"C":
+                last = payload.rstrip(b"\0").rsplit(b" ", 1)[-1]
+                rowcount = int(last) if last.isdigit() else -1
             elif t == b"E":
                 err = self._error_text(payload)
             elif t == b"Z":
                 self._in_tx = payload == b"T"
                 break
-            # 'C' CommandComplete / 'N' Notice / 'I' Empty / 'S' Parameter: skip
+            # 'N' Notice / 'I' Empty / 'S' Parameter: skip
         if err:
             raise PgError(f"{err} -- while running: {sql[:200]}")
-        return cols, rows
+        return cols, rows, rowcount
 
     def _copy_in(self, sql: str, file, chunk_bytes: int = 1 << 20) -> None:
         self._send(b"Q", sql.encode() + b"\0")

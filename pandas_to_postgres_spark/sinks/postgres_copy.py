@@ -46,6 +46,7 @@ import hashlib
 import io
 import itertools
 import re
+import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
@@ -345,9 +346,20 @@ def append_to_postgres(
 #   ``pg_advisory_xact_lock(hashtext(schema.table))`` — concurrent
 #   publishes to one target serialize instead of deadlocking on TRUNCATE +
 #   INSERT ordering — records the ledger row (if any; a recorded epoch is a
-#   replay and publishes nothing), TRUNCATEs (if asked), INSERTs the stages
-#   named in the messages and only those, and drops the scope's stages.
-#   Readers see the old table until the commit.
+#   replay and publishes nothing), TRUNCATEs (if asked) and INSERTs the
+#   stages named in the messages and only those, checking that they held
+#   exactly the rows the messages report. Readers see the old table until
+#   the commit.
+# - deferred drop (:func:`_defer_sweep`): a COMMIT that drops relations
+#   flushes WAL synchronously and frees their files (half of a small
+#   batch's wall on an ext4 mount with ``discard``), so a published scope's
+#   stages are dropped AFTER the commit, by one autocommit
+#   :func:`_sweep_stages` on the publish's own connection, sent from a
+#   one-worker helper thread. At most one drop is pending per process; the
+#   next publish, abort or deferral joins it first (:func:`join_stage_drops`),
+#   re-running a failed drop inline once and raising, with the stages'
+#   names, only if that fails too. A crash before the drop leaves stages
+#   that the scope sweep on replay, or the bound below, removes.
 # - abort / orphan sweep (:func:`_sweep_stages`): drops the messages'
 #   stages plus every catalog table matching the scope's regex.
 #
@@ -357,9 +369,9 @@ def append_to_postgres(
 # batch writer. The streaming writer's commit runs in a separate process
 # with no task-side state, so it addresses stages only through its
 # messages. Residual caveat: a stage created by a driver that died before
-# commit or abort (or by a zombie task after its job's sweep) is an orphan
-# outside any live scope; bounded cleanup is DROP of ``<table>__stg_%`` at
-# a quiet moment.
+# commit, abort or the deferred drop (or by a zombie task after its job's
+# sweep) is an orphan outside any live scope; bounded cleanup is DROP of
+# ``<table>__stg_%`` at a quiet moment.
 
 def _stage_prefix(table: str, scope: str) -> str:
     # ≤ 32-byte readable head + a tag over the FULL (table, scope): two
@@ -425,20 +437,78 @@ def _sweep_stages(
         )
 
 
+#: the one helper thread that runs deferred stage drops, and the drop not
+#: yet joined: ``(future, conn_params, target, messages, scope)``
+_DROPS = ThreadPoolExecutor(1, thread_name_prefix="stage-drop")
+_DROPS_LOCK = threading.RLock()
+_pending_drop: Optional[tuple] = None
+
+
+def _sweep_on(conn, target: TargetTable, messages, scope) -> None:
+    """:func:`_sweep_stages` as one autocommit statement on ``conn``,
+    which it closes."""
+    try:
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            _sweep_stages(cur, target, messages, scope)
+    finally:
+        conn.close()
+
+
+def _sweep(conn_params: dict, target: TargetTable, messages, scope) -> None:
+    _sweep_on(_psycopg2().connect(**conn_params), target, messages, scope)
+
+
+def join_stage_drops() -> None:
+    """Wait for the pending deferred stage drop, if any. A failed drop is
+    re-run once on a new connection; if that fails too, this raises,
+    naming the stages it could not drop. Every staged verb joins before it
+    starts; call it directly before asserting that no stage is left, or
+    before a process that published may exit."""
+    global _pending_drop
+    with _DROPS_LOCK:
+        pending, _pending_drop = _pending_drop, None
+        if pending is None:
+            return
+        done, conn_params, target, messages, scope = pending
+        if done.exception() is None:
+            return
+        try:
+            _sweep(conn_params, target, messages, scope)
+        except Exception as e:
+            names = sorted({m.stage for m in messages if m is not None and m.stage})
+            where = "" if scope is None else f" (scope {stage_pattern(target.name, scope)})"
+            raise RuntimeError(
+                f"could not drop the stages {names}{where} of {target.qualified}:"
+                f" {done.exception()}; re-run: {e}"
+            ) from e
+
+
+def _defer_sweep(
+    conn, conn_params: dict, target: TargetTable, messages, scope
+) -> None:
+    """Hand :func:`_sweep_on` of a committed publish's stages, and its
+    connection, to the helper thread, after joining the drop before it.
+    The hand-off happens even when that join raises."""
+    global _pending_drop
+    with _DROPS_LOCK:
+        try:
+            join_stage_drops()
+        finally:
+            done = _DROPS.submit(_sweep_on, conn, target, messages, scope)
+            _pending_drop = (done, dict(conn_params), target, list(messages), scope)
+
+
 def abort_stages(
     conn_params: dict,
     target: TargetTable,
     messages,
     scope: Optional[str] = None,
 ) -> None:
-    """Abort side of the core: :func:`_sweep_stages` on its own connection."""
-    conn = _psycopg2().connect(**conn_params)
-    conn.autocommit = True
-    try:
-        with conn.cursor() as cur:
-            _sweep_stages(cur, target, messages, scope)
-    finally:
-        conn.close()
+    """Abort side of the core: :func:`_sweep_stages` on its own connection,
+    after joining the pending drop."""
+    join_stage_drops()
+    _sweep(conn_params, target, messages, scope)
 
 
 def publish_stages(
@@ -450,8 +520,10 @@ def publish_stages(
     ledger: Optional[tuple] = None,
 ) -> int:
     """Publish side of the core: ONE transaction moves the stages named in
-    ``messages`` into ``target`` (after a TRUNCATE when ``truncate``) and
-    drops them with the rest of ``scope``'s stages.
+    ``messages`` into ``target`` (after a TRUNCATE when ``truncate``); the
+    stages, with the rest of ``scope``'s, are dropped after it commits
+    (:func:`_defer_sweep`). The transaction raises, and so rolls back,
+    unless the stages held exactly the rows the messages report.
 
     ``ledger = (epoch_table, run_id, batch_id)`` makes the publish
     exactly-once: the epoch row is inserted in the same transaction, and
@@ -459,9 +531,12 @@ def publish_stages(
     stages are dropped, and 0 is returned. A unique violation on the epoch
     row means a publisher outside the advisory lock won the race: the
     transaction rolled back whole, so this attempt's stages are dropped
-    and 0 is returned. Otherwise returns the rows published."""
-    n = sum(m.n_rows for m in messages if m is not None)
-    stages = sorted({m.stage for m in messages if m is not None and m.stage})
+    and 0 is returned. Both drop inline. Otherwise returns the rows
+    published."""
+    join_stage_drops()
+    messages = [m for m in messages if m is not None]
+    n = sum(m.n_rows for m in messages)
+    stages = sorted({m.stage for m in messages if m.stage})
     cols = ", ".join(f'"{c}"' for c in target.columns)
     conn = _psycopg2().connect(**conn_params)
     replay = recording = False
@@ -494,25 +569,34 @@ def publish_stages(
                         (*key, n),
                     )
                     recording = False
-            if not replay:
+            if replay:
+                _sweep_stages(cur, target, messages, scope)
+            else:
                 if truncate:
                     cur.execute(truncate_sql(target))
+                moved = 0
                 for st in stages:
                     cur.execute(
                         f"INSERT INTO {target.qualified} ({cols})"
                         f' SELECT {cols} FROM "{target.schema}"."{st}"'
                     )
-            _sweep_stages(cur, target, messages, scope)
+                    moved += cur.rowcount
+                if moved != n:
+                    raise RuntimeError(
+                        f"the stages of {target.qualified} held {moved} rows,"
+                        f" their tasks reported {n}: nothing was published"
+                    )
     except Exception as e:
         if not (recording and _is_unique_violation(e)):
+            conn.close()
             raise
-        conn.autocommit = True
-        with conn.cursor() as cur:
-            _sweep_stages(cur, target, messages, scope)
+        _sweep_on(conn, target, messages, scope)
         return 0
-    finally:
+    if replay:
         conn.close()
-    return 0 if replay else n
+        return 0
+    _defer_sweep(conn, conn_params, target, messages, scope)
+    return n
 
 
 def _staged_write(
@@ -786,11 +870,13 @@ def _keyed_apply(
     """Shared body of the keyed writers: COPY ``df`` into one stage under a
     per-call scope (so concurrent calls on one target never touch each
     other's stage), created by ``stage_ddl(stage)``; then ONE transaction
-    runs ``apply(stage)`` and drops the stage. Any failure drops the
-    stage. Returns the staged row count."""
+    runs ``apply(stage)``, and the stage is dropped after it commits
+    (:func:`_defer_sweep`). Any failure drops the stage inline. Returns
+    the staged row count."""
     name = stage_name(target.name, uuid.uuid4().hex, 0)
     stage = TargetTable(target.schema, name, df.columns)
     msg = [StageMessage(stage.name, 0)]
+    join_stage_drops()
     conn = _psycopg2().connect(**conn_params)
     conn.autocommit = True
     try:
@@ -801,14 +887,10 @@ def _keyed_apply(
         with conn, conn.cursor() as cur:  # ONE transaction: atomic apply
             for sql in apply(stage.qualified):
                 cur.execute(sql)
-            _sweep_stages(cur, target, msg, None)
     except Exception:
-        conn.autocommit = True
-        with conn.cursor() as cur:
-            _sweep_stages(cur, target, msg, None)
+        _sweep_on(conn, target, msg, None)
         raise
-    finally:
-        conn.close()
+    _defer_sweep(conn, conn_params, target, msg, None)
     return n
 
 
@@ -821,9 +903,9 @@ def upsert_to_postgres(
 ) -> int:
     """Incremental MERGE (SCD1 upsert) into Postgres: stage the batch via
     the parallel COPY data plane, then ONE transaction applies
-    ``INSERT ... SELECT ... ON CONFLICT (keys) DO UPDATE`` and drops the
-    stage — new keys insert, existing keys take the batch's values, and
-    readers never see a half-applied batch.
+    ``INSERT ... SELECT ... ON CONFLICT (keys) DO UPDATE``, and the stage
+    is dropped after its commit — new keys insert, existing keys take the
+    batch's values, and readers never see a half-applied batch.
 
     The reference only full-refreshes (TRUNCATE + COPY); this is the
     incremental twin a CDC pipeline needs (`operators/cdc.upsert` is the

@@ -75,6 +75,7 @@ from pandas_to_postgres_spark.sinks.postgres_copy import (
     _copy_task,
     _stage_plan,
     abort_stages,
+    join_stage_drops,
     publish_stages,
 )
 
@@ -314,10 +315,12 @@ class _StagedWriter:
     `sinks/postgres_copy` (DROP-IF-EXISTS + CREATE + COPY of its stage in
     one transaction, so a retried or speculative attempt replaces its
     stage) and returns the stage's :class:`StageMessage`. Commit and abort
-    are the core's publish and sweep; its module comment describes the
-    one residual caveat (orphans of a driver that died before commit or
-    abort). The stage scope is minted per writer on the driver and pickled
-    into every task."""
+    are the core's publish and sweep; a commit also waits for the publish's
+    deferred stage drop, because Spark may end the process that ran it
+    right after. The core's module comment describes the one residual
+    caveat (orphans of a driver that died before commit or abort). The
+    stage scope is minted per writer on the driver and pickled into every
+    task."""
 
     def __init__(self, options, columns):
         self.params = _conn_params(options)
@@ -352,6 +355,7 @@ class PostgresArrowWriter(_StagedWriter, DataSourceArrowWriter):
             self.scope,
             truncate=self.overwrite,
         )
+        join_stage_drops()  # the commit runner may exit right after
 
     def abort(self, messages) -> None:
         abort_stages(self.params, self.target, messages, self.scope)
@@ -507,6 +511,7 @@ class PostgresStreamWriter(_StagedWriter, DataSourceStreamArrowWriter):
             messages,
             ledger=(self.epoch_table, self.run_id, batchId),
         )
+        join_stage_drops()  # the commit runner may exit right after
 
     def abort(self, messages, batchId) -> None:  # noqa: N803 — API name
         abort_stages(self.params, self.target, messages)

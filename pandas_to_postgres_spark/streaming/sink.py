@@ -88,8 +88,11 @@ def stream_to_postgres_exactly_once(
 
     Scale: the data plane is the same N-writer COPY used for bulk loads —
     per-executor connections into an unlocked stage table; only the
-    publish (a metadata-sized transaction: INSERT..SELECT + ledger row +
-    DROP) serializes per batch. The checkpoint directory carries the
+    publish (a metadata-sized transaction: INSERT..SELECT + ledger row)
+    serializes per batch. The stages are dropped after the commit, off the
+    batch's critical path; a crash before that drop leaves stages that the
+    batch's replay sweeps, or that the ``<table>__stg_%`` bound of
+    `sinks/postgres_copy` removes. The checkpoint directory carries the
     source offsets; the ledger carries the sink state — together they
     survive a restart of either side.
 

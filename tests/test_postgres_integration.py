@@ -19,6 +19,7 @@ from pandas_to_postgres_spark.sinks.postgres_copy import (
     ForeignKey,
     TargetTable,
     copy_to_postgres,
+    join_stage_drops,
     reflect_target_table,
 )
 
@@ -30,6 +31,7 @@ def pg():
         pytest.skip(reason)
     server = pglocal.start()
     yield server.conn_params
+    join_stage_drops()  # no deferred stage drop outlives its server
     pglocal.stop(server)
 
 
@@ -83,6 +85,22 @@ class TestPgWire:
             cur.execute("SELECT * FROM no_such_table")
         cur.execute("SELECT 42")
         assert cur.fetchall() == [("42",)]
+        conn.close()
+
+    def test_rowcount_from_command_tag(self, pg):
+        """``rowcount`` is the count of the CommandComplete tag, as in
+        psycopg2: -1 for a statement whose tag carries none."""
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        cur = conn.cursor()
+        cur.execute("CREATE TEMP TABLE rc (a INT)")
+        assert cur.rowcount == -1
+        cur.execute("INSERT INTO rc SELECT generate_series(1, 3)")
+        assert cur.rowcount == 3
+        cur.execute("UPDATE rc SET a = a + 1 WHERE a > 1")
+        assert cur.rowcount == 2
+        cur.execute("SELECT * FROM rc")
+        assert cur.rowcount == 3
         conn.close()
 
     def test_copy_after_notice(self, pg):
@@ -172,7 +190,8 @@ class TestCopyEndToEnd:
             "SELECT count(*) FROM pg_tables "
             "WHERE tablename LIKE 'customer\\_\\_stg\\_%'"
         )
-        # publish dropped every stage table
+        # the publish's deferred drop removed every stage table
+        join_stage_drops()
         assert self._counts(schema, stages)[0] == ("0",)
         # a leftover stage of a crashed refresh (another scope) is never
         # published, nor swept by a live refresh
@@ -184,6 +203,7 @@ class TestCopyEndToEnd:
         conn.close()
         copy_to_postgres(new, schema, target, num_partitions=2, staged=True)
         assert self._counts(schema, "SELECT count(*) FROM customer")[0] == ("500",)
+        join_stage_drops()
         assert self._counts(schema, stages)[0] == ("1",)
         conn = pgwire.connect(**schema)
         with conn, conn.cursor() as cur:
@@ -264,7 +284,9 @@ class TestStagedCore:
 
     def _stages_left(self, pg, name):
         """Tables sharing the target's first 32 bytes (every stage name's
-        head), other than the target itself."""
+        head), other than the target itself, once the pending deferred
+        stage drop is joined."""
+        join_stage_drops()
         like = name[:32].replace("_", "\\_") + "%"
         return self._q(
             pg,
@@ -369,6 +391,158 @@ class TestStagedCore:
             got = self._q(schema, f"SELECT tag, count(*) FROM {name} GROUP BY tag")
             assert got in ([("a", "200")], [("b", "200")])
             assert self._stages_left(schema, name) == "0"
+
+
+class TestDeferredStageDrop:
+    """A publish commits without dropping its stages; the drop follows on
+    a helper thread, and the next publish joins it."""
+
+    _table = TestStagedCore._table
+    _q = TestStagedCore._q
+
+    def _setup(self, pg, name):
+        self._table(pg, name)
+        return TargetTable("public", name, ["k", "tag"])
+
+    def _stages(self, pg, name):
+        return self._q(
+            pg,
+            "SELECT tablename FROM pg_tables WHERE tablename LIKE %s"
+            " ORDER BY tablename",
+            (name.replace("_", "\\_") + "\\_\\_stg\\_%",),
+        )
+
+    def _batch(self, spark, tag, n=20):
+        return spark.createDataFrame(
+            [(i, tag) for i in range(n)], "k long, tag string"
+        )
+
+    def test_publish_raises_when_a_stage_lost_rows(self, spark, schema):
+        """A stage emptied between staging and publish: the publish raises,
+        and the target and the ledger are unchanged."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _run_copy_tasks,
+            _stage_plan,
+            abort_stages,
+            publish_stages,
+        )
+
+        target = self._setup(schema, "guard_tgt")
+        messages = _run_copy_tasks(
+            self._batch(spark, "x").repartition(2), schema,
+            _stage_plan(target, "guard"),
+        )
+        emptied = next(m.stage for m in messages if m.n_rows)
+        self._q(schema, f'DELETE FROM "{emptied}" RETURNING 1')
+        with pytest.raises(RuntimeError, match="held .* rows"):
+            publish_stages(
+                schema, target, messages, "guard",
+                ledger=("guard_epochs", "run", 1),
+            )
+        assert self._q(schema, "SELECT count(*) FROM guard_tgt") == [("0",)]
+        assert self._q(schema, "SELECT count(*) FROM guard_epochs") == [("0",)]
+        abort_stages(schema, target, messages, "guard")
+        assert self._stages(schema, "guard_tgt") == []
+
+    def test_blocked_drop_is_off_the_batch_and_rerun_after_a_kill(
+        self, spark, schema
+    ):
+        """The deferred DROP blocks on a lock a reader holds: the batch
+        still returns, published. Its session is then killed, so the drop
+        is lost; the next batch's publish re-runs it."""
+        import time
+
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _batch_scope,
+            load_batch_exactly_once,
+            stage_name,
+        )
+
+        target = self._setup(schema, "dd_tgt")
+        # a crashed attempt's stage in batch 1's scope, which the deferred
+        # scope sweep drops; a reader holds ACCESS SHARE on it
+        held = stage_name("dd_tgt", _batch_scope("", 1), 99)
+        reader = pgwire.connect(**schema)
+        with reader.cursor() as cur:
+            cur.execute(f'CREATE TABLE "{held}" (LIKE dd_tgt)')
+            reader.commit()
+            cur.execute(f'LOCK TABLE "{held}" IN ACCESS SHARE MODE')
+        try:
+            assert load_batch_exactly_once(
+                self._batch(spark, "b1"), schema, target, 1, num_partitions=2
+            ) == 20
+            assert self._q(schema, "SELECT count(*) FROM dd_tgt") == [("20",)]
+            assert self._q(
+                schema,
+                "SELECT n_rows FROM stream_epochs"
+                " WHERE table_name = 'dd_tgt' AND batch_id = 1",
+            ) == [("20",)]
+            blocked = []
+            deadline = time.time() + 60
+            while not blocked and time.time() < deadline:
+                blocked = self._q(
+                    schema,
+                    "SELECT pid FROM pg_stat_activity WHERE wait_event_type"
+                    " = 'Lock' AND query LIKE 'DROP TABLE IF EXISTS%dd_tgt%'",
+                )
+                time.sleep(0.05)
+            assert len(blocked) == 1
+            self._q(schema, "SELECT pg_terminate_backend(%s)", (int(blocked[0][0]),))
+        finally:
+            reader.rollback()
+            reader.close()
+        assert held in [r[0] for r in self._stages(schema, "dd_tgt")]
+
+        assert load_batch_exactly_once(
+            self._batch(spark, "b2"), schema, target, 2, num_partitions=2
+        ) == 20
+        join_stage_drops()
+        assert self._stages(schema, "dd_tgt") == []
+        assert self._q(schema, "SELECT count(*) FROM dd_tgt") == [("40",)]
+
+    def test_failed_rerun_raises_naming_the_stages(self, spark, schema):
+        """A drop that fails again when re-run makes the next publish
+        raise, naming the stages left."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _batch_scope,
+            abort_stages,
+            load_batch_exactly_once,
+        )
+
+        target = self._setup(schema, "ddf_tgt")
+        self._q(
+            schema,
+            """CREATE OR REPLACE FUNCTION ddf_block() RETURNS event_trigger
+               LANGUAGE plpgsql AS $$ BEGIN
+                 IF EXISTS (SELECT 1 FROM pg_event_trigger_dropped_objects()
+                            WHERE object_name LIKE 'ddf\\_tgt\\_\\_stg\\_%')
+                 THEN RAISE EXCEPTION 'stage drops are blocked'; END IF;
+               END $$""",
+        )
+        self._q(
+            schema,
+            "CREATE EVENT TRIGGER ddf_block ON sql_drop"
+            " EXECUTE FUNCTION ddf_block()",
+        )
+        try:
+            assert load_batch_exactly_once(
+                self._batch(spark, "b1"), schema, target, 1, num_partitions=2
+            ) == 20
+            left = [r[0] for r in self._stages(schema, "ddf_tgt")]
+            assert left
+            with pytest.raises(RuntimeError, match="could not drop") as err:
+                load_batch_exactly_once(
+                    self._batch(spark, "b2"), schema, target, 2,
+                    num_partitions=2,
+                )
+            assert all(st in str(err.value) for st in left)
+            # the raising publish published nothing
+            assert self._q(schema, "SELECT count(*) FROM ddf_tgt") == [("20",)]
+        finally:
+            self._q(schema, "DROP EVENT TRIGGER ddf_block")
+        for batch_id in (1, 2):
+            abort_stages(schema, target, (), _batch_scope("", batch_id))
+        assert self._stages(schema, "ddf_tgt") == []
 
 
 class TestDirectRefresh:
@@ -593,6 +767,7 @@ class TestExactlyOnceStreaming:
                 )
                 == 0
             )
+        join_stage_drops()
         conn = pgwire.connect(**conn_params)
         with conn, conn.cursor() as cur:
             cur.execute("SELECT count(*) FROM ev_sink")
@@ -653,6 +828,7 @@ class TestExactlyOnceStreaming:
             .limit(20)
         )
         assert load_batch_exactly_once(batch, conn_params, target, 7) == 20
+        join_stage_drops()
         conn = pgwire.connect(**conn_params)
         with conn, conn.cursor() as cur:
             cur.execute("SELECT count(*) FROM ev_sink2")
@@ -1484,7 +1660,8 @@ class TestCdcApplySink:
             assert cur.fetchall() == [("back30", "30.5")]
             cur.execute("SELECT v FROM kv_cdc WHERE k = 25")
             assert cur.fetchall() == [("v25",)]  # untouched
-            # no stage left behind
+            # no stage left behind once the deferred drop is joined
+            join_stage_drops()
             cur.execute(
                 "SELECT count(*) FROM pg_tables"
                 " WHERE tablename LIKE 'kv\\_cdc\\_\\_stg\\_%'"
@@ -1842,6 +2019,7 @@ class TestCdcLoopEndToEnd:
             assert cur.fetchall() == [("new100",)]
             cur.execute("SELECT v FROM ob_tgt WHERE k = 7")
             assert cur.fetchall() == [("old7",)]  # untouched
+            join_stage_drops()
             cur.execute(
                 "SELECT count(*) FROM pg_tables"
                 " WHERE tablename LIKE 'ob\\_tgt\\_\\_stg\\_%'"
@@ -2003,6 +2181,7 @@ class TestStreamRestartResume:
         )
         assert got == want, f"{len(got)} target rows vs {len(want)} expected"
         # no stage tables left behind by either incarnation
+        join_stage_drops()
         assert q1(
             "SELECT count(*) FROM pg_tables"
             " WHERE tablename LIKE 'rr\\_tgt\\_\\_stg\\_%'"

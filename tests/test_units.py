@@ -709,3 +709,107 @@ class TestBenchTierErrors:
         assert bench._tier(errors, "pg", no_server) is None
         bench._tier(errors, "pg", lambda: 1 / 0)  # the first failure is kept
         assert errors == {"pg": "RuntimeError: server did not start"}
+
+
+class _FakeConn:
+    """A client connection that records each statement, or fails it."""
+
+    def __init__(self, log: list, fail: bool):
+        self.log, self.fail, self.autocommit = log, fail, False
+
+    def cursor(self):
+        return self
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def execute(self, sql, params=None):
+        if self.fail:
+            raise ConnectionError("server closed the connection")
+        self.log.append(sql)
+
+    def close(self):
+        pass
+
+
+class TestDeferredStageDrops:
+    """The one pending stage drop of sinks/postgres_copy, against a fake
+    client."""
+
+    def _fake_client(self, monkeypatch, log, rerun_fails=False):
+        import types
+
+        from pandas_to_postgres_spark.sinks import postgres_copy
+
+        client = types.SimpleNamespace(
+            connect=lambda **_: _FakeConn(log, rerun_fails)
+        )
+        monkeypatch.setattr(postgres_copy, "_psycopg2", lambda: client)
+
+    def test_no_failed_drop_is_lost_under_contention(self, monkeypatch):
+        """Threads (more than cores) defer drops, a third of which fail:
+        every stage is still dropped, by its drop or by the re-run of the
+        join that follows it."""
+        import sys
+        import threading
+
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            StageMessage,
+            _defer_sweep,
+            join_stage_drops,
+        )
+
+        log: list = []
+        self._fake_client(monkeypatch, log)
+        join_stage_drops()
+        names = [f"s_{t}_{i}" for t in range(16) for i in range(20)]
+
+        def defer(t):
+            for i in range(20):
+                name = f"s_{t}_{i}"
+                conn = _FakeConn(log, fail=i % 3 == 0)
+                _defer_sweep(conn, {}, T, [StageMessage(name, 1)], None)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=defer, args=(t,)) for t in range(16)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(60)
+            assert not any(th.is_alive() for th in threads)
+            join_stage_drops()
+        finally:
+            sys.setswitchinterval(old)
+        dropped = sorted(sql.rsplit(".", 1)[1].strip('"') for sql in log)
+        assert dropped == sorted(names)
+
+    def test_failed_rerun_raises_with_the_stage_names(self, monkeypatch):
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            StageMessage,
+            _defer_sweep,
+            join_stage_drops,
+        )
+
+        log: list = []
+        self._fake_client(monkeypatch, log, rerun_fails=True)
+        join_stage_drops()
+        messages = [StageMessage("orders__stg_x_0", 3), StageMessage(None, 0)]
+        _defer_sweep(_FakeConn(log, fail=True), {}, T, messages, None)
+        with pytest.raises(RuntimeError, match=r"\['orders__stg_x_0'\]"):
+            join_stage_drops()
+        join_stage_drops()  # raised once: nothing is pending any more
+        assert log == []
+        # a deferral whose join raises still hands its own drop off
+        _defer_sweep(_FakeConn(log, fail=True), {}, T, messages, None)
+        with pytest.raises(RuntimeError, match="could not drop"):
+            _defer_sweep(
+                _FakeConn(log, fail=False), {}, T,
+                [StageMessage("orders__stg_y_0", 1)], None,
+            )
+        join_stage_drops()
+        assert log == ['DROP TABLE IF EXISTS "public"."orders__stg_y_0"']
