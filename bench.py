@@ -123,14 +123,16 @@ def etl_copy_to_postgres(spark, sf_dir: str):
         conn.close()
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         target = reflect_target_table(server.conn_params, "public", "lineitem")
-        # 16 writers on a bulk-load-tuned server (pglocal.BULK_LOAD_OPTS:
-        # async commit + load-sized WAL; NOT fsync=off): measured plateau —
-        # untuned default config bottlenecks on per-txn WAL flushes at ~4
-        # writers; tuned, throughput rises to ~16 then contends on the
-        # WAL-insert lock. First load warms the scan + Python workers
-        # (untimed, mirroring the query warm-up above): the reference's
-        # 197k rows/s is sustained throughput over a many-table batch,
-        # not a cold start.
+        # a bulk-load-tuned server (pglocal.BULK_LOAD_OPTS: async commit +
+        # load-sized WAL; NOT fsync=off). num_partitions=16 is a cap: the
+        # sink runs one COPY writer per input partition and never
+        # shuffles, and this lineitem file is one row group, so the tier
+        # times ONE writer streaming the whole file (scan → Arrow → CSV →
+        # wire → server ingest) plus the constraint/TRUNCATE/ANALYZE
+        # bracket. First load warms the scan + Python workers (untimed,
+        # mirroring the query warm-up above): the reference's 197k rows/s
+        # is sustained throughput over a many-table batch, not a cold
+        # start.
         copy_to_postgres(li, server.conn_params, target, num_partitions=16)
         # bench-only: checkpoint the warm load's WAL/dirty pages NOW so the
         # timed loads never absorb its deferred writeback — one source of

@@ -16,8 +16,10 @@ Spark-first design:
   record batches through pyarrow's C++ CSV writer (:class:`_ArrowCsvStream`)
   — N partitions load in parallel (the reference's table-level
   ``multiprocessing.Pool`` becomes partition-level parallelism), with
-  executor memory bounded by one Arrow batch. Cap write parallelism with
-  ``num_partitions``: the database is the bottleneck.
+  executor memory bounded by one Arrow batch. The writers follow the
+  input: one per partition, capped by ``num_partitions`` with ``coalesce``
+  (:func:`_writers`, the rule of every write here), so no write adds a
+  shuffle. To widen a few-partition input, repartition it upstream.
 - the *control plane* (DDL: constraints, truncate, analyze) runs on the
   driver, before/after the Spark job — Spark has no constraint hooks, same
   as the reference's copy() bracket. The pre-load half's COMMIT overlaps
@@ -307,16 +309,26 @@ def parallel_copy(
     return sum(m.n_rows for m in messages)
 
 
+def _writers(df: DataFrame, num_partitions: Optional[int]) -> DataFrame:
+    """The writer count of every Postgres write: one COPY task per
+    partition of ``df``, at most ``num_partitions`` of them. ``coalesce``
+    merges partitions and never shuffles, so the count is ``min(input
+    partitions, num_partitions)``, as in Spark's own JDBC writer.
+
+    A caller that wants more writers than its input has partitions
+    repartitions upstream. On top of a shuffle the cap also narrows that
+    shuffle's reduce stage to ``num_partitions`` tasks."""
+    return df if num_partitions is None else df.coalesce(num_partitions)
+
+
 def _project(
     df: DataFrame, target: TargetTable, num_partitions: Optional[int] = None
 ):
-    """``df`` narrowed to the target columns it carries, in target order
-    (optionally repartitioned), and ``target`` narrowed to match."""
+    """``df`` narrowed to the target columns it carries, in target order,
+    with its writers capped by :func:`_writers`, and ``target`` narrowed
+    to match."""
     cols = [c for c in target.columns if c in df.columns]
-    df = df.select(*cols)
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
-    return df, replace(target, columns=cols)
+    return _writers(df.select(*cols), num_partitions), replace(target, columns=cols)
 
 
 def append_to_postgres(
@@ -327,7 +339,8 @@ def append_to_postgres(
 ) -> int:
     """Append-only parallel COPY: no TRUNCATE, no constraint bracket —
     the data plane for incremental/micro-batch loads where the table keeps
-    serving reads while batches land. Returns rows copied."""
+    serving reads while batches land. One writer per partition of ``df``,
+    at most ``num_partitions`` (:func:`_writers`). Returns rows copied."""
     df, target = _project(df, target, num_partitions)
     return parallel_copy(df, conn_params, copy_sql(target))
 
@@ -355,11 +368,13 @@ def append_to_postgres(
 #   batch's wall on an ext4 mount with ``discard``), so a published scope's
 #   stages are dropped AFTER the commit, by one autocommit
 #   :func:`_sweep_stages` on the publish's own connection, sent from a
-#   one-worker helper thread. At most one drop is pending per process; the
-#   next publish, abort or deferral joins it first (:func:`join_stage_drops`),
-#   re-running a failed drop inline once and raising, with the stages'
-#   names, only if that fails too. A crash before the drop leaves stages
-#   that the scope sweep on replay, or the bound below, removes.
+#   helper thread. At most one drop is pending per server; the next
+#   publish, abort or deferral to that server joins it first
+#   (:func:`join_stage_drops`), re-running a failed drop inline once and
+#   raising, with the stages' names, only if that fails too. A server that
+#   is gone or blocked holds up no other server's writes. A crash before
+#   the drop leaves stages that the scope sweep on replay, or the bound
+#   below, removes.
 # - abort / orphan sweep (:func:`_sweep_stages`): drops the messages'
 #   stages plus every catalog table matching the scope's regex.
 #
@@ -437,11 +452,25 @@ def _sweep_stages(
         )
 
 
-#: the one helper thread that runs deferred stage drops, and the drop not
-#: yet joined: ``(future, conn_params, target, messages, scope)``
-_DROPS = ThreadPoolExecutor(1, thread_name_prefix="stage-drop")
-_DROPS_LOCK = threading.RLock()
-_pending_drop: Optional[tuple] = None
+#: the helper threads that run deferred stage drops (more than one, so a
+#: drop blocked on one server does not queue another server's), and per
+#: server the drop not yet joined: ``{server: (future, conn_params, target,
+#: messages, scope)}``, each server's entry guarded by its own lock
+_DROPS = ThreadPoolExecutor(4, thread_name_prefix="stage-drop")
+_DROPS_LOCK = threading.Lock()
+_server_locks: dict = {}
+_pending_drops: dict = {}
+
+
+def _server(conn_params: dict) -> tuple:
+    """The server and database ``conn_params`` connect to."""
+    get = conn_params.get
+    return (get("host"), str(get("port")), get("dbname") or get("database"))
+
+
+def _server_lock(server: tuple):
+    with _DROPS_LOCK:
+        return _server_locks.setdefault(server, threading.RLock())
 
 
 def _sweep_on(conn, target: TargetTable, messages, scope) -> None:
@@ -459,15 +488,10 @@ def _sweep(conn_params: dict, target: TargetTable, messages, scope) -> None:
     _sweep_on(_psycopg2().connect(**conn_params), target, messages, scope)
 
 
-def join_stage_drops() -> None:
-    """Wait for the pending deferred stage drop, if any. A failed drop is
-    re-run once on a new connection; if that fails too, this raises,
-    naming the stages it could not drop. Every staged verb joins before it
-    starts; call it directly before asserting that no stage is left, or
-    before a process that published may exit."""
-    global _pending_drop
-    with _DROPS_LOCK:
-        pending, _pending_drop = _pending_drop, None
+def _join_drop(server: tuple) -> None:
+    """Join ``server``'s pending drop, re-running it once if it failed."""
+    with _server_lock(server):
+        pending = _pending_drops.pop(server, None)
         if pending is None:
             return
         done, conn_params, target, messages, scope = pending
@@ -484,19 +508,41 @@ def join_stage_drops() -> None:
             ) from e
 
 
+def join_stage_drops(conn_params: Optional[dict] = None) -> None:
+    """Wait for the pending deferred stage drop of ``conn_params``'s
+    server, or of every server when it is None. A failed drop is re-run
+    once on a new connection; if that fails too, this raises, naming the
+    stages it could not drop, after joining every other drop asked for.
+    Every staged verb joins its server's drop before it starts; call this
+    directly before asserting that no stage is left, or before a process
+    that published may exit."""
+    if conn_params is not None:
+        return _join_drop(_server(conn_params))
+    errors = []
+    for server in list(_pending_drops):
+        try:
+            _join_drop(server)
+        except RuntimeError as e:
+            errors.append(e)
+    if errors:
+        raise RuntimeError("; ".join(map(str, errors))) from errors[0]
+
+
 def _defer_sweep(
     conn, conn_params: dict, target: TargetTable, messages, scope
 ) -> None:
     """Hand :func:`_sweep_on` of a committed publish's stages, and its
-    connection, to the helper thread, after joining the drop before it.
-    The hand-off happens even when that join raises."""
-    global _pending_drop
-    with _DROPS_LOCK:
+    connection, to a helper thread, after joining the drop before it on
+    the same server. The hand-off happens even when that join raises."""
+    server = _server(conn_params)
+    with _server_lock(server):
         try:
-            join_stage_drops()
+            _join_drop(server)
         finally:
             done = _DROPS.submit(_sweep_on, conn, target, messages, scope)
-            _pending_drop = (done, dict(conn_params), target, list(messages), scope)
+            _pending_drops[server] = (
+                done, dict(conn_params), target, list(messages), scope
+            )
 
 
 def abort_stages(
@@ -506,8 +552,8 @@ def abort_stages(
     scope: Optional[str] = None,
 ) -> None:
     """Abort side of the core: :func:`_sweep_stages` on its own connection,
-    after joining the pending drop."""
-    join_stage_drops()
+    after joining its server's pending drop."""
+    join_stage_drops(conn_params)
     _sweep(conn_params, target, messages, scope)
 
 
@@ -533,7 +579,7 @@ def publish_stages(
     transaction rolled back whole, so this attempt's stages are dropped
     and 0 is returned. Both drop inline. Otherwise returns the rows
     published."""
-    join_stage_drops()
+    join_stage_drops(conn_params)
     messages = [m for m in messages if m is not None]
     n = sum(m.n_rows for m in messages)
     stages = sorted({m.stage for m in messages if m.stage})
@@ -643,6 +689,10 @@ def load_batch_exactly_once(
     automatically); restarts of the SAME checkpoint must reuse it so
     replays are still recognized.
 
+    One stage per partition of ``batch_df``, at most ``num_partitions``
+    (:func:`_writers`): a one-file batch stages once and publishes one
+    ``INSERT..SELECT``.
+
     Returns the number of rows published (0 on replay)."""
     df, target = _project(batch_df, target, num_partitions)
     return _staged_write(
@@ -661,38 +711,48 @@ def _batch_scope(run_id: str, batch_id: int) -> str:
 def _ensure_ledger(cur, ledger: str) -> None:
     """Create or MIGRATE the epoch ledger to the 3-column identity.
 
+    The ledger's columns and primary key are read from the catalog first,
+    which takes no lock on it; DDL runs only for a missing or legacy
+    ledger. An ``ALTER TABLE`` takes ``ACCESS EXCLUSIVE`` even when it
+    changes nothing, so running it on every publish would stall each one
+    behind any open reader of the ledger.
+
     Legacy-ledger migration (ADVICE r5 + r6): a ``stream_epochs`` table
-    that predates ``run_id`` keeps its old shape through CREATE IF NOT
-    EXISTS. Adding the column (old rows get ``''`` — exactly the run_id
-    the legacy path used, so their replay protection carries over) is not
-    enough: the legacy PRIMARY KEY is still (table_name, batch_id), so a
-    NEW run — fresh checkpoint ⇒ new run_id, batch_ids restarting at 0 —
-    passes the 3-column replay SELECT and then dies on the legacy PK at
-    its ledger INSERT, crash-looping forever. The PK must migrate to
-    (table_name, run_id, batch_id) in the same breath."""
+    that predates ``run_id`` gets the column (old rows get ``''`` —
+    exactly the run_id the legacy path used, so their replay protection
+    carries over). That is not enough: the legacy PRIMARY KEY is still
+    (table_name, batch_id), so a NEW run — fresh checkpoint ⇒ new run_id,
+    batch_ids restarting at 0 — passes the 3-column replay SELECT and then
+    dies on the legacy PK at its ledger INSERT, crash-looping forever. The
+    PK must migrate to (table_name, run_id, batch_id) in the same breath."""
     cur.execute(
-        f"""CREATE TABLE IF NOT EXISTS {ledger} (
-                table_name TEXT NOT NULL,
-                run_id TEXT NOT NULL DEFAULT '',
-                batch_id BIGINT NOT NULL,
-                n_rows BIGINT NOT NULL,
-                PRIMARY KEY (table_name, run_id, batch_id))"""
-    )
-    cur.execute(
-        f"ALTER TABLE {ledger} ADD COLUMN IF NOT EXISTS"
-        " run_id TEXT NOT NULL DEFAULT ''"
-    )
-    cur.execute(
-        "SELECT c.conname, a.attname"
-        " FROM pg_constraint c"
-        " JOIN LATERAL unnest(c.conkey) AS k(attnum) ON TRUE"
-        " JOIN pg_attribute a"
-        "   ON a.attrelid = c.conrelid AND a.attnum = k.attnum"
-        f" WHERE c.conrelid = '{ledger}'::regclass AND c.contype = 'p'"
+        "SELECT a.attname, CASE WHEN a.attnum = ANY(c.conkey) THEN c.conname END"
+        " FROM pg_attribute a"
+        " LEFT JOIN pg_constraint c"
+        "   ON c.conrelid = a.attrelid AND c.contype = 'p'"
+        " WHERE a.attrelid = to_regclass(%s) AND a.attnum > 0"
+        "   AND NOT a.attisdropped",
+        (ledger,),
     )
     rows = cur.fetchall()
-    if rows and not any(r[1] == "run_id" for r in rows):
-        conname = str(rows[0][0]).replace('"', '""')
+    if not rows:
+        cur.execute(
+            f"""CREATE TABLE IF NOT EXISTS {ledger} (
+                    table_name TEXT NOT NULL,
+                    run_id TEXT NOT NULL DEFAULT '',
+                    batch_id BIGINT NOT NULL,
+                    n_rows BIGINT NOT NULL,
+                    PRIMARY KEY (table_name, run_id, batch_id))"""
+        )
+        return
+    if "run_id" not in {r[0] for r in rows}:
+        cur.execute(
+            f"ALTER TABLE {ledger} ADD COLUMN IF NOT EXISTS"
+            " run_id TEXT NOT NULL DEFAULT ''"
+        )
+    pk = {name: con for name, con in rows if con is not None}
+    if pk and "run_id" not in pk:
+        conname = str(next(iter(pk.values()))).replace('"', '""')
         cur.execute(f'ALTER TABLE {ledger} DROP CONSTRAINT "{conname}"')
         cur.execute(
             f"ALTER TABLE {ledger}"
@@ -770,7 +830,8 @@ def copy_to_postgres(
 ) -> int:
     """Full-refresh bulk load: constraint drop → TRUNCATE → parallel
     per-partition COPY → constraint recreate → ANALYZE. Returns the rows
-    loaded.
+    loaded. One writer per partition of ``df``, at most ``num_partitions``
+    (:func:`_writers`); ``freeze=True`` caps them at one.
 
     The end-to-end shape of ``BaseCopy.copy()``
     (`copy_hdf.py:55-80`) with the chunk loop replaced by Spark partitions.
@@ -797,7 +858,7 @@ def copy_to_postgres(
     task with TRUNCATE and COPY FREEZE in its transaction. Both keep their
     TRUNCATE in the transaction that writes the data.
     """
-    df, load_target = _project(df, target, None if freeze else num_partitions)
+    df, load_target = _project(df, target, 1 if freeze else num_partitions)
     direct = not (freeze or staged)
 
     ddl = _psycopg2().connect(**conn_params)
@@ -844,7 +905,7 @@ def copy_to_postgres(
             plan = lambda _: (  # noqa: E731
                 None, [truncate_sql(load_target)], copy_freeze_sql(load_target)
             )
-            messages = _run_copy_tasks(df.coalesce(1), conn_params, plan)
+            messages = _run_copy_tasks(df, conn_params, plan)
             n = sum(m.n_rows for m in messages)
             if not n:
                 with ddl.cursor() as cur:
@@ -876,7 +937,7 @@ def _keyed_apply(
     name = stage_name(target.name, uuid.uuid4().hex, 0)
     stage = TargetTable(target.schema, name, df.columns)
     msg = [StageMessage(stage.name, 0)]
-    join_stage_drops()
+    join_stage_drops(conn_params)
     conn = _psycopg2().connect(**conn_params)
     conn.autocommit = True
     try:
@@ -916,9 +977,10 @@ def upsert_to_postgres(
     last row per key by ctid order — pre-deduplicate upstream with
     `operators/cdc.upsert` semantics when "last" must mean event order.
 
-    Scale: the data plane is the same N-writer COPY as every other load;
-    the merge itself is one set-based SQL statement on the server.
-    Returns the number of batch rows applied."""
+    Scale: the data plane is the same COPY as every other load, one
+    writer per partition of ``df``, at most ``num_partitions``
+    (:func:`_writers`); the merge itself is one set-based SQL statement on
+    the server. Returns the number of batch rows applied."""
     df, target = _project(df, target, num_partitions)
     col_list = ", ".join(f'"{c}"' for c in target.columns)
     keys = ", ".join(f'"{c}"' for c in key_cols)
@@ -968,10 +1030,11 @@ def apply_changes_to_postgres(
     path can express. Target must carry a unique constraint/index on
     ``key_cols`` (the ON CONFLICT arbiter).
 
-    Scale: data plane = N-writer COPY (unchanged); the collapse and both
-    apply statements are set-based server-side SQL over the stage —
-    bounded by batch size, never by target size. Returns the staged row
-    count (pre-collapse)."""
+    Scale: the data plane is the same COPY, one writer per partition of
+    ``df``, at most ``num_partitions`` (:func:`_writers`); the collapse
+    and both apply statements are set-based server-side SQL over the
+    stage — bounded by batch size, never by target size. Returns the
+    staged row count (pre-collapse)."""
     # op_col / seq_col may themselves be target columns (CDC feeds
     # commonly persist the sequence in the target): reuse the target's
     # column in the stage — and persist its value — instead of appending
@@ -984,9 +1047,7 @@ def apply_changes_to_postgres(
         + ([(seq_col, "bigint")] if seq_col else [])
         if c not in data_cols
     ]
-    df = df.select(*data_cols, *[c for c, _ in extras])
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
+    df = _writers(df.select(*data_cols, *[c for c, _ in extras]), num_partitions)
 
     def stage_ddl(stage: str) -> str:
         # stage = target's column types + op (text) + optional seq

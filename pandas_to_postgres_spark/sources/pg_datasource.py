@@ -355,7 +355,7 @@ class PostgresArrowWriter(_StagedWriter, DataSourceArrowWriter):
             self.scope,
             truncate=self.overwrite,
         )
-        join_stage_drops()  # the commit runner may exit right after
+        join_stage_drops(self.params)  # the commit runner may exit right after
 
     def abort(self, messages) -> None:
         abort_stages(self.params, self.target, messages, self.scope)
@@ -511,7 +511,7 @@ class PostgresStreamWriter(_StagedWriter, DataSourceStreamArrowWriter):
             messages,
             ledger=(self.epoch_table, self.run_id, batchId),
         )
-        join_stage_drops()  # the commit runner may exit right after
+        join_stage_drops(self.params)  # the commit runner may exit right after
 
     def abort(self, messages, batchId) -> None:  # noqa: N803 — API name
         abort_stages(self.params, self.target, messages)

@@ -86,10 +86,11 @@ def stream_to_postgres_exactly_once(
     Structured Streaming's at-least-once redelivery (same ``batch_id``
     after failure) never duplicates or partially exposes a batch.
 
-    Scale: the data plane is the same N-writer COPY used for bulk loads —
-    per-executor connections into an unlocked stage table; only the
-    publish (a metadata-sized transaction: INSERT..SELECT + ledger row)
-    serializes per batch. The stages are dropped after the commit, off the
+    Scale: the data plane is the same COPY used for bulk loads — one
+    writer per partition of the micro-batch, at most ``num_partitions``,
+    each on its own connection into its own stage table (a one-file batch
+    stages once); only the publish (a metadata-sized transaction:
+    INSERT..SELECT + ledger row) serializes per batch. The stages are dropped after the commit, off the
     batch's critical path; a crash before that drop leaves stages that the
     batch's replay sweeps, or that the ``<table>__stg_%`` bound of
     `sinks/postgres_copy` removes. The checkpoint directory carries the

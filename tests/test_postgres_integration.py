@@ -350,7 +350,7 @@ class TestStagedCore:
         target = TargetTable("public", name, ["k", "tag"])
         batch = spark.createDataFrame(
             [(i, "x") for i in range(40)], "k long, tag string"
-        )
+        ).repartition(2)
         assert load_batch_exactly_once(
             batch, schema, target, 100, num_partitions=2
         ) == 40
@@ -368,7 +368,7 @@ class TestStagedCore:
         frames = {
             tag: spark.createDataFrame(
                 [(i, tag) for i in range(200)], "k long, tag string"
-            )
+            ).repartition(4)
             for tag in ("a", "b")
         }
         for _ in range(3):
@@ -412,6 +412,21 @@ class TestDeferredStageDrop:
             (name.replace("_", "\\_") + "\\_\\_stg\\_%",),
         )
 
+    def _blocked_drop(self, pg, name):
+        """The sessions of deferred stage drops of ``name`` waiting on a
+        lock, polled for up to 60 s."""
+        import time
+
+        blocked, deadline = [], time.time() + 60
+        while not blocked and time.time() < deadline:
+            blocked = self._q(
+                pg,
+                "SELECT pid FROM pg_stat_activity WHERE wait_event_type"
+                f" = 'Lock' AND query LIKE 'DROP TABLE IF EXISTS%{name}%'",
+            )
+            time.sleep(0.05)
+        return blocked
+
     def _batch(self, spark, tag, n=20):
         return spark.createDataFrame(
             [(i, tag) for i in range(n)], "k long, tag string"
@@ -450,8 +465,6 @@ class TestDeferredStageDrop:
         """The deferred DROP blocks on a lock a reader holds: the batch
         still returns, published. Its session is then killed, so the drop
         is lost; the next batch's publish re-runs it."""
-        import time
-
         from pandas_to_postgres_spark.sinks.postgres_copy import (
             _batch_scope,
             load_batch_exactly_once,
@@ -477,15 +490,7 @@ class TestDeferredStageDrop:
                 "SELECT n_rows FROM stream_epochs"
                 " WHERE table_name = 'dd_tgt' AND batch_id = 1",
             ) == [("20",)]
-            blocked = []
-            deadline = time.time() + 60
-            while not blocked and time.time() < deadline:
-                blocked = self._q(
-                    schema,
-                    "SELECT pid FROM pg_stat_activity WHERE wait_event_type"
-                    " = 'Lock' AND query LIKE 'DROP TABLE IF EXISTS%dd_tgt%'",
-                )
-                time.sleep(0.05)
+            blocked = self._blocked_drop(schema, "dd_tgt")
             assert len(blocked) == 1
             self._q(schema, "SELECT pg_terminate_backend(%s)", (int(blocked[0][0]),))
         finally:
@@ -543,6 +548,147 @@ class TestDeferredStageDrop:
         for batch_id in (1, 2):
             abort_stages(schema, target, (), _batch_scope("", batch_id))
         assert self._stages(schema, "ddf_tgt") == []
+
+    def test_a_gone_server_holds_up_no_other_server(self, spark, schema):
+        """Server A's deferred drop blocks on a reader's lock, then A stops:
+        a publish to another server still succeeds, and joining every
+        server's drop raises, naming A's stages."""
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _batch_scope,
+            load_batch_exactly_once,
+            stage_name,
+        )
+
+        a = pglocal.start(port=54339)
+        reader = pgwire.connect(**a.conn_params)
+        try:
+            target = self._setup(a.conn_params, "gone_tgt")
+            held = stage_name("gone_tgt", _batch_scope("", 1), 99)
+            with reader.cursor() as cur:
+                cur.execute(f'CREATE TABLE "{held}" (LIKE gone_tgt)')
+                reader.commit()
+                cur.execute(f'LOCK TABLE "{held}" IN ACCESS SHARE MODE')
+            batch = self._batch(spark, "a").coalesce(1)
+            assert load_batch_exactly_once(batch, a.conn_params, target, 1) == 20
+            assert len(self._blocked_drop(a.conn_params, "gone_tgt")) == 1
+        finally:
+            pglocal.stop(a)
+            reader.close()
+
+        other = self._setup(schema, "gone_other")
+        assert load_batch_exactly_once(
+            self._batch(spark, "b"), schema, other, 1
+        ) == 20
+        with pytest.raises(RuntimeError, match="could not drop") as err:
+            join_stage_drops()
+        assert stage_name("gone_tgt", _batch_scope("", 1), 0) in str(err.value)
+        assert self._stages(schema, "gone_other") == []
+
+    def test_an_open_ledger_reader_does_not_stall_a_publish(self, spark, schema):
+        """A session reading the ledger in an open transaction holds
+        ACCESS SHARE on it: the next exactly-once batch still publishes."""
+        import threading
+
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            load_batch_exactly_once,
+        )
+
+        target = self._setup(schema, "lr_tgt")
+        assert load_batch_exactly_once(
+            self._batch(spark, "b1"), schema, target, 1
+        ) == 20
+        batch, published = self._batch(spark, "b2"), []
+        t = threading.Thread(
+            target=lambda: published.append(
+                load_batch_exactly_once(batch, schema, target, 2)
+            )
+        )
+        reader = pgwire.connect(**schema)
+        try:
+            with reader.cursor() as cur:
+                cur.execute("SELECT count(*) FROM stream_epochs")
+            t.start()
+            t.join(60)
+            assert published == [20]
+        finally:
+            reader.rollback()
+            reader.close()
+            t.join()
+        assert self._q(schema, "SELECT count(*) FROM lr_tgt") == [("40",)]
+
+
+class TestWriterRule:
+    """One rule sets the writer count of every Postgres write: one COPY
+    task per input partition, at most ``num_partitions``, and no shuffle."""
+
+    _table = TestStagedCore._table
+
+    def _runs(self, monkeypatch):
+        """Record the plan of every frame handed to ``_run_copy_tasks``,
+        with the messages its tasks returned."""
+        from pandas_to_postgres_spark.sinks import postgres_copy
+
+        runs, run = [], postgres_copy._run_copy_tasks
+
+        def record(df, conn_params, plan):
+            shape = df._jdf.queryExecution().executedPlan().toString()
+            runs.append((shape, run(df, conn_params, plan)))
+            return runs[-1][1]
+
+        monkeypatch.setattr(postgres_copy, "_run_copy_tasks", record)
+        return runs
+
+    def test_one_file_parquet_is_one_writer_and_no_exchange(
+        self, spark, schema, tmp_path, monkeypatch
+    ):
+        path = str(tmp_path / "one_file.parquet")
+        spark.range(300).selectExpr("id AS k", "'x' AS tag").coalesce(1).write.parquet(
+            path
+        )
+        self._table(schema, "wr_parquet")
+        target = reflect_target_table(schema, "public", "wr_parquet")
+        runs = self._runs(monkeypatch)
+        assert copy_to_postgres(
+            spark.read.parquet(path), schema, target, num_partitions=4
+        ) == 300
+        ((shape, messages),) = runs
+        assert "Exchange" not in shape
+        assert [m.n_rows for m in messages] == [300]
+
+    def test_writers_are_input_partitions_capped(
+        self, spark, schema, tmp_path, monkeypatch
+    ):
+        import numpy as np
+        import pandas as pd
+
+        from pandas_to_postgres_spark.sinks.postgres_copy import append_to_postgres
+        from pandas_to_postgres_spark.sources.hdf import scan_hdf
+        from pandas_to_postgres_spark.sources.hdf5_writer import write_frame_table
+
+        h5 = str(tmp_path / "six.h5")
+        write_frame_table(
+            h5, {"wr": pd.DataFrame({"k": np.arange(60, dtype=np.int64)})},
+            chunk_rows=10,
+        )
+        self._table(schema, "wr_cap")
+        target = TargetTable("public", "wr_cap", ["k", "tag"])
+        six = scan_hdf(spark, [h5], "wr", chunk_rows=10)
+        two = spark.range(0, 60, 1, numPartitions=2).withColumnRenamed("id", "k")
+        assert six.rdd.getNumPartitions() == 6
+        runs = self._runs(monkeypatch)
+        assert append_to_postgres(six, schema, target, num_partitions=4) == 60
+        assert append_to_postgres(two, schema, target, num_partitions=4) == 60
+        assert [len(messages) for _, messages in runs] == [4, 2]
+        assert not any("Exchange" in shape for shape, _ in runs)
+
+    def test_freeze_is_one_task(self, spark, schema, monkeypatch):
+        self._table(schema, "wr_freeze")
+        target = TargetTable("public", "wr_freeze", ["k", "tag"])
+        df = spark.range(0, 80, 1, numPartitions=4).selectExpr("id AS k", "'f' AS tag")
+        runs = self._runs(monkeypatch)
+        assert copy_to_postgres(df, schema, target, num_partitions=4, freeze=True) == 80
+        ((_, messages),) = runs
+        assert [m.n_rows for m in messages] == [80]
 
 
 class TestDirectRefresh:

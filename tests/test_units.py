@@ -736,8 +736,8 @@ class _FakeConn:
 
 
 class TestDeferredStageDrops:
-    """The one pending stage drop of sinks/postgres_copy, against a fake
-    client."""
+    """The pending stage drop per server of sinks/postgres_copy, against a
+    fake client."""
 
     def _fake_client(self, monkeypatch, log, rerun_fails=False):
         import types
@@ -813,3 +813,23 @@ class TestDeferredStageDrops:
             )
         join_stage_drops()
         assert log == ['DROP TABLE IF EXISTS "public"."orders__stg_y_0"']
+
+    def test_each_server_joins_only_its_own_drop(self, monkeypatch):
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            StageMessage,
+            _defer_sweep,
+            join_stage_drops,
+        )
+
+        log: list = []
+        self._fake_client(monkeypatch, log, rerun_fails=True)
+        join_stage_drops()
+        a, b = {"host": "a", "port": 1}, {"host": "b", "port": 1}
+        _defer_sweep(_FakeConn(log, fail=True), a, T, [StageMessage("s_a", 1)], None)
+        _defer_sweep(_FakeConn(log, fail=False), b, T, [StageMessage("s_b", 1)], None)
+        join_stage_drops(b)  # server a's failed drop is not b's
+        _defer_sweep(_FakeConn(log, fail=False), b, T, [StageMessage("s_b2", 1)], None)
+        with pytest.raises(RuntimeError, match=r"\['s_a'\]"):
+            join_stage_drops()
+        join_stage_drops()
+        assert sorted(sql.rsplit(".", 1)[1] for sql in log) == ['"s_b"', '"s_b2"']
