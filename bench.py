@@ -172,6 +172,76 @@ def etl_copy_to_postgres(spark, sf_dir: str):
             pglocal.stop(server)
 
 
+def hdf5_copy_to_postgres(spark, sf_dir: str, loads: int = 3):
+    """The reference's own published workload: HDF5 → PostgreSQL COPY
+    (its 197k rows/s, `/root/reference/README.md:16`). Writes sf lineitem
+    once as a deflate-6 frame_table HDF5 file (timestamps as ISO strings:
+    the writer takes no ``datetime64``, COPY parses them back) into a temp
+    dir, then loads it ``loads`` times through ``compat.hdf_to_postgres(
+    big=True)`` → ``copy_to_postgres``, one range (and writer) per core.
+    Returns (median rows/s, rows, fixture write secs), or None when the
+    environment can't run a server."""
+    import tempfile
+
+    import numpy as np
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    from pandas_to_postgres_spark import compat
+    from pandas_to_postgres_spark.sinks import pglocal, pgwire
+    from pandas_to_postgres_spark.sinks.postgres_copy import (
+        copy_to_postgres,
+        reflect_target_table,
+    )
+    from pandas_to_postgres_spark.sources.hdf5_writer import write_frame_table
+
+    if pglocal.available() is not None:
+        return None
+    with tempfile.TemporaryDirectory(prefix="bench-hdf5-") as work:
+        t0 = time.perf_counter()
+        li = pq.read_table(f"{sf_dir}/lineitem.parquet").to_pandas()
+        li["l_shipdate"] = np.datetime_as_string(li["l_shipdate"].to_numpy(), unit="s").astype(object)
+        h5 = os.path.join(work, "lineitem.h5")
+        write_frame_table(h5, {"lineitem": li}, complevel=6)
+        fixture_s = time.perf_counter() - t0
+        server = None
+        try:
+            server = pglocal.start(port=54333, server_opts=pglocal.BULK_LOAD_OPTS)
+            conn = pgwire.connect(**server.conn_params)
+            conn.autocommit = True
+            with conn.cursor() as cur:
+                cur.execute(
+                    "CREATE TABLE lineitem (l_orderkey BIGINT, l_partkey BIGINT,"
+                    " l_suppkey BIGINT, l_linenumber INT, l_quantity DOUBLE PRECISION,"
+                    " l_extendedprice DOUBLE PRECISION, l_discount DOUBLE PRECISION,"
+                    " l_tax DOUBLE PRECISION, l_returnflag TEXT, l_linestatus TEXT,"
+                    " l_shipdate TIMESTAMP)"
+                )
+            conn.close()
+            target = reflect_target_table(server.conn_params, "public", "lineitem")
+            cores = spark.sparkContext.defaultParallelism
+
+            def sink(_table, df):
+                return copy_to_postgres(df, server.conn_params, target, num_partitions=cores)
+
+            secs = []
+            for _ in range(loads):
+                t0 = time.perf_counter()
+                compat.hdf_to_postgres(h5, spark, sink, big=True,
+                                       hdf_chunksize=-(-len(li) // cores))
+                secs.append(time.perf_counter() - t0)
+            conn = pgwire.connect(**server.conn_params)
+            with conn, conn.cursor() as cur:
+                cur.execute("SELECT count(*) FROM lineitem")
+                rows = int(cur.fetchall()[0][0])
+            conn.close()
+            if rows != len(li):
+                raise RuntimeError(f"{rows} rows landed, {len(li)} written")
+            return rows / _median(secs), rows, fixture_s
+        finally:
+            if server is not None:
+                pglocal.stop(server)
+
+
 def pg_exactly_once(spark, sf_dir: str, n_files: int = 8):
     """Exactly-once Postgres tier: the events table split into ``n_files``
     parquet files, drained one file per trigger through
@@ -444,6 +514,12 @@ def main() -> None:
         line["pg_copy_rows_per_sec_min"] = round(rates[0])
         line["pg_copy_rows_per_sec_max"] = round(rates[-1])
         line["pg_copy_rows"] = attempts[0][1]
+    # the reference's own workload, HDF5 → Postgres: median of 3 loads
+    h5 = _tier(tier_errors, "hdf5_copy_to_postgres", hdf5_copy_to_postgres, spark, sf_dir)
+    if h5 is not None:
+        line["hdf5_copy_rows_per_sec"] = round(h5[0])
+        line["hdf5_copy_rows"] = h5[1]
+        line["hdf5_copy_fixture_sec"] = round(h5[2], 3)
     # exactly-once Postgres tier: median rows/s over one drain's warm
     # micro-batches (stage COPY + publish per batch), the path the COPY
     # tier above never takes

@@ -4,8 +4,8 @@ Scale notes (100 TB design): AQE is on so join strategies and skewed shuffle
 partitions are re-planned at runtime; shuffle partition count here is sized for
 local[32] test runs — on a real cluster it should be ~2-3x total executor cores
 or left to AQE coalescing. Arrow is enabled because every pandas interop path
-(mapInPandas / pandas_udf, used by the HDF5 source and the multimodal
-operators) moves data through Arrow record batches.
+(mapInPandas / pandas_udf of the multimodal operators, the HDF5 scan's
+mapInArrow) moves data through Arrow record batches.
 
 Python workers fork from `worker_daemon` (``spark.python.daemon.module``).
 Before every task the stock PySpark worker calls

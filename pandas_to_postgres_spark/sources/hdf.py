@@ -4,19 +4,23 @@ Spark has no native HDF5 source. Every HDF5 read of the engine goes
 through the functions below, so each decision is made once:
 
 - **backend:** PyTables (``pd.read_hdf``) when importable, else the
-  repo's pure-Python parser (`sources/hdf5_reader` + the pandas dialect
-  in `sources/hdf5_pandas`), so every path executes without PyTables
-  too. Only this module calls either backend (row counts, range reads,
-  the key catalog); both honor the same range-read contract.
+  repo's pure-Python parser (`sources/hdf5_reader` + the frame_table
+  dialect in `sources/hdf5_pandas`), so every path executes without
+  PyTables too (which leaves the PyTables branch unverified here). Only
+  this module calls either backend; both honor the same range-read
+  contract, and a range read is one Arrow batch.
+- **types:** one rule (:func:`_arrow_type`) types every column; a naive
+  ``datetime64`` is TIMESTAMP_NTZ, the wall time in any session zone.
 - **slices:** :func:`plan_ranges` cuts a key's rows into ``[start,
   stop)`` ranges of ``chunk_rows`` (`copy_hdf.py:198-213`), one empty
   range for an empty key.
-- **schema:** :func:`hdf_schema` maps the key's pandas dtypes to Spark
-  types through one fixed table: no Spark job, no dependence on the
-  session's Arrow conf, and an empty key gets the schema of a full one.
+- **schema:** :func:`hdf_schema` is the Spark schema of the key's empty
+  range read: no Spark job, no dependence on the session's Arrow conf,
+  and an empty key gets the schema of a full one. Every slice is cast to
+  its scan's schema (:func:`read_slice`).
 - **scan:** :func:`scan_hdf` reads slice i in task i of a range of
-  slice ids through ``mapInPandas``: no shuffle. The reference's
-  sequential range loop (`BigHDFTableCopy.hdf_to_pg`,
+  slice ids through ``mapInArrow``: no shuffle, no pandas frame. The
+  reference's sequential range loop (`BigHDFTableCopy.hdf_to_pg`,
   `copy_hdf.py:175-230`) becomes a partition-parallel scan, the design
   its own docstring reaches toward (`copy_hdf.py:169-172`: range reads
   chosen over ``iterator=True`` because they are random-access). The
@@ -39,26 +43,12 @@ from __future__ import annotations
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 DEFAULT_CHUNK_ROWS = 10**7  # the reference's hdf_chunksize (`copy_hdf.py:21`)
-
-#: pandas dtype of a decoded frame_table column -> Spark type
-_SPARK_TYPES = {
-    "bool": T.BooleanType(),
-    "int8": T.ByteType(),
-    "int16": T.ShortType(),
-    "int32": T.IntegerType(),
-    "int64": T.LongType(),
-    "uint8": T.ShortType(),
-    "uint16": T.IntegerType(),
-    "uint32": T.LongType(),
-    "float32": T.FloatType(),
-    "float64": T.DoubleType(),
-    "object": T.StringType(),
-    "datetime64[ns]": T.TimestampType(),
-}
 
 
 def _has_pytables() -> bool:
@@ -70,15 +60,33 @@ def _has_pytables() -> bool:
         return False
 
 
+def _arrow_type(key: str, field: pa.Field) -> pa.DataType:
+    """The one HDF5 type rule: the Arrow type a decoded column reads as."""
+    t = field.type
+    if t in (pa.bool_(), pa.float32(), pa.float64(), pa.string()) or pa.types.is_signed_integer(t):
+        return t
+    if pa.types.is_unsigned_integer(t) and t.bit_width < 64:
+        return {8: pa.int16(), 16: pa.int32(), 32: pa.int64()}[t.bit_width]
+    if pa.types.is_timestamp(t) and t.tz is None:
+        return pa.timestamp("us")  # NTZ: the wall time as written, in any session
+    raise TypeError(f"HDF5 key {key!r}: unsupported dtype {t} ({field.name})")
+
+
 def read_hdf_range(
     file_name: str, key: str, start: int = 0, stop: Optional[int] = None
-) -> pd.DataFrame:
-    """One [start, stop) range read (`copy_hdf.py:211`), backend-agnostic."""
+) -> pa.RecordBatch:
+    """One [start, stop) range read (`copy_hdf.py:211`), backend-agnostic:
+    one Arrow batch typed by :func:`_arrow_type` (ns truncate to µs)."""
     if _has_pytables():  # pragma: no cover - environment dependent
-        return pd.read_hdf(file_name, key, start=start, stop=stop)
-    from . import hdf5_pandas  # noqa: PLC0415
+        pdf = pd.read_hdf(file_name, key, start=start, stop=stop)
+        arrays = [pa.array(v, pa.string() if v.dtype == object else None) for _, v in pdf.items()]
+        batch = pa.RecordBatch.from_arrays(arrays, names=[str(c) for c in pdf.columns])
+    else:
+        from . import hdf5_pandas  # noqa: PLC0415
 
-    return hdf5_pandas.read_hdf(file_name, key, start=start, stop=stop)
+        batch = hdf5_pandas.read_batch(file_name, key, start, stop)
+    schema = pa.schema([pa.field(f.name, _arrow_type(key, f)) for f in batch.schema])
+    return batch.cast(schema, safe=False)  # lossy only where µs truncates ns
 
 
 def plan_ranges(nrows: int, chunk_rows: int) -> list[tuple[int, int]]:
@@ -107,15 +115,19 @@ def hdf_nrows(file_name: str, key: str) -> int:
 
 
 def hdf_schema(file_name: str, key: str) -> T.StructType:
-    """Spark schema of ``key``: its fields' pandas dtypes (an empty range
-    read, so no row data is decoded) through one fixed type table."""
-    fields = []
-    for col, dtype in read_hdf_range(file_name, key, 0, 0).dtypes.items():
-        spark_t = _SPARK_TYPES.get(str(dtype))
-        if spark_t is None:
-            raise TypeError(f"HDF5 key {key!r}: unsupported dtype {dtype} ({col})")
-        fields.append(T.StructField(str(col), spark_t))
-    return T.StructType(fields)
+    """Spark schema of ``key``: the types of its empty range read (no row
+    data is decoded, no Spark job)."""
+    return from_arrow_schema(read_hdf_range(file_name, key, 0, 0).schema, prefer_timestamp_ntz=True)
+
+
+def read_slice(file_name: str, key: str, start: int, stop: int, schema: T.StructType):
+    """One slice of a scan as an Arrow batch of the scan's Spark ``schema``
+    (inferred or user-given); a column that cannot be cast raises."""
+    target = pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema])
+    try:
+        return read_hdf_range(file_name, key, start, stop).cast(target)
+    except (pa.ArrowException, ValueError) as e:
+        raise TypeError(f"HDF5 {file_name!r} key {key!r}: {e}") from e
 
 
 def scan_hdf(
@@ -129,17 +141,18 @@ def scan_hdf(
         for f in files
         for start, stop in plan_ranges(hdf_nrows(f, key), chunk_rows)
     ]
+    schema = hdf_schema(files[0], key)
 
-    def read_slices(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
+    def read_slices(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for ids in batches:
+            for i in ids.column("id").to_pylist():
                 file, start, stop = slices[i]
                 if stop > start:
-                    yield read_hdf_range(file, key, start, stop)
+                    yield read_slice(file, key, start, stop, schema)
 
     # slice i -> task i: spark.range splits evenly, so no exchange is needed
     ids = spark.range(len(slices), numPartitions=len(slices))
-    return ids.mapInPandas(read_slices, schema=hdf_schema(files[0], key))
+    return ids.mapInArrow(read_slices, schema=schema)
 
 
 def load_hdf_distributed(

@@ -3,8 +3,9 @@
 Decodes PyTables ``frame_table`` layouts — the format
 ``pandas.DataFrame.to_hdf(format="table")`` writes and the reference
 ingests (`/root/reference/pandas_to_postgres/copy_hdf.py:175-230`) —
-into pandas DataFrames, with the same ``start``/``stop`` range-read
-contract as ``pd.read_hdf``. Two field dialects are handled:
+into numpy columns, once, with the same ``start``/``stop`` range-read
+contract as ``pd.read_hdf``: :func:`read_batch` (the scan path) hands
+them on as Arrow, :func:`read_hdf` as pandas. Two field dialects:
 
 - data-columns style: one compound member per column (what
   ``data_columns=True`` and this repo's `hdf5_writer` emit);
@@ -19,10 +20,11 @@ observable in any ``to_hdf`` file.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from .hdf5_reader import H5File
 
@@ -31,21 +33,14 @@ def _table_path(key: str) -> str:
 
 
 def list_keys(path: str) -> List[str]:
-    """pandas-style keys ('/name') of every frame_table group, matching
-    ``pd.HDFStore.keys()`` ordering (sorted paths)."""
-    out: List[str] = []
+    """pandas-style keys ('/name') of every frame_table group (a group
+    holding a ``table`` dataset), sorted like ``pd.HDFStore.keys()``."""
     with H5File(path) as f:
-        groups = {p: a for p, a in f.visit() if not f.is_dataset(a)}
-        for gpath, addr in groups.items():
-            if gpath == "/":
-                continue
-            try:
-                links = f._group_links(addr)
-            except Exception:
-                continue
-            if "table" in links and f.is_dataset(links["table"]):
-                out.append(gpath)
-    return sorted(out)
+        return sorted(
+            p[: -len("/table")]
+            for p, addr in f.visit()
+            if p.endswith("/table") and p != "/table" and f.is_dataset(addr)
+        )
 
 
 def get_nrows(path: str, key: str) -> int:
@@ -65,25 +60,53 @@ def group_attrs(path: str, key: str) -> Dict[str, object]:
         return f.attributes("/" + key.strip("/"))
 
 
-def _decode_strings(arr: np.ndarray) -> np.ndarray:
-    # object, not numpy's unicode dtype: np.char.decode of an EMPTY array
-    # returns float64, which would give an empty key a different schema
-    return np.char.decode(arr.astype("S"), "utf-8").astype(object)
+def _decode(
+    path: str, key: str, start: int, stop: Optional[int]
+) -> Tuple[Dict[str, np.ndarray], Optional[np.ndarray]]:
+    """Rows [start, stop) of ``/key/table`` as numpy columns in frame order,
+    plus the stored index. Only the chunks overlapping the range are read
+    (`hdf5_reader.Dataset.read_raw`): one-task-per-range scans stay cheap."""
+    with H5File(path) as f:
+        ds = f.dataset(_table_path(key))
+        raw, attrs = ds.read_raw(start, stop), ds.attrs
+    data: Dict[str, np.ndarray] = {}
+    index = None
+    for field in raw.dtype.names or ():
+        vals = raw[field]
+        if field == "index":
+            index = vals
+            continue
+        kind = attrs.get(f"{field}_dtype") or ""
+        kind = kind.decode("utf-8", "replace") if isinstance(kind, bytes) else str(kind)
+        if kind.startswith("bool"):
+            vals = vals.astype(bool)
+        elif kind.startswith("datetime64"):
+            vals = vals.view("M8[ns]")
+        cols = attrs.get(f"{field}_kind")
+        if isinstance(cols, (list, tuple)) and (
+            field.startswith("values_block") or list(cols) != [field]
+        ):
+            # block dialect: (n, k) member carries k columns
+            vals = vals.reshape(len(vals), len(cols))
+            data.update((str(col), vals[:, j]) for j, col in enumerate(cols))
+        else:
+            data[field] = vals
+    nia = attrs.get("non_index_axes")
+    if isinstance(nia, (list, tuple)) and nia and set(map(str, nia[0][1])) == set(data):
+        data = {str(c): data[str(c)] for c in nia[0][1]}
+    return data, index
 
 
-def _column_from_field(
-    vals: np.ndarray, field: str, attrs: Dict[str, object]
-) -> np.ndarray:
-    kind = attrs.get(f"{field}_dtype")
-    if isinstance(kind, bytes):
-        kind = kind.decode("utf-8", errors="replace")
-    if vals.dtype.kind == "S":
-        return _decode_strings(vals)
-    if kind == "bool" or (isinstance(kind, str) and kind.startswith("bool")):
-        return vals.astype(bool)
-    if isinstance(kind, str) and kind.startswith("datetime64"):
-        return vals.view("M8[ns]")
-    return vals
+def _batch(columns: Dict[str, np.ndarray]) -> pa.RecordBatch:
+    # an S column arrives as binary; the cast to string checks its UTF-8
+    arrays = [pa.array(v) for v in columns.values()]
+    arrays = [a.cast(pa.string()) if pa.types.is_binary(a.type) else a for a in arrays]
+    return pa.RecordBatch.from_arrays(arrays, names=list(columns))
+
+
+def read_batch(path: str, key: str, start: int = 0, stop: Optional[int] = None) -> pa.RecordBatch:
+    """Rows [start, stop) as one Arrow batch (`sources/hdf` types it)."""
+    return _batch(_decode(path, key, start, stop)[0])
 
 
 def read_hdf(
@@ -93,47 +116,12 @@ def read_hdf(
     stop: Optional[int] = None,
     columns: Optional[Sequence[str]] = None,
 ) -> pd.DataFrame:
-    """Rows [start, stop) of ``/key/table`` as a DataFrame — the pure
-    backend for ``pd.read_hdf(file, key, start=, stop=)``. Only the
-    chunks overlapping the range are read/decompressed (`hdf5_reader.
-    Dataset.read_raw`), which is what makes one-task-per-range scans
-    cheap (`copy_hdf.py:169-172`)."""
-    with H5File(path) as f:
-        ds = f.dataset(_table_path(key))
-        raw = ds.read_raw(start, stop)
-        attrs = ds.attrs
-        names = raw.dtype.names or ()
-
-        data: Dict[str, np.ndarray] = {}
-        order: List[str] = []
-        index = None
-        for field in names:
-            vals = raw[field]
-            if field == "index":
-                index = vals
-                continue
-            block_cols = attrs.get(f"{field}_kind")
-            if isinstance(block_cols, (list, tuple)) and (
-                field.startswith("values_block") or len(block_cols) != 1 or block_cols[0] != field
-            ):
-                # block dialect: (n, k) member carries k columns
-                vals2 = vals.reshape(len(vals), len(block_cols))
-                for j, col in enumerate(block_cols):
-                    cv = vals2[:, j]
-                    data[str(col)] = _column_from_field(cv, field, attrs)
-                    order.append(str(col))
-            else:
-                data[field] = _column_from_field(vals, field, attrs)
-                order.append(field)
-
-        nia = attrs.get("non_index_axes")
-        if isinstance(nia, (list, tuple)) and nia:
-            cols = [str(c) for c in nia[0][1]]
-            if set(cols) == set(order):
-                order = cols
-        if columns is not None:
-            order = [c for c in order if c in set(columns)]
-        df = pd.DataFrame({c: data[c] for c in order}, columns=order)
-        if index is not None and len(index) == len(df):
-            df.index = pd.Index(index, name=None)
-        return df
+    """:func:`read_batch` as a DataFrame with the stored index — the pure
+    backend for ``pd.read_hdf(file, key, start=, stop=)``."""
+    data, index = _decode(path, key, start, stop)
+    if columns is not None:
+        data = {c: v for c, v in data.items() if c in set(columns)}
+    df = _batch(data).to_pandas()
+    if index is not None and len(index) == len(df):
+        df.index = pd.Index(index, name=None)
+    return df

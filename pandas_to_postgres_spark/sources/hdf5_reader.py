@@ -434,15 +434,17 @@ class H5File:
         return sorted(self._group_links(self._resolve(path)))
 
     def visit(self) -> Iterator[Tuple[str, int]]:
-        """Yield (path, header_addr) for every object, root first."""
+        """Yield (path, header_addr) for every object, root first. A group
+        whose links cannot be read raises, naming it: skipping it would
+        hide every key below it."""
         stack = [("/", self._root)]
         while stack:
             path, addr = stack.pop()
             yield path, addr
             try:
                 links = self._group_links(addr)
-            except Hdf5FormatError:
-                continue
+            except Hdf5FormatError as e:
+                raise Hdf5FormatError(f"group {path!r}: {e}") from e
             base = path.rstrip("/")
             for name, child in sorted(links.items(), reverse=True):
                 stack.append((f"{base}/{name}", child))

@@ -1,8 +1,9 @@
 """Spark 4 Python DataSource for HDF5 part-file directories: batch scans,
 STREAMING ingest and writes of PyTables frame_table files. Planning,
-schema and range reads go through `sources/hdf` (PyTables when
+schema and slice reads go through `sources/hdf` (PyTables when
 importable, else the pure-Python parser), so ``format("hdf5")`` reads a
-file exactly as the range scans there do.
+file exactly as the range scans there do: the same Arrow batches, cast
+to the scan's schema (a naive ``datetime64`` is TIMESTAMP_NTZ).
 
     spark.dataSource.register(Hdf5DataSource)
 
@@ -71,7 +72,7 @@ from pandas_to_postgres_spark.sources.hdf import (
     hdf_nrows,
     hdf_schema,
     plan_ranges,
-    read_hdf_range,
+    read_slice,
 )
 
 
@@ -97,16 +98,11 @@ def _plan_file(path: str, name: str, key: str, chunk_rows: int):
 
 
 def _read_partition(path: str, key: str, schema, part: H5Partition):
-    """One slice → one Arrow RecordBatch of the Spark ``schema`` (never
-    Python row tuples); an empty slice yields nothing."""
-    import pyarrow as pa  # noqa: PLC0415
-    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
-
+    """One slice → one Arrow RecordBatch of the Spark ``schema``
+    (`sources/hdf.read_slice`, the scan's own slice read); an empty slice
+    yields nothing."""
     if part.stop > part.start:
-        pdf = read_hdf_range(os.path.join(path, part.file), key, part.start, part.stop)
-        yield pa.RecordBatch.from_pandas(
-            pdf, schema=to_arrow_schema(schema), preserve_index=False
-        )
+        yield read_slice(os.path.join(path, part.file), key, part.start, part.stop, schema)
 
 
 class Hdf5Reader(DataSourceReader):

@@ -32,6 +32,25 @@ def _frame(n=500, seed=0):
     )
 
 
+def naive_ts_part(dirpath, n=3):
+    """``{dirpath}/part-00000.h5`` holding key ``data``: int64 ``id`` and
+    a naive ``ts`` (int64 field + ``ts_dtype="datetime64"``, as PyTables
+    writes one) of 2024-01-01 00:00 plus ``id`` hours."""
+    import pandas_to_postgres_spark.sources.hdf5_writer as w
+
+    rec = np.zeros(n, dtype=[("index", "<i8"), ("id", "<i8"), ("ts", "<i8")])
+    rec["index"] = rec["id"] = np.arange(n)
+    rec["ts"] = (np.datetime64("2024-01-01T00:00", "ns") + np.arange(n) * np.timedelta64(1, "h")).view("<i8")
+    attrs = {"CLASS": "TABLE", "NROWS": n, "ts_dtype": "datetime64", "non_index_axes": [(1, ["id", "ts"])]}
+    b = w._FileBuilder()
+    gaddr = b.write_group({"table": b.write_table(rec, attrs, chunk_rows=16, complevel=0)},
+                          {"pandas_type": "frame_table"})
+    p = os.path.join(str(dirpath), "part-00000.h5")
+    with open(p, "wb") as fh:
+        fh.write(b.finish(b.write_group({"data": gaddr}, {})))
+    return p
+
+
 @pytest.fixture()
 def h5(tmp_path):
     p = str(tmp_path / "t.h5")
@@ -178,6 +197,24 @@ class TestPandasLayer:
         assert list(got.columns) == ["id", "ok"]
         assert (got["id"].values == np.arange(37, 81)).all()
 
+    def test_unreadable_group_fails_the_key_listing(self, tmp_path, monkeypatch):
+        """A group whose links cannot be read (e.g. dense fractal-heap
+        links) raises naming it, instead of its keys going missing."""
+        p = str(tmp_path / "k.h5")
+        write_frame_table(p, {"a": _frame(3), "b": _frame(3), "c": _frame(3)})
+        with H5File(p) as f:
+            bad = f._resolve("/b")
+        links = H5File._group_links
+
+        def group_links(self, addr):
+            if addr == bad:
+                raise Hdf5FormatError("dense (fractal-heap) group links not supported")
+            return links(self, addr)
+
+        monkeypatch.setattr(H5File, "_group_links", group_links)
+        with pytest.raises(Hdf5FormatError, match="'/b'"):
+            hdf.hdf_keys(p)
+
     def test_nrows_keys_attrs(self, h5):
         assert hdf5_pandas.get_nrows(h5, "data") == 500
         assert hdf5_pandas.list_keys(h5) == ["/data"]
@@ -221,6 +258,38 @@ class TestPandasLayer:
         assert np.allclose(got["price"].values, rec["values_block_0"][5:25, 0])
         assert np.allclose(got["qty"].values, rec["values_block_0"][5:25, 1])
         assert (got["city"].values == [f"c{i % 5}" for i in range(5, 25)]).all()
+
+
+class TestTypeRule:
+    def test_widens_unsigned_truncates_ns_and_rejects_the_rest(self, monkeypatch):
+        """`sources/hdf.read_hdf_range` types a decoded batch by the one
+        HDF5 type rule: uint8/16/32 widen (Spark has no unsigned type), a
+        naive ns timestamp truncates to a naive µs one, and any other
+        dtype raises naming its column."""
+        import pyarrow as pa
+
+        def read_as(*arrays):
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array(a) for a in arrays], names=[f"c{i}" for i in range(len(arrays))]
+            )
+            monkeypatch.setattr(hdf5_pandas, "read_batch", lambda *_: batch)
+            return hdf.read_hdf_range("f.h5", "k")
+
+        got = read_as(
+            np.array([255], dtype=np.uint8),
+            np.array([65535], dtype=np.uint16),
+            np.array([2**32 - 1], dtype=np.uint32),
+            np.array(["2024-01-01T00:00:00.123456789"], dtype="M8[ns]"),
+            pa.array(["x"]),
+        )
+        assert got.schema.types == [
+            pa.int16(), pa.int32(), pa.int64(), pa.timestamp("us"), pa.string()
+        ]
+        assert got.column("c2")[0].as_py() == 2**32 - 1
+        assert str(got.column("c3")[0]) == "2024-01-01 00:00:00.123456"
+        for bad in (np.array([1], dtype=np.uint64), pa.array([1], pa.timestamp("us", tz="UTC"))):
+            with pytest.raises(TypeError, match=r"'k'.*\(c0\)"):
+                read_as(bad)
 
 
 class TestSparkSources:
@@ -278,6 +347,66 @@ class TestSparkSources:
         assert all(s == schemas["distributed"] for s in schemas.values()), schemas
         assert len(rows["distributed"]) == 250
         assert all(r == rows["distributed"] for r in rows.values())
+
+    def test_naive_timestamp_reads_as_written_in_any_session_zone(self, spark, tmp_path):
+        """A naive ``datetime64`` column is TIMESTAMP_NTZ on every read
+        path, so a non-UTC session reads the wall time as written."""
+        import datetime
+
+        from pyspark.sql import types as T
+
+        from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir
+        from pandas_to_postgres_spark.sources.hdf5_stream import Hdf5DataSource
+
+        p = naive_ts_part(tmp_path)
+        spark.dataSource.register(Hdf5DataSource)
+        conf = "spark.sql.session.timeZone"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "America/New_York")
+        try:
+            reads = {
+                "distributed": hdf.load_hdf_distributed(spark, p, "data", 2),
+                "dir": load_hdf_dir(spark, str(tmp_path), "data", chunk_rows=2),
+                "format": spark.read.format("hdf5").option("path", str(tmp_path))
+                .option("chunkRows", 2).load(),
+                "big=False": compat.HDFTableCopy(
+                    p, ["data"], spark, sink=None, table_name="t", big=False
+                )._load(formatted=False),
+            }
+            schemas = {name: r.schema for name, r in reads.items()}
+            rows = {name: sorted(r.collect()) for name, r in reads.items()}
+        finally:
+            spark.conf.set(conf, old)
+        assert schemas["distributed"]["ts"].dataType == T.TimestampNTZType()
+        assert all(s == schemas["distributed"] for s in schemas.values()), schemas
+        assert all(r == rows["distributed"] for r in rows.values()), rows
+        assert [r.ts for r in rows["distributed"]] == [
+            datetime.datetime(2024, 1, 1, h) for h in range(3)
+        ]
+
+    def test_later_part_file_is_cast_to_the_first_files_schema(self, spark, tmp_path):
+        """A part file whose column is ``float32`` where the first file's
+        is ``float64`` reads as ``double`` with its values unchanged."""
+        from pyspark.sql import types as T
+
+        from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir
+        from pandas_to_postgres_spark.sources.hdf5_stream import Hdf5DataSource
+
+        first, second = _frame(40, seed=1), _frame(30, seed=2)
+        second["id"] += 40
+        second["val"] = second["val"].astype(np.float32)
+        write_frame_table(str(tmp_path / "part-00000.h5"), {"data": first}, chunk_rows=16)
+        write_frame_table(str(tmp_path / "part-00001.h5"), {"data": second}, chunk_rows=16)
+        spark.dataSource.register(Hdf5DataSource)
+        want = np.concatenate([first["val"].values, second["val"].values.astype(np.float64)])
+        for df in (
+            load_hdf_dir(spark, str(tmp_path), "data", chunk_rows=16),
+            spark.read.format("hdf5").option("path", str(tmp_path)).option("chunkRows", 16).load(),
+        ):
+            assert df.schema["val"].dataType == T.DoubleType()
+            got = df.toPandas().sort_values("id")
+            assert (got["id"].values == np.arange(70)).all()
+            assert (got["val"].values == want).all()
 
     def test_empty_key_reads_with_full_schema(self, spark, tmp_path):
         """A 0-row key is valid input (`utilities.py:107-108`): it reads

@@ -2526,3 +2526,36 @@ class TestHdf5ToPostgresStreaming:
         # idle drain adds nothing (ledger + empty offset delta)
         drain()
         assert q1("SELECT count(*) FROM h5_ingest") == [("155",)]
+
+
+class TestHdf5NaiveTimestampToPostgres:
+    def test_naive_timestamp_lands_as_written(self, pg, spark, tmp_path):
+        """A naive HDF5 ``datetime64`` read through ``format("hdf5")`` in a
+        non-UTC session lands in a ``TIMESTAMP`` column as written, as the
+        reference's CSV hand-off lands it."""
+        from pandas_to_postgres_spark.sources.hdf5_stream import Hdf5DataSource
+        from tests.test_hdf5 import naive_ts_part
+
+        naive_ts_part(tmp_path)
+        spark.dataSource.register(Hdf5DataSource)
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            cur.execute("DROP TABLE IF EXISTS h5_ts")
+            cur.execute("CREATE TABLE h5_ts (id BIGINT, ts TIMESTAMP)")
+        conn.close()
+        conf = "spark.sql.session.timeZone"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "America/New_York")
+        try:
+            df = spark.read.format("hdf5").option("path", str(tmp_path)).load()
+            copy_to_postgres(df, pg, reflect_target_table(pg, "public", "h5_ts"))
+        finally:
+            spark.conf.set(conf, old)
+        conn = pgwire.connect(**pg)
+        with conn, conn.cursor() as cur:
+            cur.execute("SELECT id, to_char(ts, 'YYYY-MM-DD HH24:MI') FROM h5_ts ORDER BY id")
+            assert cur.fetchall() == [
+                ("0", "2024-01-01 00:00"), ("1", "2024-01-01 01:00"), ("2", "2024-01-01 02:00")
+            ]
+        conn.close()
