@@ -179,15 +179,17 @@ def hdf5_copy_to_postgres(spark, sf_dir: str, loads: int = 3):
     the writer takes no ``datetime64``, COPY parses them back) into a temp
     dir, then loads it ``loads`` times through ``compat.hdf_to_postgres(
     big=True)`` → ``copy_to_postgres``, one range (and writer) per core.
-    Returns (median rows/s, rows, fixture write secs), or None when the
-    environment can't run a server."""
+    Returns (median rows/s, rows, fixture write secs, layers), or None when
+    the environment can't run a server. ``layers`` sums the COPY tasks'
+    messages of the median load: seconds waiting for Arrow batches (the
+    slice reads), seconds encoding CSV, CSV bytes, plus the load's wall."""
     import tempfile
 
     import numpy as np
     import pyarrow.parquet as pq  # noqa: PLC0415
 
     from pandas_to_postgres_spark import compat
-    from pandas_to_postgres_spark.sinks import pglocal, pgwire
+    from pandas_to_postgres_spark.sinks import pglocal, pgwire, postgres_copy
     from pandas_to_postgres_spark.sinks.postgres_copy import (
         copy_to_postgres,
         reflect_target_table,
@@ -223,12 +225,25 @@ def hdf5_copy_to_postgres(spark, sf_dir: str, loads: int = 3):
             def sink(_table, df):
                 return copy_to_postgres(df, server.conn_params, target, num_partitions=cores)
 
-            secs = []
-            for _ in range(loads):
-                t0 = time.perf_counter()
-                compat.hdf_to_postgres(h5, spark, sink, big=True,
-                                       hdf_chunksize=-(-len(li) // cores))
-                secs.append(time.perf_counter() - t0)
+            # record each load's task messages, which copy_to_postgres
+            # collects but does not return
+            secs, messages, run_tasks = [], [], postgres_copy._run_copy_tasks
+
+            def recording(*args):
+                got = run_tasks(*args)
+                messages[-1].extend(got)
+                return got
+
+            postgres_copy._run_copy_tasks = recording
+            try:
+                for _ in range(loads):
+                    messages.append([])
+                    t0 = time.perf_counter()
+                    compat.hdf_to_postgres(h5, spark, sink, big=True,
+                                           hdf_chunksize=-(-len(li) // cores))
+                    secs.append(time.perf_counter() - t0)
+            finally:
+                postgres_copy._run_copy_tasks = run_tasks
             conn = pgwire.connect(**server.conn_params)
             with conn, conn.cursor() as cur:
                 cur.execute("SELECT count(*) FROM lineitem")
@@ -236,7 +251,11 @@ def hdf5_copy_to_postgres(spark, sf_dir: str, loads: int = 3):
             conn.close()
             if rows != len(li):
                 raise RuntimeError(f"{rows} rows landed, {len(li)} written")
-            return rows / _median(secs), rows, fixture_s
+            mid = sorted(range(loads), key=secs.__getitem__)[loads // 2]
+            layers = {"load_s": round(secs[mid], 4), "tasks": len(messages[mid])}
+            for k in ("source_s", "encode_s", "bytes"):
+                layers[k] = round(sum(getattr(m, k) for m in messages[mid]), 4)
+            return rows / _median(secs), rows, fixture_s, layers
         finally:
             if server is not None:
                 pglocal.stop(server)
@@ -520,6 +539,7 @@ def main() -> None:
         line["hdf5_copy_rows_per_sec"] = round(h5[0])
         line["hdf5_copy_rows"] = h5[1]
         line["hdf5_copy_fixture_sec"] = round(h5[2], 3)
+        line["hdf5_copy_layers"] = h5[3]
     # exactly-once Postgres tier: median rows/s over one drain's warm
     # micro-batches (stage COPY + publish per batch), the path the COPY
     # tier above never takes

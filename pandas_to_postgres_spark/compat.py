@@ -84,7 +84,12 @@ class HDFTableCopy(_BaseCopy):
     """`copy_hdf.py:14-121` — HDF keys → union → sink, each key through
     the distributed range scan. ``big=True`` reads ``hdf_chunksize``-row
     ranges (BigHDFTableCopy, `copy_hdf.py:175-230`); ``big=False`` reads
-    each key as one range (Small/plain, `:82-163`)."""
+    each key as one range (Small/plain, `:82-163`).
+
+    Unformatted keys of one table with the same columns (in any order)
+    load as ONE scan (`sources/hdf.SliceScan`), whose COPY tasks read the
+    slices themselves; a formatter that transforms the frame loads that
+    key through Spark's plain DataFrame, with the same rows."""
 
     def __init__(
         self,

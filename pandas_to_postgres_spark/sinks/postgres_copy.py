@@ -11,12 +11,18 @@ Reference behavior being reproduced (all `/root/reference/pandas_to_postgres/`):
   (comment `copy_hdf.py:70`)
 
 Spark-first design:
-- the *data plane* is one COPY task per Spark partition (``mapInArrow``):
-  each task opens its own connection and streams its partition's Arrow
-  record batches through pyarrow's C++ CSV writer (:class:`_ArrowCsvStream`)
-  — N partitions load in parallel (the reference's table-level
-  ``multiprocessing.Pool`` becomes partition-level parallelism), with
-  executor memory bounded by one Arrow batch. The writers follow the
+- the *data plane* is one COPY task per Spark partition (``mapInArrow``,
+  run by :func:`_run_copy_tasks`): each task opens its own connection and
+  streams its partition's Arrow record batches through pyarrow's C++ CSV
+  writer (:class:`_ArrowCsvStream`, 10k-row pieces) — N partitions load
+  in parallel (the reference's table-level ``multiprocessing.Pool``
+  becomes partition-level parallelism), with executor memory bounded by
+  one Arrow batch. An HDF5 scan (`sources/hdf.SliceScan`) reads its
+  slices inside the COPY task, so its batches never become JVM rows (the
+  reference's range read → CSV → COPY, `copy_hdf.py:175-230`, in one
+  Python worker); any transform other than a name-only ``select``,
+  ``coalesce`` or same-column ``unionByName`` makes it a plain DataFrame,
+  which loads through the JVM hop with the same result. The writers follow the
   input: one per partition, capped by ``num_partitions`` with ``coalesce``
   (:func:`_writers`, the rule of every write here), so no write adds a
   shuffle. To widen a few-partition input, repartition it upstream.
@@ -49,13 +55,16 @@ import io
 import itertools
 import re
 import threading
+import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field, replace
+from dataclasses import asdict, dataclass, field, replace
 from typing import Callable, Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import WriterCommitMessage
+
+from pandas_to_postgres_spark.sources.hdf import SliceScan
 
 
 # --------------------------------------------------------------- descriptors
@@ -145,11 +154,18 @@ def copy_freeze_sql(t: TargetTable) -> str:
 class _ArrowCsvStream:
     """File-like view over an iterator of Arrow record batches, serialized
     to CSV on demand with pyarrow's C++ CSV writer — one streaming COPY per
-    partition with bounded memory (one batch in flight). ``read`` is the
-    only method COPY clients call (psycopg2 ``copy_expert`` and pgwire both
-    pull with ``read(size)``). Nulls become empty fields (SQL NULL,
+    partition with bounded memory. ``read`` is the only method COPY clients
+    call (psycopg2 ``copy_expert`` and pgwire both pull with
+    ``read(size)``). Nulls become empty fields (SQL NULL,
     `utilities.py:90`) while empty strings are quoted (``""``); no header;
     timestamps print as ISO, which COPY parses.
+
+    A batch is encoded in zero-copy slices of at most :attr:`PIECE_ROWS`
+    rows, so the stream holds one piece's CSV whatever the batch size (an
+    HDF5 slice is one batch of up to ``hdf_chunksize`` rows), and a read
+    copies out only the bytes it returns. The stream also counts its
+    layers: ``source_s`` waiting for the next batch, ``encode_s`` in the
+    CSV writer, and the CSV ``bytes`` it produced.
 
     Measured at sf0.1 lineitem (600k rows × 11 cols): pandas ``to_csv``
     serializes at ~197k rows/s — slower than the Postgres server ingests
@@ -157,27 +173,48 @@ class _ArrowCsvStream:
     does ~1.7M rows/s, moving the bottleneck back to the server where it
     belongs."""
 
-    def __init__(self, batch_iter: Iterator):
-        self._iter = batch_iter
-        self._buf = bytearray()
-        self.rows = 0
+    #: rows per encoded piece: Spark's default ``maxRecordsPerBatch``
+    PIECE_ROWS = 10_000
 
-    def read(self, size: int = -1) -> bytes:
+    def __init__(self, batch_iter: Iterator):
+        self._pieces = self._encode(batch_iter)
+        self._buf, self._pos = b"", 0
+        self.rows = self.bytes = 0
+        self.source_s = self.encode_s = 0.0
+
+    def _encode(self, batch_iter: Iterator) -> Iterator[bytes]:
         import pyarrow.csv as pcsv  # noqa: PLC0415
 
-        while size < 0 or len(self._buf) < size:
-            batch = next(self._iter, None)
+        options = pcsv.WriteOptions(include_header=False)
+        while True:
+            t0 = time.perf_counter()
+            batch = next(batch_iter, None)
+            self.source_s += time.perf_counter() - t0
             if batch is None:
-                break
+                return
             self.rows += batch.num_rows
-            sink = io.BytesIO()
-            pcsv.write_csv(batch, sink, pcsv.WriteOptions(include_header=False))
-            self._buf += sink.getvalue()
-        if size < 0 or len(self._buf) <= size:
-            out, self._buf = bytes(self._buf), bytearray()
-        else:
-            out, self._buf = bytes(self._buf[:size]), self._buf[size:]
-        return out
+            for start in range(0, batch.num_rows, self.PIECE_ROWS):
+                t0 = time.perf_counter()
+                sink = io.BytesIO()
+                pcsv.write_csv(batch.slice(start, self.PIECE_ROWS), sink, options)
+                piece = sink.getvalue()
+                self.encode_s += time.perf_counter() - t0
+                self.bytes += len(piece)
+                yield piece
+
+    def read(self, size: int = -1) -> bytes:
+        parts = []
+        while size:
+            if self._pos == len(self._buf):
+                self._buf, self._pos = next(self._pieces, b""), 0
+                if not self._buf:
+                    break
+            end = len(self._buf) if size < 0 else self._pos + size
+            parts.append(self._buf[self._pos : end])
+            self._pos += len(parts[-1])
+            if size > 0:
+                size -= len(parts[-1])
+        return b"".join(parts)
 
 
 # ------------------------------------------------------------ network paths
@@ -244,11 +281,20 @@ def reflect_target_table(conn_params: dict, schema: str, name: str) -> TargetTab
 @dataclass
 class StageMessage(WriterCommitMessage):
     """What one COPY task reports: the stage table it filled (None for a
-    direct COPY or an empty partition) and the rows it copied."""
+    direct COPY or an empty partition), the rows it copied, and its
+    layers (see :class:`_ArrowCsvStream`): seconds waiting for Arrow
+    batches (the slice reads of a :class:`SliceScan`, the JVM hop
+    otherwise), seconds encoding CSV, and the CSV bytes sent."""
 
     stage: Optional[str]
     n_rows: int
+    source_s: float = 0.0
+    encode_s: float = 0.0
+    bytes: int = 0
 
+
+#: the Spark schema of the messages :func:`_run_copy_tasks` collects
+_MESSAGE_SCHEMA = "stage string, n_rows long, source_s double, encode_s double, bytes long"
 
 #: ``plan(partition_id) -> (stage or None, setup statements, COPY statement)``
 TaskPlan = Callable[[int], tuple]
@@ -264,7 +310,9 @@ def _copy_task(
     connection per task). An empty partition never opens a connection."""
     from pyspark import TaskContext  # noqa: PLC0415
 
+    t0 = time.perf_counter()
     first = next(batches, None)
+    first_s = time.perf_counter() - t0
     if first is None:
         return StageMessage(None, 0)
     stage, setup, copy_stmt = plan(TaskContext.get().partitionId())
@@ -277,24 +325,30 @@ def _copy_task(
             cur.copy_expert(copy_stmt, stream)
     finally:
         conn.close()
-    return StageMessage(stage, stream.rows)
+    return StageMessage(
+        stage, stream.rows, first_s + stream.source_s, stream.encode_s, stream.bytes
+    )
 
 
 def _run_copy_tasks(df: DataFrame, conn_params: dict, plan: TaskPlan) -> list:
     """Run :func:`_copy_task` over every partition of ``df``; returns the
-    tasks' messages."""
+    tasks' messages. A :class:`SliceScan` runs its slice reader inside the
+    COPY task (``ids.mapInArrow(copy ∘ read)``), so its batches go from
+    the reader to the CSV encoder in one Python worker; any other ``df``
+    hands its partitions' batches over from the JVM."""
     params = dict(conn_params)
+    ids, read = df.slice_plan() if isinstance(df, SliceScan) else (df, iter)
 
     def _task(batches: Iterator) -> Iterator:
         import pyarrow as pa  # noqa: PLC0415
 
-        m = _copy_task(params, plan, batches)
+        m = _copy_task(params, plan, read(batches))
         yield pa.RecordBatch.from_pydict(
-            {"stage": pa.array([m.stage], pa.string()), "n_rows": [m.n_rows]}
+            {k: pa.array([v], pa.string() if k == "stage" else None) for k, v in asdict(m).items()}
         )
 
-    rows = df.mapInArrow(_task, "stage string, n_rows long").collect()
-    return [StageMessage(r.stage, r.n_rows) for r in rows]
+    rows = ids.mapInArrow(_task, _MESSAGE_SCHEMA).collect()
+    return [StageMessage(**r.asDict()) for r in rows]
 
 
 def parallel_copy(

@@ -25,7 +25,11 @@ through the functions below, so each decision is made once:
   its own docstring reaches toward (`copy_hdf.py:169-172`: range reads
   chosen over ``iterator=True`` because they are random-access). The
   reference's Small path (a whole key into pandas) is the same scan with
-  one range per key.
+  one range per key. The scan is a :class:`SliceScan`: it keeps its
+  slice plan ``(ids, reader)`` through name-only ``select``, ``coalesce``
+  and same-column ``unionByName``, and the COPY sink runs that reader
+  inside its own tasks, so an unformatted HDF5 load reaches ``COPY``
+  without a JVM round trip.
 
 Callers: :func:`load_hdf_distributed` (one file), `sinks/hdf.load_hdf_dir`
 (a part-file directory) and the ``format("hdf5")`` DataSource of
@@ -40,12 +44,15 @@ only the superblock, index nodes, and the chunks overlapping its range.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+import bisect
+import itertools
+from typing import Callable, Iterator, Optional, Sequence
 
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
 
 DEFAULT_CHUNK_ROWS = 10**7  # the reference's hdf_chunksize (`copy_hdf.py:21`)
@@ -130,10 +137,86 @@ def read_slice(file_name: str, key: str, start: int, stop: int, schema: T.Struct
         raise TypeError(f"HDF5 {file_name!r} key {key!r}: {e}") from e
 
 
+#: ``read(i)``: the Arrow batches of slice ``i`` of one key's scan
+SliceReader = Callable[[int], Iterator[pa.RecordBatch]]
+
+
+def _read_parts(parts: Sequence[tuple]):
+    """The reader of a scan's slice ids over its ``parts``, one
+    ``(slice count, SliceReader, columns)`` per key in id order: id ``i``
+    is slice ``i - start`` of the part it falls in, its batches selected
+    to the part's columns."""
+    starts = list(itertools.accumulate((n for n, _, _ in parts), initial=0))
+
+    def read_ids(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for ids in batches:
+            for i in ids.column("id").to_pylist():
+                j = bisect.bisect_right(starts, i) - 1
+                _, read, columns = parts[j]
+                for batch in read(i - starts[j]):
+                    yield batch.select(columns)
+
+    return read_ids
+
+
+class SliceScan(ClassicDataFrame):
+    """An HDF5 scan that keeps its slice plan beside its DataFrame.
+
+    The DataFrame is Spark's own: ``ids.mapInArrow(reader)`` for one key
+    (``ids`` a DataFrame of slice ids), and Spark's result for each of the
+    three operations that keep the plan: ``select`` of plain column names,
+    ``coalesce``, and ``unionByName`` of two scans with the same column
+    names and types (in any order). The plan ``(ids, reader)`` yields the
+    same rows in the same partitions, so a consumer can run the reader in
+    its own task (:meth:`slice_plan`; `sinks/postgres_copy._run_copy_tasks`
+    COPYs the slices without the Arrow→rows→Arrow hop). Every other
+    operation returns Spark's plain DataFrame."""
+
+    def __new__(cls, *args):
+        # the classic DataFrame's __new__ takes (jdf, session) and calls
+        # __init__ with them; this class is built from its own arguments
+        return object.__new__(cls)
+
+    def __init__(self, df: DataFrame, ids: DataFrame, parts: tuple):
+        super().__init__(df._jdf, df.sparkSession)
+        self._ids, self._parts = ids, parts
+
+    def slice_plan(self):
+        """``(ids, read_ids)``: ``read_ids`` maps the id batches of a
+        partition of ``ids`` to that partition's rows as Arrow batches."""
+        return self._ids, _read_parts(self._parts)
+
+    def select(self, *cols):
+        df = super().select(*cols)
+        names = list(cols[0] if len(cols) == 1 and isinstance(cols[0], list) else cols)
+        own = self.columns
+        plain = names and all(isinstance(c, str) and c in own for c in names)
+        if not (plain and len(set(names)) == len(names) and df.columns == names):
+            return df
+        return SliceScan(df, self._ids, tuple((n, read, names) for n, read, _ in self._parts))
+
+    def coalesce(self, numPartitions: int):
+        return SliceScan(
+            super().coalesce(numPartitions), self._ids.coalesce(numPartitions), self._parts
+        )
+
+    def unionByName(self, other: DataFrame, allowMissingColumns: bool = False):
+        df = super().unionByName(other, allowMissingColumns)
+
+        def types(d):
+            return sorted((f.name, f.dataType.simpleString()) for f in d.schema)
+
+        if not (isinstance(other, SliceScan) and types(self) == types(other)):
+            return df
+        offset, own = sum(n for n, _, _ in self._parts), self.columns
+        ids = self._ids.union(other._ids.selectExpr(f"id + {offset} AS id"))
+        return SliceScan(df, ids, self._parts + tuple((n, read, own) for n, read, _ in other._parts))
+
+
 def scan_hdf(
     spark: SparkSession, files: Sequence[str], key: str, chunk_rows: int
-) -> DataFrame:
-    """``key`` of every file as one DataFrame: one Spark task per
+) -> SliceScan:
+    """``key`` of every file as one :class:`SliceScan`: one Spark task per
     ``(file, [start, stop))`` slice, each one range read, no exchange.
     The schema comes from the first file."""
     slices = [
@@ -143,16 +226,15 @@ def scan_hdf(
     ]
     schema = hdf_schema(files[0], key)
 
-    def read_slices(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for ids in batches:
-            for i in ids.column("id").to_pylist():
-                file, start, stop = slices[i]
-                if stop > start:
-                    yield read_slice(file, key, start, stop, schema)
+    def read(i: int) -> Iterator[pa.RecordBatch]:
+        file, start, stop = slices[i]
+        if stop > start:
+            yield read_slice(file, key, start, stop, schema)
 
     # slice i -> task i: spark.range splits evenly, so no exchange is needed
     ids = spark.range(len(slices), numPartitions=len(slices))
-    return ids.mapInArrow(read_slices, schema=schema)
+    parts = ((len(slices), read, schema.names),)
+    return SliceScan(ids.mapInArrow(_read_parts(parts), schema=schema), ids, parts)
 
 
 def load_hdf_distributed(

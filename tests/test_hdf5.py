@@ -505,6 +505,133 @@ class TestSparkSources:
         assert seen["jobs"] and after == seen["jobs"]
 
 
+class TestSliceScan:
+    """``scan_hdf``'s DataFrame keeps its slice plan through name-only
+    ``select``, ``coalesce`` and ``unionByName`` of same-column scans, and
+    the plan yields the DataFrame's rows; anything else is Spark's plain
+    DataFrame, with Spark's result and errors."""
+
+    @pytest.fixture()
+    def scans(self, spark, tmp_path):
+        p = str(tmp_path / "ss.h5")
+        a = _frame(40, seed=3)
+        b = _frame(30, seed=4)[["name", "ok", "id", "val"]].assign(id=lambda x: x["id"] + 40)
+        write_frame_table(p, {"a": a, "b": b}, chunk_rows=8)
+        scans = {k: hdf.scan_hdf(spark, [p], k, 9) for k in "ab"}
+        # the writer widens every int to int64: lay out an int32 id by hand
+        import pandas_to_postgres_spark.sources.hdf5_writer as w
+
+        c = _frame(20, seed=5)
+        rec = np.zeros(20, dtype=[("index", "<i8"), ("id", "<i4"), ("val", "<f8")])
+        rec["index"], rec["id"], rec["val"] = np.arange(20), c["id"] + 100, c["val"]
+        attrs = {"CLASS": "TABLE", "NROWS": 20, "non_index_axes": [(1, ["id", "val"])]}
+        fb = w._FileBuilder()
+        group = fb.write_group(
+            {"table": fb.write_table(rec, attrs, chunk_rows=8, complevel=0)},
+            {"pandas_type": "frame_table"},
+        )
+        with open(tmp_path / "i32.h5", "wb") as fh:
+            fh.write(fb.finish(fb.write_group({"c": group}, {})))
+        scans["c"] = hdf.scan_hdf(spark, [str(tmp_path / "i32.h5")], "c", 9)
+        return scans
+
+    @staticmethod
+    def _plain(df):
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        return DataFrame(df._jdf, df.sparkSession)
+
+    @staticmethod
+    def _by_partition(df):
+        from pyspark.sql import functions as F
+
+        return sorted(df.withColumn("__part", F.spark_partition_id()).collect())
+
+    def test_plan_keeping_operations(self, scans):
+        """Each kept operation returns a scan whose slice plan yields the
+        DataFrame's rows, partition by partition."""
+        a, b = scans["a"], scans["b"]
+        kept = {
+            "scan": a,
+            "select": a.select("val", "id"),
+            "select list": a.select(["name"]),
+            "coalesce": a.coalesce(2),
+            "unionByName": a.unionByName(b),
+            "chain": b.unionByName(a).unionByName(b).select("id", "name").coalesce(3),
+        }
+        for name, got in kept.items():
+            assert isinstance(got, hdf.SliceScan), name
+            ids, read = got.slice_plan()
+            fused = ids.mapInArrow(read, got.schema)
+            assert fused.rdd.getNumPartitions() == got.rdd.getNumPartitions(), name
+            assert self._by_partition(fused) == self._by_partition(got), name
+        assert kept["unionByName"].count() == 70 and kept["chain"].count() == 100
+
+    def test_other_operations_are_plain_with_the_same_result(self, scans):
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import functions as F
+
+        from pandas_to_postgres_spark.functions.normalize import apply_formatters
+
+        a, b = scans["a"], scans["b"]
+        plain_a = self._plain(a)
+
+        def formatter(df):
+            return df.withColumn("val", F.col("val") * 2)
+
+        other = {
+            "withColumn": (a.withColumn("z", F.lit(1)), plain_a.withColumn("z", F.lit(1))),
+            "filter": (a.filter("id > 10"), plain_a.filter("id > 10")),
+            "formatter": (apply_formatters(a, [formatter]), formatter(plain_a)),
+            "select expr": (a.select(F.col("id")), plain_a.select(F.col("id"))),
+            "select case": (a.select("ID"), plain_a.select("ID")),
+            "select repeated": (a.select("id", "id"), plain_a.select("id", "id")),
+            "unionByName subset": (
+                a.unionByName(b.select("id", "val"), allowMissingColumns=True),
+                plain_a.unionByName(self._plain(b).select("id", "val"), allowMissingColumns=True),
+            ),
+        }
+        for name, (got, want) in other.items():
+            assert not isinstance(got, hdf.SliceScan), name
+            assert got.columns == want.columns, name
+            assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str), name
+        with pytest.raises(AnalysisException, match="Cannot resolve column name"):
+            a.unionByName(b.select("id", "val"))
+
+    def test_int32_and_int64_keys_widen_to_bigint(self, scans):
+        """A key pair whose ``id`` is int32 in one and int64 in the other
+        unions as Spark unions them: ``id`` bigint, every row."""
+        a = scans["a"].select("id", "val")
+        assert scans["c"].schema["id"].dataType.simpleString() == "int"
+        for pair in ((a, scans["c"]), (scans["c"], a)):
+            got = pair[0].unionByName(pair[1])
+            assert not isinstance(got, hdf.SliceScan)
+            assert got.schema["id"].dataType.simpleString() == "bigint"
+            assert sorted(r.id for r in got.collect()) == list(range(40)) + list(range(100, 120))
+
+    def test_formatted_copy_lands_formatted_rows(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        p = str(tmp_path / "fmt.h5")
+        write_frame_table(p, {"s1": _frame(20, seed=1), "s2": _frame(10, seed=2)}, chunk_rows=8)
+        seen = {}
+
+        def sink(name, df):
+            seen[name] = (type(df), sorted(df.collect()))
+
+        def formatter(df, hdf_table=None):
+            return df.select("id", F.lit(hdf_table).alias("key"))
+
+        compat.HDFTableCopy(
+            p, ["s1", "s2"], spark, sink, "t", big=True, hdf_chunksize=6, formatters=[formatter]
+        ).copy()
+        kind, rows = seen["t"]
+        assert not issubclass(kind, hdf.SliceScan)
+        assert sorted((r.key, r.id) for r in rows) == sorted(
+            [("s1", i) for i in range(20)] + [("s2", i) for i in range(10)]
+        )
+
+
 class TestHdfSink:
     def test_write_dir_roundtrip(self, spark, tmp_path):
         from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir, write_hdf_dir

@@ -2559,3 +2559,138 @@ class TestHdf5NaiveTimestampToPostgres:
                 ("0", "2024-01-01 00:00"), ("1", "2024-01-01 01:00"), ("2", "2024-01-01 02:00")
             ]
         conn.close()
+
+
+class TestHdf5WritePaths:
+    """An HDF5 load reads its slices inside its COPY tasks and lands the
+    same rows on every write path as the same frame loaded through
+    ``createDataFrame``. The file holds three keys routed to one table,
+    one of them with its columns stored in another order."""
+
+    @staticmethod
+    def _frame(lo, n, seed):
+        import numpy as np
+        import pandas as pd
+
+        rs = np.random.RandomState(seed)
+        return pd.DataFrame(
+            {
+                "k": np.arange(lo, lo + n, dtype=np.int64),
+                "v": rs.randn(n).round(6),
+                "s": [f"s{i % 11}" for i in range(n)],
+                "b": np.arange(n) % 3 == 0,
+            }
+        )
+
+    @pytest.fixture()
+    def h5(self, tmp_path):
+        import pandas as pd
+
+        from pandas_to_postgres_spark.sources.hdf5_writer import write_frame_table
+
+        keys = {
+            "p1": self._frame(0, 70, 1),
+            "p2": self._frame(70, 50, 2)[["s", "v", "k", "b"]],
+            "p3": self._frame(120, 40, 3),
+        }
+        path = str(tmp_path / "three_keys.h5")
+        write_frame_table(
+            path, keys, chunk_rows=16, complevel=4,
+            group_meta={k: {"pg_meta": {"sql_table_name": "hdf_paths"}} for k in keys},
+        )
+        return path, pd.concat([f[["k", "v", "s", "b"]] for f in keys.values()])
+
+    @staticmethod
+    def _target(pg):
+        conn = pgwire.connect(**pg)
+        conn.autocommit = True
+        with conn.cursor() as cur:
+            cur.execute("DROP TABLE IF EXISTS hdf_paths")
+            cur.execute(
+                "CREATE TABLE hdf_paths (k BIGINT PRIMARY KEY,"
+                " v DOUBLE PRECISION, s TEXT, b BOOLEAN)"
+            )
+        conn.close()
+        return reflect_target_table(pg, "public", "hdf_paths")
+
+    @staticmethod
+    def _rows(pg):
+        conn = pgwire.connect(**pg)
+        with conn, conn.cursor() as cur:
+            cur.execute("SELECT k, v, s, b FROM hdf_paths ORDER BY k")
+            rows = cur.fetchall()
+        conn.close()
+        return rows
+
+    def _load(self, spark, h5, pg, target, **kw):
+        from pandas_to_postgres_spark import compat
+
+        def sink(_table, df):
+            return copy_to_postgres(df, pg, target, num_partitions=3, **kw)
+
+        compat.hdf_to_postgres(
+            h5, spark, sink, metadata_attr="pg_meta", big=True, hdf_chunksize=16
+        )
+
+    @pytest.mark.parametrize("path", ["direct", "staged", "freeze", "exactly_once"])
+    def test_every_path_lands_the_frames_rows(self, pg, spark, tmp_path, h5, path):
+        from pandas_to_postgres_spark.sinks.hdf import load_hdf_dir, write_hdf_dir
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            load_batch_exactly_once,
+            truncate_sql,
+        )
+
+        h5_path, frame = h5
+        target = self._target(pg)
+        assert copy_to_postgres(spark.createDataFrame(frame), pg, target) == 160
+        want = self._rows(pg)
+        if path == "exactly_once":
+            d = str(tmp_path / "parts")
+            write_hdf_dir(spark.createDataFrame(frame).repartition(3), d, key="data")
+            conn = pgwire.connect(**pg)
+            with conn, conn.cursor() as cur:
+                cur.execute(truncate_sql(target))
+            conn.close()
+            scan = load_hdf_dir(spark, d, key="data", chunk_rows=20)
+            assert load_batch_exactly_once(
+                scan, pg, target, batch_id=0, epoch_table="hdf_paths_epochs",
+                num_partitions=3, run_id=str(tmp_path),
+            ) == 160
+            join_stage_drops()
+        else:
+            self._load(spark, h5_path, pg, target, **({} if path == "direct" else {path: True}))
+        assert self._rows(pg) == want
+
+    def test_copy_task_reads_the_slices(self, pg, spark, h5, monkeypatch):
+        """The frame an HDF5 load collects runs ONE ``mapInArrow``: the
+        slice reader and the COPY task share a Python worker."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        plans, collect = [], DataFrame.collect
+
+        def recording(self):
+            plans.append(self._jdf.queryExecution().analyzed().toString())
+            return collect(self)
+
+        target = self._target(pg)
+        monkeypatch.setattr(DataFrame, "collect", recording)
+        self._load(spark, h5[0], pg, target)
+        assert [p.count("MapInArrow") for p in plans] == [1]
+        assert len(self._rows(pg)) == 160
+
+    def test_messages_carry_the_task_layers(self, pg, spark, h5):
+        from pandas_to_postgres_spark.sinks.postgres_copy import (
+            _run_copy_tasks,
+            copy_sql,
+        )
+        from pandas_to_postgres_spark.sources.hdf import scan_hdf
+
+        target = self._target(pg)
+        scan = scan_hdf(spark, [h5[0]], "p1", 35)  # two tasks, one slice each
+        messages = _run_copy_tasks(scan, pg, lambda _: (None, [], copy_sql(target)))
+        assert [m.n_rows for m in messages] == [35, 35]
+        for m in messages:
+            assert m.bytes > 4 * m.n_rows and m.encode_s > 0
+            # the wait for the task's one batch is its slice read, which
+            # decodes deflated chunks: far above 0.1 ms
+            assert m.source_s > 1e-4

@@ -102,6 +102,41 @@ class TestArrowCsvStream:
         assert max(map(len, parts)) == 4 and len(parts) > 2
         assert b"".join(parts) == whole and s.rows == 6
 
+    def test_big_batch_streams_in_bounded_pieces(self, monkeypatch):
+        """A 200k-row batch read 64 KB at a time: the same bytes as one
+        ``write_csv`` of the batch, encoded 10k rows at a time, and the
+        stream never holds more than one piece's CSV besides the read."""
+        import pyarrow.csv as pcsv
+
+        n = 200_000
+        big = pa.RecordBatch.from_pydict(
+            {"k": pa.array(range(n), pa.int64()), "s": [f"row {i}" for i in range(n)]}
+        )
+        sink = pa.BufferOutputStream()
+        pcsv.write_csv(big, sink, pcsv.WriteOptions(include_header=False))
+        whole = sink.getvalue().to_pybytes()
+
+        pieces, write_csv = [], pcsv.write_csv
+
+        def recording(batch, out, options):
+            write_csv(batch, out, options)
+            pieces.append((batch.num_rows, out.tell()))
+
+        monkeypatch.setattr(pcsv, "write_csv", recording)
+        s = _stream(big)
+        parts = []
+        while True:
+            part = s.read(1 << 16)
+            if not part:
+                break
+            assert len(part) <= 1 << 16
+            assert len(s._buf) <= max(size for _, size in pieces)
+            parts.append(part)
+        assert b"".join(parts) == whole
+        assert max(rows for rows, _ in pieces) == _ArrowCsvStream.PIECE_ROWS
+        assert sum(rows for rows, _ in pieces) == n == s.rows
+        assert s.bytes == len(whole) and s.encode_s > 0 and s.source_s >= 0
+
 
 class TestStageNames:
     TABLE = "t" * 60
